@@ -55,29 +55,48 @@ def versions() -> dict:
             "numpy": numpy.__version__}
 
 
-def _tree_pss_kb(root: int) -> dict[str, int]:
-    """Proportional set size of ``root`` and all its descendants, summed per
-    command name. PSS splits shared pages among their sharers, so the
-    workers forked from one daemon, and a transient fork of the JVM, do not
-    count the same pages twice as summed RSS would."""
-    parent: dict[int, int] = {}
+def _stats() -> dict[int, list[str]]:
+    """The fields after the command name of every /proc/<pid>/stat."""
+    out = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
         try:
             with open(f"/proc/{name}/stat") as fh:
-                stat = fh.read()
+                out[int(name)] = fh.read().rsplit(")", 1)[1].split()
         except OSError:
             continue
-        parent[int(name)] = int(stat.rsplit(")", 1)[1].split()[1])
+    return out
+
+
+def _tree(root: int, stats: dict[int, list[str]]) -> set[int]:
+    """``root`` and all its descendants."""
     tree, frontier = {root}, [root]
     while frontier:
         p = frontier.pop()
-        kids = [c for c, pp in parent.items() if pp == p and c not in tree]
+        kids = [c for c, f in stats.items() if int(f[1]) == p and c not in tree]
         tree.update(kids)
         frontier.extend(kids)
+    return tree
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and all its
+    descendants, counting exited children through their reaping parent.
+    Time the hypervisor stole is not in it."""
+    stats = _stats()
+    ticks = sum(sum(int(x) for x in stats[pid][11:15])
+                for pid in _tree(os.getpid(), stats) if pid in stats)
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _tree_pss_kb(root: int) -> dict[str, int]:
+    """Proportional set size of ``root`` and all its descendants, summed per
+    command name. PSS splits shared pages among their sharers, so the
+    workers forked from one daemon, and a transient fork of the JVM, do not
+    count the same pages twice as summed RSS would."""
     out: dict[str, int] = {}
-    for pid in tree:
+    for pid in _tree(root, _stats()):
         try:
             with open(f"/proc/{pid}/comm") as fh:
                 name = fh.read().strip()

@@ -30,21 +30,20 @@ import host  # noqa: E402
 from workloads import ENGINE, WORKLOADS, Op, du, read_manifest  # noqa: E402
 
 # input size per workload: rows (documents for dedup_incremental)
-SIZES = {"webtext_roundtrip": 8_000, "webtext_scan": 16_000,
-         "lineitem_roundtrip": 150_000, "dedup_incremental": 1_000}
+SIZES = {"webtext_roundtrip": 8_000, "dedup_incremental": 5_000}
 SETUP_REPEATS = 2   # set-up builds per run; setup_s uses their median
-# measured ops per run even when --seconds is short; the median of three
-# drops the first op after warm-up, which still runs ~15 % slow
-MIN_OPS = 3
+# measured ops per run even when --seconds is short. Ops within a run
+# differ by 2-15 %, runs on a busy and a quiet host by 50 %, so a third op
+# would buy little steadiness for its time
+MIN_OPS = 2
 
-END_TO_END = {"op_s": "s", "setup_s": "s", "stored_bytes_per_raw_byte": "ratio",
+END_TO_END = {"op_cpu_s": "s", "setup_s": "s", "stored_bytes_per_raw_byte": "ratio",
               "peak_pss_mb": "MB"}
-# codecs these workloads produce; any other codec is listed per op in the
-# side file's ``codecs_seen``
-CODECS = ("tok_dict", "fsst_global", "dict_global", "for_bitpack", "byteplane",
-          "decimal128")
-DRIFT_COLUMNS = ("url", "html", "text", "lang", "l_returnflag",
-                 "l_linestatus", "l_shipmode")
+# codecs webtext_roundtrip produces; any other codec is listed per op in
+# the side file's ``codecs_seen``
+CODECS = ("tok_dict", "fsst_global", "dict_global", "for_bitpack")
+# the webtext columns the planner picks a global codec for
+DRIFT_COLUMNS = ("url", "html", "text", "lang")
 PER_LAYER = {
     "session.start_s": "s", "inputs.gen_s": "s",
     "codec_plan.sample_s": "s", "codec_plan.plan_s": "s",
@@ -62,16 +61,18 @@ PER_LAYER = {
     "decode.task_s": "s", "decode.input_wait_s": "s", "decode.kernel_s": "s",
     "decode.crc_s": "s", "decode.output_wait_s": "s",
     "decode.scan_input_mb": "MB", "decode.blocks_read": "count",
-    "decode.zone_hit_ratio": "ratio",
     "manifest.read_meta_s": "s", "manifest.input_mb": "MB",
     "dedup.signature_s": "s", "dedup.candidate_pairs": "count",
     "dedup.verified_pairs": "count", "dedup.verify_yield": "ratio",
     "dedup.verify_s": "s", "dedup.verify_wait_s": "s",
     "dedup.shuffle_write_mb": "MB",
     "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
-    "spark.executor_run_s": "s", "spark.gc_s": "s",
+    "spark.executor_run_s": "s", "spark.gc_s": "s", "process.cpu_s": "s",
     "trace.driver_coverage_min": "ratio", "trace.overhead_share": "ratio",
+    "op.wall_s": "s",
 }
+# per-layer metrics of the whole run rather than of each traced op
+RUN_LEVEL = ("session.start_s", "inputs.gen_s", "trace.overhead_share", "op.wall_s")
 
 
 def parse_args(argv):
@@ -96,7 +97,7 @@ def run_op(wl, i: int, work: str, tracer=None) -> Op:
     return op
 
 
-def layer_metrics(tracer, wl, op: Op, op_id: str) -> dict[str, float]:
+def layer_metrics(tracer, op: Op, op_id: str) -> dict[str, float]:
     """Per-layer numbers of one traced op (all names of PER_LAYER except
     the run-level ones)."""
     from tracing import covered, self_times
@@ -141,8 +142,7 @@ def layer_metrics(tracer, wl, op: Op, op_id: str) -> dict[str, float]:
                 m[f"codecs.{codec}.decode_s"] += ds
                 m[f"codecs.{codec}.raw_mb"] += raw
                 m[f"codecs.{codec}.enc_mb"] += encb
-    m["compression_ratio"] = op.info.get("compression_ratio",
-                                         getattr(wl, "compression_ratio", 0.0))
+    m["compression_ratio"] = op.info.get("compression_ratio", 0.0)
     m["decode.task_s"] = tsum("decode", "task_s")
     m["decode.input_wait_s"] = tsum("decode", "input_wait_s")
     m["decode.kernel_s"] = tsum("decode", "kernel_s")
@@ -150,14 +150,9 @@ def layer_metrics(tracer, wl, op: Op, op_id: str) -> dict[str, float]:
     m["decode.output_wait_s"] = tsum("decode", "output_wait_s")
     m["decode.scan_input_mb"] = tsum("decode", "input_mb")
     m["decode.blocks_read"] = tsum("decode", "blocks")
-    zone = [t for t in tasks if t["kind"] == "decode" and t.get("zone")]
-    zone_blocks = sum(t["blocks"] for t in zone)
-    if zone_blocks:
-        m["decode.zone_hit_ratio"] = sum(t["zone_hit_blocks"] for t in zone) / zone_blocks
     m["manifest.read_meta_s"] = dur("manifest.read_meta")
     if "decode.meta_column_stats" in names:
-        table = out_dir or wl.enc
-        m["manifest.input_mb"] = du(os.path.join(table, "manifest.parquet")) / 1e6
+        m["manifest.input_mb"] = du(os.path.join(out_dir, "manifest.parquet")) / 1e6
     if "dedup.dedup_incremental" in names:
         m["dedup.signature_s"] = dur("dedup.signature")
         m["dedup.verify_s"] = tsum("verify", "task_s") - tsum("verify", "input_wait_s")
@@ -170,6 +165,7 @@ def layer_metrics(tracer, wl, op: Op, op_id: str) -> dict[str, float]:
             m["dedup.verify_yield"] = m["dedup.verified_pairs"] / max(n, 1)
     for k in ("jobs", "stages", "tasks", "executor_run_s", "gc_s"):
         m[f"spark.{k}"] = sc[k]
+    m["process.cpu_s"] = op.info["cpu_s"]
     # driver-side child spans must cover each timed section
     cov = []
     for s in spans:
@@ -244,7 +240,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
                 t = time.perf_counter()
                 wl.build(d)
                 builds.append(time.perf_counter() - t)
-            gen_s = getattr(wl, "gen_s", 0.0)
+            gen_s = wl.gen_s
             if tamper is not None:
                 tamper(wl)
             op_dir = os.path.join(work, "ops")
@@ -260,6 +256,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
             # by the deadline, so a run overshoots --seconds rarely
             while i < min_ops or time.perf_counter() + last <= deadline:
                 t_op = time.perf_counter()
+                cpu0 = host.tree_cpu_s()
                 traced = tracer is not None and i % 2 == 0
                 op_id = f"op{i}"
                 if traced:
@@ -272,8 +269,9 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
                         tracer.end_op()
                         tracer.uninstall()
                 op.info["traced"] = traced
+                op.info["cpu_s"] = host.tree_cpu_s() - cpu0
                 if traced:
-                    layers.append(layer_metrics(tracer, wl, op, op_id))
+                    layers.append(layer_metrics(tracer, op, op_id))
                 wl.finish(op)
                 ops.append(op)
                 last = time.perf_counter() - t_op
@@ -286,12 +284,13 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
             _stop_gateway()
     detail["probe_after"] = host.probe()
 
-    failed = sum(1 for op in ops for f in op.failures.values() if f)
-    attempted = sum(len(op.failures) for op in ops)
+    failed = sum(1 for op in ops if any(op.failures.values()))
+    attempted = len(ops)
     warm_failed = any(warm.failures.values())
-    walls = [op.wall for op in ops if not op.info["traced"]] or [op.wall for op in ops]
+    untraced = [op for op in ops if not op.info["traced"]] or ops
+    op_s = statistics.median(op.wall for op in untraced)
     e2e = {
-        "op_s": statistics.median(walls),
+        "op_cpu_s": statistics.median(op.info["cpu_s"] for op in untraced),
         "setup_s": setup_s,
         # 0 only when no op produced output, and then correct is false
         "stored_bytes_per_raw_byte": wl.stored_bytes / wl.raw_bytes if wl.raw_bytes else 0.0,
@@ -299,14 +298,14 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
     }
     if trace:
         per = {k: statistics.median(lay[k] for lay in layers) for k in PER_LAYER
-               if k not in ("session.start_s", "inputs.gen_s", "trace.overhead_share")}
+               if k not in RUN_LEVEL}
         per["session.start_s"] = session_s
         per["inputs.gen_s"] = gen_s
+        per["op.wall_s"] = op_s
         traced_walls = [op.wall for op in ops if op.info["traced"]]
-        untraced = [op.wall for op in ops if not op.info["traced"]]
         per["trace.overhead_share"] = (
-            statistics.median(traced_walls) / statistics.median(untraced) - 1
-            if untraced else 0.0)
+            statistics.median(traced_walls) / op_s - 1
+            if len(traced_walls) < len(ops) else 0.0)
         metrics = {k: {"value": per[k], "unit": PER_LAYER[k]} for k in PER_LAYER}
     else:
         metrics = {k: {"value": v, "unit": END_TO_END[k]} for k, v in e2e.items()}
@@ -317,6 +316,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, work: str,
         setup={"session_s": session_s, "builds_s": builds, "warmup_s": warm.wall,
                "warmup_failures": warm.failures},
         end_to_end=e2e,
+        op_s=op_s,
         failed_op_share=failed / max(attempted, 1),
         section_median_s={n: statistics.median(op.walls[n] for op in ops if n in op.walls)
                           for n in sections},
@@ -361,6 +361,13 @@ def main(argv=None) -> int:
               "of a checkout of the engine", file=sys.stderr)
         return 2
     sys.path.insert(0, root)
+    from mapbox_vector_tile_java_spark.session import MALLOC_ENV
+
+    # the engine gives its Python workers these allocator settings; glibc
+    # reads them at process start, so the driver gets them by re-executing
+    if any(os.environ.get(k) != v for k, v in MALLOC_ENV.items()):
+        os.execve(sys.executable, [sys.executable, *sys.argv],
+                  {**os.environ, **MALLOC_ENV})
     work = os.path.join(root, ".perfbench_work", f"{args.workload}-{args.seed}-{os.getpid()}")
     shape = host.configure_env(work)
     try:

@@ -7,9 +7,10 @@ metric named in BENCHMARK.json is emitted.
 Run from the root of a checkout. Exits 0 when every case holds; takes a
 few minutes, because each case starts its own Spark session.
 
-1. One byte flipped in one encoded ``c_text`` blob makes the full-decode
-   section of ``webtext_scan`` a failed op (CRC mismatch or decode error),
-   while the run goes on and the sections that skip ``text`` pass.
+1. One byte flipped in one encoded ``c_text`` blob, between the encode and
+   the decode of a ``webtext_roundtrip`` op, makes the decode section a
+   failed op (CRC mismatch or decode error) while the run goes on and the
+   encode section passes.
 2. One injected pair below the jaccard threshold makes every
    ``dedup_incremental`` op a failed op.
 3. Each workload in BENCHMARK.json emits exactly its end-to-end metrics
@@ -34,15 +35,14 @@ import run as bench  # noqa: E402
 from workloads import ENGINE  # noqa: E402
 
 SEED = 5
-TINY = {"webtext_roundtrip": 1_000, "webtext_scan": 2_000,
-        "lineitem_roundtrip": 5_000, "dedup_incremental": 300}
+TINY = {"webtext_roundtrip": 1_000, "dedup_incremental": 300}
 
 
-def flip_text_byte(wl) -> None:
+def flip_text_byte(enc_dir: str) -> None:
     """Flip one payload byte of the first ``c_text`` blob on disk."""
     from mapbox_vector_tile_java_spark.plans import manifest as M
 
-    path = M.part_file(wl.enc, 0)
+    path = M.part_file(enc_dir, 0)
     table = pq.read_table(path)
     blobs = table.column("c_text").to_pylist()
     blob = bytearray(blobs[0])
@@ -54,9 +54,14 @@ def flip_text_byte(wl) -> None:
     pq.write_table(table, path, compression="none", row_group_size=64)
 
 
+def corrupt_after_encode(wl) -> None:
+    wl.after_encode = flip_text_byte
+
+
 def inject_bad_pair(wl) -> None:
     """Make every op's result carry one pair of unrelated documents that
-    claims a jaccard of 0.9."""
+    claims a jaccard of 0.9, and recompute every pair, not a sample."""
+    wl.sample_pairs = 10**9
     check = wl.check_pairs
     ids = sorted(wl.new_ids)
     bad = (ids[0], ids[1], 0.9)
@@ -88,13 +93,14 @@ def main() -> int:
     work = os.path.join(root, ".perfbench_work", "selftest")
     errors = []
 
-    result, detail = case("corrupted c_text block", work, workload="webtext_scan",
-                          trace=False, rows=TINY["webtext_scan"], tamper=flip_text_byte)
+    result, detail = case("corrupted c_text block", work, workload="webtext_roundtrip",
+                          trace=False, rows=TINY["webtext_roundtrip"],
+                          tamper=corrupt_after_encode)
     fails = detail["ops"][0]["failures"]
-    if result["failed"] < 1 or "full" not in fails or result["correct"]:
+    if result["failed"] < 1 or "decode" not in fails or result["correct"]:
         errors.append(f"corrupted block not reported as a failed op: {fails}")
-    if set(fails) != {"full"}:
-        errors.append(f"sections that skip text failed too: {fails}")
+    if "encode" in fails:
+        errors.append(f"the encode section failed too: {fails}")
 
     result, detail = case("injected dedup pair", work, workload="dedup_incremental",
                           trace=False, rows=TINY["dedup_incremental"],

@@ -28,8 +28,7 @@ import os
 import time
 
 TASK_FIELDS = ("task_s", "input_wait_s", "output_wait_s", "input_mb",
-               "kernel_s", "crc_s", "write_s", "commit_s", "blocks",
-               "zone_hit_blocks")
+               "kernel_s", "crc_s", "write_s", "commit_s", "blocks")
 
 
 # ---------------------------------------------------------------------------
@@ -37,13 +36,9 @@ TASK_FIELDS = ("task_s", "input_wait_s", "output_wait_s", "input_mb",
 
 def _blob_codec(blob, t) -> str:
     """Codec name of a column blob, read from its envelope header."""
-    import pyarrow as pa
-
     from mapbox_vector_tile_java_spark import columns as C
     from mapbox_vector_tile_java_spark.codecs.base import ByteReader, by_id
 
-    if pa.types.is_decimal128(t):
-        return "decimal128"
     r = ByteReader(blob)
     r.take(1)
     n, nulls = r.uvarint(), r.uvarint()
@@ -56,11 +51,10 @@ def _blob_codec(blob, t) -> str:
     return str(t)
 
 
-def traced_task(fn, task_dir: str, op_id: str, kind: str, zone):
+def traced_task(fn, task_dir: str, op_id: str, kind: str):
     """Wrap a mapInArrow function so its task records layer timings."""
 
     def run(batches):
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
@@ -152,11 +146,6 @@ def traced_task(fn, task_dir: str, op_id: str, kind: str, zone):
             for out in fn(timed_input(iter(batches))):
                 if kind == "decode":
                     rec["blocks"] += 1
-                    if zone and zone[0] in out.schema.names:
-                        v = out.column(zone[0]).cast("int64")
-                        hit = pc.and_(pc.greater_equal(v, zone[1]),
-                                      pc.less_equal(v, zone[2]))
-                        rec["zone_hit_blocks"] += int(pc.any(hit).as_py() or 0)
                 t0 = clock()
                 yield out
                 rec["output_wait_s"] += clock() - t0
@@ -166,7 +155,7 @@ def traced_task(fn, task_dir: str, op_id: str, kind: str, zone):
             C.content_crc, pq.write_table, M.write_done = orig_crc, orig_write, orig_done
             end = clock()
             rec["task_s"] = end - start
-            rec.update(op=op_id, kind=kind, zone=bool(zone), start=start, end=end,
+            rec.update(op=op_id, kind=kind, start=start, end=end,
                        stage=tc.stageId(), partition=tc.partitionId(),
                        attempt=tc.attemptNumber(), codecs=codecs)
             name = (f"{op_id}-{kind}-{rec['stage']}-{rec['partition']}-"
@@ -209,7 +198,6 @@ class Tracer:
         self.stack: list[int] = []
         self.op_id: str | None = None
         self.counters: dict[str, float] = {}
-        self.zone = None
         self.plans: list[tuple] = []       # (sample, note) per plan call
         self.candidates = []               # candidate DataFrames per op
         self._patches: list[tuple] = []
@@ -279,7 +267,7 @@ class Tracer:
         w(E, "make_encode_fn", "encode.make_encode_fn")
         w(M, "write_meta", "manifest.write_meta")
         w(M, "read_meta", "manifest.read_meta")
-        w(D, "decode_table", "decode.decode_table", before=self._zone_from_args)
+        w(D, "decode_table", "decode.decode_table")
         w(D, "make_decode_fn", "decode.make_decode_fn")
         w(D, "meta_column_stats", "decode.meta_column_stats")
         w(D, "read_manifest", "manifest.read_manifest")
@@ -302,16 +290,9 @@ class Tracer:
                 delattr(owner, attr)
         self._patches.clear()
 
-    def _zone_from_args(self, a, kw):
-        zf = kw.get("zone_filters") or (a[3] if len(a) > 3 else None)
-        self.zone = tuple(zf[0]) if zf else None
-        return a, kw
-
     def _wrap_task(self, a, kw):
         fn = a[1] if len(a) > 1 else kw.pop("func")
-        kind = task_kind(fn)
-        zone = self.zone if kind == "decode" else None
-        wrapped = traced_task(fn, self.task_dir, self.op_id, kind, zone)
+        wrapped = traced_task(fn, self.task_dir, self.op_id, task_kind(fn))
         return (a[0], wrapped, *a[2:]), kw
 
     # per-op collection -----------------------------------------------------
@@ -320,7 +301,6 @@ class Tracer:
         self.counters = {}
         self.plans = []
         self.candidates = []
-        self.zone = None
         self.spark.sparkContext.setJobGroup(op_id, op_id)
 
     def end_op(self) -> None:

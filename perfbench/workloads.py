@@ -17,9 +17,10 @@ import time
 import numpy as np
 import pyarrow.parquet as pq
 
-import gen
-
 ENGINE = "mapbox_vector_tile_java_spark"
+# (doc_id, text) of the 5,000-document corpus of the sf0.1 test data
+DOCUMENTS = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "data", "documents.parquet")
 
 
 def du(path: str) -> int:
@@ -144,6 +145,9 @@ class WebtextRoundtrip(Workload):
     CRC checks and the manifest."""
 
     name = "webtext_roundtrip"
+    # called with the encoded table's directory between encode and decode;
+    # the self-test sets it to damage a stored block
+    after_encode = None
 
     def build(self, d: str) -> None:
         from mapbox_vector_tile_java_spark.streaming.incremental import content_fingerprint
@@ -162,6 +166,8 @@ class WebtextRoundtrip(Workload):
         with op.section("encode"):
             encode_webtext(self.src, out, n_parts=self.n_parts)
         self._check_manifest(op, "encode", out)
+        if self.after_encode is not None:
+            self.after_encode(out)
         with op.section("decode"):
             fp = content_fingerprint(decode_table(self.spark, out))
         op.check("decode", fp == self.truth_fp,
@@ -177,107 +183,11 @@ def _check_stats(op: Op, name: str, stats, rows: int) -> None:
              f"meta_column_stats n_rows wrong for {bad or 'missing columns'}")
 
 
-class WebtextScan(Workload):
-    """The read path: decode kernels, CRC, projection, zone maps, manifest."""
-
-    name = "webtext_scan"
-    n_windows = 4
-
-    def build(self, d: str) -> None:
-        from pyspark.sql import functions as F
-
-        from mapbox_vector_tile_java_spark.operators.encode import encode_webtext
-        from mapbox_vector_tile_java_spark.streaming.incremental import content_fingerprint
-
-        src = self._webtext_base(d)
-        self.enc = os.path.join(d, "enc")
-        encode_webtext(src, self.enc, n_parts=self.n_parts)
-        m = read_manifest(self.enc)
-        self.raw_bytes = sum(m.column("raw_bytes").to_pylist())
-        self.compression_ratio = self.raw_bytes / sum(m.column("enc_bytes").to_pylist())
-        self.stored_bytes = du(self.enc)
-        self.truth_fp = content_fingerprint(src)
-        self.truth_hist = {r["lang"]: r["count"]
-                           for r in src.groupBy("lang").count().collect()}
-        # seeded 10 % warc_ts windows, in the column's native microseconds
-        ts = F.unix_micros("warc_ts")
-        lo_hi = src.agg(F.min(ts).alias("lo"), F.max(ts).alias("hi")).first()
-        span = lo_hi["hi"] - lo_hi["lo"]
-        starts = self.rng.random(self.n_windows) * 0.9 * span + lo_hi["lo"]
-        self.windows = [(int(s), int(s + 0.1 * span)) for s in starts]
-        row = src.agg(*[F.sum(ts.between(lo, hi).cast("long")).alias(f"w{k}")
-                        for k, (lo, hi) in enumerate(self.windows)]).first()
-        self.truth_zone = [row[f"w{k}"] for k in range(self.n_windows)]
-
-    def op(self, i: int, op: Op, work: str) -> None:
-        from pyspark.sql import functions as F
-
-        from mapbox_vector_tile_java_spark.operators.decode import (
-            decode_table, meta_column_stats)
-        from mapbox_vector_tile_java_spark.streaming.incremental import content_fingerprint
-
-        with op.section("full"):
-            fp = content_fingerprint(decode_table(self.spark, self.enc))
-        op.check("full", fp == self.truth_fp,
-                 f"decoded (rows, fingerprint) {fp} != source {self.truth_fp}")
-
-        with op.section("projected"):
-            hist = (decode_table(self.spark, self.enc, columns=["url", "lang"])
-                    .groupBy("lang").count().collect())
-        op.check("projected", {r["lang"]: r["count"] for r in hist} == self.truth_hist,
-                 "projected lang histogram differs from the source")
-
-        k = i % self.n_windows
-        lo, hi = self.windows[k]
-        with op.section("zone"):
-            n = (decode_table(self.spark, self.enc, columns=["url", "warc_ts"],
-                              zone_filters=[("warc_ts", lo, hi)])
-                 .where(F.unix_micros("warc_ts").between(lo, hi)).count())
-        op.check("zone", n == self.truth_zone[k],
-                 f"zone-filtered count {n} != source {self.truth_zone[k]}")
-
-        with op.section("meta"):
-            stats = meta_column_stats(self.spark, self.enc).collect()
-        _check_stats(op, "meta", stats, self.rows)
-
-
-class LineitemRoundtrip(Workload):
-    """The numeric path: int codec selection, decimal planes, decimal128."""
-
-    name = "lineitem_roundtrip"
-
-    def build(self, d: str) -> None:
-        from mapbox_vector_tile_java_spark.streaming.incremental import content_fingerprint
-
-        os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, "lineitem.parquet")
-        t0 = time.perf_counter()
-        pq.write_table(gen.lineitem(self.rows, self.seed), path)
-        self.gen_s = time.perf_counter() - t0
-        self.src = self.spark.read.parquet(path)
-        self.truth_fp = content_fingerprint(self.src)
-
-    def op(self, i: int, op: Op, work: str) -> None:
-        from mapbox_vector_tile_java_spark.operators.decode import decode_table
-        from mapbox_vector_tile_java_spark.operators.encode import encode_table
-        from mapbox_vector_tile_java_spark.plans.partitioning import plan_generic
-        from mapbox_vector_tile_java_spark.streaming.incremental import content_fingerprint
-
-        out = os.path.join(work, f"enc-{i}")
-        op.info["out_dir"] = out
-        with op.section("encode"):
-            encode_table(plan_generic(self.src, self.n_parts, "l_orderkey",
-                                      sort_cols=("l_orderkey", "l_linenumber")),
-                         out, n_parts=self.n_parts)
-        self._check_manifest(op, "encode", out)
-        with op.section("decode"):
-            fp = content_fingerprint(decode_table(self.spark, out))
-        op.check("decode", fp == self.truth_fp,
-                 f"decoded (rows, fingerprint) {fp} != source {self.truth_fp}")
-
-
 class DedupIncremental(Workload):
-    """operators.dedup: new batch vs persisted minhash index, exact verify."""
+    """operators.dedup: new batch vs persisted minhash index, exact verify.
+
+    The input is the committed 5,000-document corpus (``DOCUMENTS``), split
+    at random by the seed into ~80 % corpus and ~20 % new batch."""
 
     name = "dedup_incremental"
     threshold = 0.5
@@ -292,11 +202,9 @@ class DedupIncremental(Workload):
 
         os.makedirs(d, exist_ok=True)
         t0 = time.perf_counter()
-        docs = gen.documents(self.rows, self.seed)
+        docs = pq.read_table(DOCUMENTS).slice(0, self.rows)
         ids = docs.column("doc_id").to_numpy()
-        mix = (ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-               + np.uint64(self.seed)) >> np.uint64(33)
-        is_new = (mix % np.uint64(5)) == 0
+        is_new = self.rng.random(len(ids)) < 0.2
         self.texts = dict(zip(ids.tolist(), docs.column("text").to_pylist()))
         self.new_ids = set(ids[is_new].tolist())
         paths = {}
@@ -350,12 +258,20 @@ class DedupIncremental(Workload):
         pick = rng.permutation(len(pairs))[: self.sample_pairs]
         for j in pick:
             a, b, reported = pairs[int(j)]
-            exact = gen.jaccard(self.texts[a], self.texts[b], self.k)
+            exact = jaccard(self.texts[a], self.texts[b], self.k)
             if exact < self.threshold or abs(exact - reported) > 1e-6:
                 out.append(f"pair ({a}, {b}) reports jaccard {reported}, "
                            f"exact {exact:.6f} (threshold {self.threshold})")
         return out
 
 
-WORKLOADS = {w.name: w for w in (WebtextRoundtrip, WebtextScan,
-                                 LineitemRoundtrip, DedupIncremental)}
+def char_grams(text: str, k: int) -> set[str]:
+    return {text[i:i + k] for i in range(len(text) - k + 1)}
+
+
+def jaccard(a: str, b: str, k: int) -> float:
+    ga, gb = char_grams(a, k), char_grams(b, k)
+    return len(ga & gb) / len(ga | gb) if ga or gb else 0.0
+
+
+WORKLOADS = {w.name: w for w in (WebtextRoundtrip, DedupIncremental)}
