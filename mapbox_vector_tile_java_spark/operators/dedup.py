@@ -12,6 +12,10 @@ Five tiers, all DataFrame-first:
 - embedding:    cosine near-dup over embedding vectors (brute pairs at small
                  scale; IVF buckets in similarity.py for the scale path)
 
+Every banded route (minhash, incremental, winnowing, simhash, SRP) joins
+through ONE primitive, ``band_pairs``; its probe mode pairs a small batch
+with a large index through the batch's broadcast keys, never index×index.
+
 Reference lineage: consecutive-duplicate detection is the reference's
 repeated-point stats (JtsGeomStats.java:105-153) and dedup-on-encode
 (JtsAdapter.java:405,488) — lossy there, analysis-only here (we never drop
@@ -20,6 +24,7 @@ rows during encode; dedup is an explicit operator).
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -183,9 +188,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       work_dir: str | None = None) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >=1 LSH band bucket.
 
-    Scale path: the only shuffle is the band-bucket join key; bucket sizes
-    are bounded by near-duplicate cluster sizes, not corpus size. Returns
-    (id_a, id_b, n_bands) distinct pairs.
+    Scale path: the only shuffle is the band-bucket join key of
+    ``band_pairs``; bucket sizes are bounded by near-duplicate cluster
+    sizes, not corpus size. Returns (id_a, id_b, n_bands) distinct pairs.
+    ``bands`` must divide ``num_perm`` (ValueError otherwise).
 
     Band keys default to the raw signature slice (array<long> equality —
     exact, and what the DuckDB oracle reproduces from the signature table);
@@ -197,34 +203,65 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     temp table), so the self-join reads it twice from storage instead of
     recomputing the python kernel per side or pinning an executor cache.
     """
-    rows_per_band = num_perm // bands
+    keys = _minhash_band_keys(num_perm, bands, hash_bands)
     sigs = _materialize_fp(
         minhash_signatures(df, text_col, id_col, num_perm, shingle_k, seed),
         df.sparkSession, "mvt_minhash_", work_dir)
-    key = ((lambda b: F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band)))
-           if hash_bands else
-           (lambda b: F.slice("sig", b * rows_per_band + 1, rows_per_band)))
-    banded = sigs.select(
-        "id",
-        F.posexplode(F.array(*[key(b) for b in range(bands)])).alias("band", "bh"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bh") == F.col("b.bh"))
-                    & (F.col("a.id") < F.col("b.id")))
-             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-             .agg(F.count("*").alias("n_bands")))
-    return pairs
+    return band_pairs(sigs, keys)
+
+
+def _minhash_band_keys(num_perm: int, bands: int, hashed: bool) -> list:
+    """Per-band key expressions over ``sig``: the raw signature slice, or
+    its xxhash64 when ``hashed``. A remainder would leave signature rows out
+    of every band, so ``bands`` must divide ``num_perm``."""
+    if num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
+    r = num_perm // bands
+    keys = [F.slice("sig", b * r + 1, r) for b in range(bands)]
+    return [F.xxhash64(k) for k in keys] if hashed else keys
+
+
+def band_pairs(df: DataFrame, keys: list, probe: DataFrame | None = None
+               ) -> DataFrame:
+    """(id_a, id_b, n_bands): each id_a < id_b pair of ``df(id, ...)`` rows
+    sharing >=1 of the band-key expressions ``keys``, once, with n_bands =
+    the number of keys shared. Rows explode to (band, bh) and pair up in an
+    equi-join on (band, bh) — the one banded join of every route here.
+
+    With ``probe`` (same shape, ids disjoint from ``df``) only pairs with a
+    probe endpoint are returned, with the rows and n_bands the self-join
+    over ``df`` ∪ ``probe`` gives. The probe's exploded keys are broadcast
+    and joined with themselves and with the streamed ``df`` keys: no join
+    takes ``df`` on both sides, so no df×df pair is ever formed.
+    """
+    def explode(d: DataFrame) -> DataFrame:
+        return d.select("id", F.posexplode(F.array(*keys)).alias("band", "bh"))
+
+    def bucket_join(a: DataFrame, b: DataFrame, ordered: bool) -> DataFrame:
+        a, b = a.alias("a"), b.alias("b")
+        ia, ib = F.col("a.id"), F.col("b.id")
+        return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                       & (F.col("a.bh") == F.col("b.bh"))
+                       & ((ia < ib) if ordered else (ia != ib)))
+                .select(F.least(ia, ib).alias("id_a"),
+                        F.greatest(ia, ib).alias("id_b")))
+
+    if probe is None:
+        banded = explode(df)
+        rows = bucket_join(banded, banded, ordered=True)
+    else:
+        p = F.broadcast(explode(probe))
+        rows = bucket_join(p, p, ordered=True).unionByName(
+            bucket_join(explode(df), p, ordered=False))
+    return rows.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
 
 
 _MINHASH_IDX_MARKER = "_MINHASH_OK"
 
 
 def _read_idx_marker(index_dir: str) -> dict:
-    import json as _json
-
     with open(os.path.join(index_dir, _MINHASH_IDX_MARKER)) as fh:
-        return _json.load(fh)
+        return json.load(fh)
 
 
 def build_minhash_index(df: DataFrame, text_col: str, id_col: str,
@@ -242,16 +279,14 @@ def build_minhash_index(df: DataFrame, text_col: str, id_col: str,
     Same discipline as the IVF index (similarity.py) and the gram-record
     stage: build once, query many, caller owns the directory.
     """
-    import json as _json
-
     spark = df.sparkSession
     minhash_signatures(df, text_col, id_col, num_perm, shingle_k,
                        seed).write.mode("overwrite").parquet(index_dir)
     marker = os.path.join(index_dir, _MINHASH_IDX_MARKER)
     tmp = marker + ".tmp"
     with open(tmp, "w") as fh:
-        _json.dump({"num_perm": num_perm, "shingle_k": shingle_k,
-                    "seed": seed}, fh)
+        json.dump({"num_perm": num_perm, "shingle_k": shingle_k,
+                   "seed": seed}, fh)
     os.replace(tmp, marker)
     return spark.read.parquet(index_dir)
 
@@ -279,44 +314,28 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     The incremental shape a streaming corpus needs: the corpus side costs
     one scan of its persisted signature index (``build_minhash_index``) —
     no text moves, no kernel runs over old documents. Only the new batch
-    is minhashed. Candidates come from the usual banded join (8-byte
-    xxhash64 band keys, the 10^12-doc shuffle key) restricted to pairs
-    with a new endpoint; every candidate then passes the shared
-    ``exact_jaccard_verify`` over corpus ∪ new text, so precision is
-    exact — identical contract to ``ngram_jaccard_lsh``, restricted to
-    pairs the new batch introduces.
+    is minhashed. Candidates come from ``band_pairs`` in probe mode
+    (8-byte xxhash64 band keys, the 10^12-doc shuffle key): the batch's
+    band keys are broadcast and joined with themselves and with the
+    streamed index keys, so the index is never joined with itself and no
+    old×old pair is formed only to be thrown away. Every candidate then
+    passes the shared ``exact_jaccard_verify`` over corpus ∪ new text, so
+    precision is exact — identical contract to ``ngram_jaccard_lsh``,
+    restricted to pairs the new batch introduces.
 
     Ids must be unique across corpus and batch (the table's primary key).
     Accepted workflow: drop/keep decisions from the returned pairs, then
     ``minhash_index_append`` the admitted rows.
     """
     p = _read_idx_marker(index_dir)
-    num_perm = p["num_perm"]
-    if num_perm % bands:
-        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
-    rows_per_band = num_perm // bands
+    keys = _minhash_band_keys(p["num_perm"], bands, hashed=True)
     spark = corpus_df.sparkSession
-    old_sig = spark.read.parquet(index_dir).withColumn(
-        "is_new", F.lit(False))
     new_sig = _materialize_fp(
-        minhash_signatures(new_df, text_col, id_col, num_perm,
+        minhash_signatures(new_df, text_col, id_col, p["num_perm"],
                            p["shingle_k"], p["seed"]),
-        spark, "mvt_minhash_inc_").withColumn("is_new", F.lit(True))
-    sigs = old_sig.unionByName(new_sig)
-    key = lambda b: F.xxhash64(F.slice("sig", b * rows_per_band + 1,
-                                       rows_per_band))
-    banded = sigs.select(
-        "id", "is_new",
-        F.posexplode(F.array(*[key(b) for b in range(bands)]))
-         .alias("band", "bh"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bh") == F.col("b.bh"))
-                    & (F.col("a.id") < F.col("b.id"))
-                    & (F.col("a.is_new") | F.col("b.is_new")))
-             .select(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-             .distinct())
+        spark, "mvt_minhash_inc_")
+    cands = band_pairs(spark.read.parquet(index_dir), keys,
+                       probe=new_sig).select("id_a", "id_b")
     both = (corpus_df.select(F.col(id_col).cast("long").alias(id_col),
                              text_col)
             .unionByName(new_df.select(
@@ -390,19 +409,6 @@ def cleanup_temp_dirs() -> int:
         shutil.rmtree(d, ignore_errors=True)
     _FP_TMP_DIRS.clear()
     return n
-
-
-def band_candidates(fp: DataFrame) -> DataFrame:
-    """Distinct (id_a, id_b) pairs sharing >=1 block-pair band of their
-    64-bit fingerprints (simhash_band_exprs pigeonhole machinery)."""
-    banded = fp.select(
-        "id", F.posexplode(F.array(*simhash_band_exprs())).alias("band", "bh"))
-    a, b = banded.alias("a"), banded.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct())
 
 
 def _gram_record_df(df: DataFrame, text_col: str, id_col: str,
@@ -542,20 +548,18 @@ def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
     overwrites. Callers own ``gram_dir``'s lifecycle; reuse across process
     restarts is safe as long as the source table is unchanged (the same
     contract as the IVF index dir and the encode resume markers)."""
-    import json as _json
-
     spark = df.sparkSession
     marker = os.path.join(gram_dir, "_GRAMS_OK")
     want = {"k": int(k), "text_col": text_col, "id_col": id_col}
     if os.path.exists(marker):
         with open(marker) as fh:
-            if _json.load(fh) == want:
+            if json.load(fh) == want:
                 return spark.read.parquet(gram_dir)
     _gram_record_df(df, text_col, id_col, k).write.mode(
         "overwrite").parquet(gram_dir)
     tmp = marker + ".tmp"
     with open(tmp, "w") as fh:
-        _json.dump(want, fh)
+        json.dump(want, fh)
     os.replace(tmp, marker)
     return spark.read.parquet(gram_dir)
 
@@ -759,12 +763,8 @@ def winnow_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
     # left_anti on fp shares the self-join's hash key; the stop set is
     # tiny (<= |fp rows| / max_df) so AQE broadcasts it in practice
     fpf = fp.join(stop, "fp", "left_anti")
-    a, b = fpf.alias("a"), fpf.alias("b")
-    return (a.join(b, (F.col("a.fp") == F.col("b.fp"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-            .agg(F.count("*").alias("n_shared"))
+    return (band_pairs(fpf, [F.col("fp")])
+            .withColumnRenamed("n_bands", "n_shared")
             .where(F.col("n_shared") >= min_shared))
 
 
@@ -1030,19 +1030,15 @@ def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
 
 
 def simhash_pairs_from_fps(fp: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Band join over an (id, simhash) DataFrame — see simhash_pairs."""
-    banded = fp.select(
-        "id", "simhash",
-        F.posexplode(F.array(*simhash_band_exprs())).alias("band", "bh"))
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .where(ham <= max_hamming)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                    ham.cast("long").alias("hamming"))
-            .distinct())
+    """Band join over an (id, simhash) DataFrame — see simhash_pairs. The
+    distinct band pairs join back to ``fp`` for both fingerprints and are
+    kept when their hamming distance is <= max_hamming."""
+    fa = fp.select(F.col("id").alias("id_a"), F.col("simhash").alias("sa"))
+    fb = fp.select(F.col("id").alias("id_b"), F.col("simhash").alias("sb"))
+    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("long")
+    return (band_pairs(fp, simhash_band_exprs()).join(fa, "id_a").join(fb, "id_b")
+            .select("id_a", "id_b", ham.alias("hamming"))
+            .where(F.col("hamming") <= max_hamming))
 
 
 # ---------------------------------------------------------------------------
@@ -1113,7 +1109,7 @@ def embedding_srp_pairs(df: DataFrame, vec_col: str, id_col: str,
 
     fp = _materialize_fp(srp_fingerprints(df, vec_col, id_col, seed),
                          df.sparkSession, "mvt_srp_", work_dir)
-    cands = band_candidates(fp)
+    cands = band_pairs(fp, simhash_band_exprs())
     v = (df.where(F.col(vec_col).isNotNull())
            .select(F.col(id_col).cast("long").alias("id"),
                    _as_double(F.col(vec_col)).alias("v")))

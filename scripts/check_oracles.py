@@ -2,6 +2,10 @@
 on DuckDB, compare row-count + order-insensitive exact values.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+
+sf_dir defaults to the oracle fixtures' scale (``ORACLE_SF_DIR``). Queries
+whose oracle SQL reads the fixtures can only be checked there: selecting
+one at another scale exits 2 before any Spark work.
 """
 
 from __future__ import annotations
@@ -32,10 +36,21 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-
     import __spark_entry__ as E
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else E.ORACLE_SF_DIR
+    only = set(sys.argv[2:])
+    qs, os_ = E.queries(), E.oracle_sql()
+    # fixture-backed oracles read tables built from ORACLE_SF_DIR; at any
+    # other scale they would report a FAIL that is not the engine's
+    pinned = sorted(n for n in qs if (not only or n in only)
+                    and E.FIXTURE_DIR in os_.get(n, ""))
+    if pinned and sf_dir != E.ORACLE_SF_DIR:
+        print(f"{', '.join(pinned)}: oracle fixtures are built from "
+              f"{E.ORACLE_SF_DIR}, not {sf_dir}; run them there or "
+              f"select other queries", file=sys.stderr)
+        sys.exit(2)
+
     from mapbox_vector_tile_java_spark.session import get_spark
 
     spark = get_spark("oracle-check", cores=8)
@@ -43,7 +58,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, os_ = E.queries(), E.oracle_sql()
     fails = []
     for name, fn in qs.items():
         if only and name not in only:

@@ -8,6 +8,7 @@ Usage: python scripts/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -49,10 +50,15 @@ AUDITS = [
      ["FileScan", "ReadSchema", "HashAggregate", "Exchange"]),
     ("dedup_incremental",
      "incremental dedup: the corpus side is a parquet scan of the "
-     "persisted signature index (FileScan over mvt_mh_idx — id+sig only, "
-     "no text column, no kernel); only the new batch runs the minhash "
-     "MapInArrow before the banded join and the shared verify kernel",
-     ["MapInArrow", "FileScan", "Exchange"]),
+     "persisted signature index (mvt_mh_idx: id+sig only, no text column, "
+     "no kernel); the new batch's signatures were minhashed once into "
+     "mvt_minhash_inc. The batch's band keys reach both band joins "
+     "through a BroadcastExchange: batch×batch, and index×batch with the "
+     "index streamed. No join takes the index on both sides, so the index "
+     "keys are never shuffled and no old×old pair is formed; the only "
+     "exchange before verify aggregates the candidate pairs",
+     ["BroadcastHashJoin [band", "HashedRelationBroadcastMode(List(input[1",
+      ",sig#", "Exchange hashpartitioning(id_a"]),
 ]
 
 HEADER = """# Physical-plan audit (sf0.01, local[8])
@@ -63,6 +69,13 @@ scans, partial aggregation before every exchange, no accidental shuffles.
 Regenerate with `python scripts/plan_audit.py` (this file's generator).
 
 """
+
+
+def _clip(line: str) -> str:
+    """A plan line cut to 150 chars; scans keep their directory's name."""
+    loc = re.search(r"Location: \w+\(\d+ paths\)\[([^\],]+)", line)
+    out = line.strip()[:150]
+    return f"{out} [{os.path.basename(loc.group(1))}]" if loc else out
 
 
 def main():
@@ -76,7 +89,7 @@ def main():
     for name, note, grep in AUDITS:
         p = qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         lines = [l for l in p.split("\n") if any(g in l for g in grep)]
-        body = "\n".join(l.strip()[:150] for l in lines[:12])
+        body = "\n".join(_clip(l) for l in lines[:12])
         sections.append(f"## {name}\n\n{note}\n\n```\n{body}\n```\n")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "docs", "PLANS.md"), "w") as f:

@@ -636,6 +636,34 @@ def test_dedup_incremental_matches_batch_recompute(spark, tmp_path):
     assert got2 == want2
     with _pytest.raises(ValueError, match="must divide"):
         D.dedup_incremental(corpus, new, "text", "doc_id", idx, bands=13)
+    # the batch route bands the same way, so it refuses the same remainder
+    with _pytest.raises(ValueError, match="bands=13 must divide num_perm=64"):
+        D.minhash_lsh_pairs(corpus, "text", "doc_id", bands=13)
+
+
+@pytest.mark.parametrize("hashed", [False, True])
+def test_band_pairs_probe_matches_self_join(spark, hashed):
+    """Probe mode returns exactly the self-join over index ∪ probe
+    restricted to pairs with a probe endpoint, n_bands included, for raw
+    and hashed minhash band keys; an empty probe yields no pairs."""
+    import os
+
+    from __spark_entry__ import ORACLE_SF_DIR
+
+    sf0001 = os.path.join(os.path.dirname(ORACLE_SF_DIR), "sf0.001")
+    docs = (spark.read.parquet(f"{sf0001}/documents.parquet")
+            .select("doc_id", "text"))
+    sigs = D.minhash_signatures(docs, "text", "doc_id").localCheckpoint()
+    keys = D._minhash_band_keys(64, 16, hashed)
+    # interleaved ids: probe endpoints fall on both sides of id_a < id_b
+    in_probe = lambda i: i % 4 == 1
+    index, probe = sigs.where("id % 4 != 1"), sigs.where("id % 4 = 1")
+    rows = lambda df: {tuple(r) for r in df.collect()}
+    got = rows(D.band_pairs(index, keys, probe=probe))
+    want = {r for r in rows(D.band_pairs(sigs, keys))
+            if in_probe(r[0]) or in_probe(r[1])}
+    assert got == want and got
+    assert not rows(D.band_pairs(index, keys, probe=probe.limit(0)))
 
 
 def test_corpus_clean_candidate_routes(spark):
