@@ -641,8 +641,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # late segment's blocks before any decode work; the exact row predicate
     # then makes the result oracle-comparable (pruning is block-level)
     def _segments_pruned(s, d):
-        from mapbox_vector_tile_java_spark.operators.decode import (
-            decode_table_multi)
         from mapbox_vector_tile_java_spark.streaming.incremental import (
             list_segments)
 
@@ -655,8 +653,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                        os.path.join(root, "segment=0"), n_parts=2)
         encode_webtext(src.where(us > cut),
                        os.path.join(root, "segment=1"), n_parts=2)
-        dec = decode_table_multi(s, list_segments(root),
-                                 zone_filters=[("warc_ts", 0, cut)])
+        dec = decode_table(s, list_segments(root),
+                           zone_filters=[("warc_ts", 0, cut)])
         return (dec.where(F.unix_micros("warc_ts") <= cut)
                 .select("url", F.unix_micros("warc_ts").alias("warc_ts_us"),
                         F.length("html").alias("html_len"), "text", "lang"))

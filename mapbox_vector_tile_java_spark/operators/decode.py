@@ -12,112 +12,29 @@ only the requested ``c_*``/``crc_*`` columns) — unrequested columns' bytes
 are never read. Parquet's column chunks ARE the column-chunk layout.
 
 Block pruning: ``ts_range``-style predicates are evaluated against the
-per-column min/max zone maps in the manifest *before* decode — the
-descendant of the reference's cheap AABB pre-filter before expensive
-intersection (JtsAdapter.java:232).
+per-column min/max zone maps stored beside each block's blobs, inside the
+parquet scan and *before* decode — the descendant of the reference's cheap
+AABB pre-filter before expensive intersection (JtsAdapter.java:232).
+
+One table or many (streaming segments) decode through the same scan and
+the same kernel: ``decode_table`` takes a table dir or a list of them.
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 import pyarrow as pa
 
 from ..columns import decode_column
 from ..plans import manifest as M
 
-
-def make_decode_fn(schema: pa.Schema, symtabs: dict[int, list[bytes]],
-                   columns: list[str] | None, verify_crc: bool = True):
-    names = columns or schema.names
-    out_schema = pa.schema([schema.field(n) for n in names])
-    ctx = {"symtabs": symtabs}
-
-    def fn(batches):
-        from ..codecs.gather import warm_heap
-        from ..columns import content_crc
-
-        warm_heap()
-        for b in batches:
-            blobs = {n: b.column(f"c_{n}") for n in names}
-            crcs = {n: b.column(f"crc_{n}") for n in names} if verify_crc else {}
-            for i in range(b.num_rows):
-                arrays = []
-                for n in names:
-                    blob = blobs[n][i].as_buffer()
-                    arr = decode_column(blob, out_schema.field(n).type, ctx)
-                    if verify_crc:
-                        want = crcs[n][i].as_py()
-                        if want is not None:
-                            if want < 0:
-                                want += 1 << 64
-                            got = content_crc(arr)
-                            if got != want:
-                                raise ValueError(
-                                    f"checksum mismatch decoding column {n!r}: "
-                                    f"manifest={want} decoded={got} — block is corrupt")
-                    arrays.append(arr)
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return fn
-
-
-def decode_table(spark, out_dir: str, columns: list[str] | None = None,
-                 zone_filters: list[tuple[str, int, int]] | None = None,
-                 verify_crc: bool = True):
-    """Read an encoded table back as a DataFrame.
-
-    zone_filters: [(col, lo, hi)] keeps only blocks whose [min,max] overlaps
-    [lo,hi] — evaluated on manifest zone maps, pruning whole blocks before
-    any decode work. NOTE: pruning is block-level; callers still apply the
-    exact row-level predicate afterwards.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    import glob as _glob
-
-    schema, symtabs, _ = M.read_meta(out_dir)
-    if columns:
-        for c in columns:
-            if c not in schema.names:
-                raise KeyError(f"unknown column {c}")
-    bdir = M.blocks_dir(out_dir)
-    if not _glob.glob(os.path.join(bdir, "*.parquet")):
-        # zero-row table: the encode job had no tasks, so no block files
-        out_fields = [schema.field(n) for n in (columns or schema.names)]
-        return spark.createDataFrame([], from_arrow_schema(pa.schema(out_fields)))
-    blocks = spark.read.parquet(bdir)
-    if zone_filters:
-        # zone maps are plain top-level columns: the predicate pushes down
-        # to the parquet scan and prunes whole row groups via their stats —
-        # the cluster-scale descendant of the reference's cheap AABB
-        # pre-filter before expensive work (JtsAdapter.java:232)
-        for col, lo, hi in zone_filters:
-            blocks = blocks.filter(
-                F.col(f"mn_{col}").isNull()
-                | ((F.col(f"mn_{col}") <= F.lit(int(hi)))
-                   & (F.col(f"mx_{col}") >= F.lit(int(lo)))))
-    if columns:
-        for c in columns:
-            if c not in schema.names:
-                raise KeyError(f"unknown column {c}")
-    names = columns or schema.names
-    need = ["part_id", "block_id", "n_rows"] + [f"c_{n}" for n in names]
-    if verify_crc:
-        need += [f"crc_{n}" for n in names]
-    # explicit projection -> parquet reads ONLY the requested blob columns
-    blocks = blocks.select(*need)
-    out_fields = [schema.field(n) for n in names]
-    spark_schema = from_arrow_schema(pa.schema(out_fields))
-    return blocks.mapInArrow(
-        make_decode_fn(schema, symtabs, columns, verify_crc), spark_schema)
+_SRC = "__src_file"  # block source-file column fed to the decode fn
 
 
 def _norm_file_dir(path: str) -> str:
-    """Normalize a Spark ``input_file_name()`` URI to the realpath of its
-    parent directory (the segment's blocks dir) for symtab-namespace lookup."""
+    """Normalize a block file's URI to the realpath of its parent directory
+    (the table's blocks dir) for symtab-namespace lookup."""
     from urllib.parse import unquote, urlparse
 
     p = urlparse(path)
@@ -125,14 +42,14 @@ def _norm_file_dir(path: str) -> str:
     return os.path.realpath(os.path.dirname(local))
 
 
-def make_multi_decode_fn(schema: pa.Schema,
-                         symtabs_by_dir: dict[str, dict[int, list[bytes]]],
-                         columns: list[str] | None, verify_crc: bool = True):
-    """Decode fn for blocks drawn from MANY segments in one scan: the last
-    input column is the block's source file (``input_file_name``), which
-    selects the segment's symbol-table namespace. Per-ROW lookup cost is
-    negligible — each row is a whole encoded block, and a scan partition
-    rarely mixes files anyway."""
+def make_decode_fn(schema: pa.Schema,
+                   symtabs_by_dir: dict[str, dict[int, list[bytes]]],
+                   columns: list[str] | None):
+    """Decode fn for blocks drawn from one or many tables in one scan: the
+    last input column is the block's source file, which selects its table's
+    symbol-table namespace (symtab ids are per table). Per-ROW lookup cost is
+    one cached dict hit — each row is a whole encoded block, and a scan
+    partition rarely mixes files anyway."""
     names = columns or schema.names
     out_schema = pa.schema([schema.field(n) for n in names])
 
@@ -144,8 +61,8 @@ def make_multi_decode_fn(schema: pa.Schema,
         ctx_cache: dict[str, dict] = {}
         for b in batches:
             blobs = {n: b.column(f"c_{n}") for n in names}
-            crcs = {n: b.column(f"crc_{n}") for n in names} if verify_crc else {}
-            srcs = b.column("__src_file")
+            crcs = {n: b.column(f"crc_{n}") for n in names}
+            srcs = b.column(_SRC)
             for i in range(b.num_rows):
                 raw_src = srcs[i].as_py()
                 ctx = ctx_cache.get(raw_src)
@@ -163,55 +80,60 @@ def make_multi_decode_fn(schema: pa.Schema,
                 for n in names:
                     blob = blobs[n][i].as_buffer()
                     arr = decode_column(blob, out_schema.field(n).type, ctx)
-                    if verify_crc:
-                        want = crcs[n][i].as_py()
-                        if want is not None:
-                            if want < 0:
-                                want += 1 << 64
-                            got = content_crc(arr)
-                            if got != want:
-                                raise ValueError(
-                                    f"checksum mismatch decoding column {n!r}: "
-                                    f"manifest={want} decoded={got} — block is corrupt")
+                    want = crcs[n][i].as_py()
+                    if want is not None:
+                        if want < 0:
+                            want += 1 << 64
+                        got = content_crc(arr)
+                        if got != want:
+                            raise ValueError(
+                                f"checksum mismatch decoding column {n!r}: "
+                                f"manifest={want} decoded={got} — block is corrupt")
                     arrays.append(arr)
                 yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     return fn
 
 
-def decode_table_multi(spark, seg_dirs: list[str],
-                       columns: list[str] | None = None,
-                       zone_filters: list[tuple[str, int, int]] | None = None,
-                       verify_crc: bool = True):
-    """Decode MANY encoded tables (streaming segments) as ONE DataFrame with
-    a plan whose depth does not grow with the segment count.
+def decode_table(spark, out_dir: str | list[str],
+                 columns: list[str] | None = None,
+                 zone_filters: list[tuple[str, int, int]] | None = None):
+    """Read one encoded table, or many (streaming segments), back as ONE
+    DataFrame.
 
-    A union-of-``decode_table`` plan is O(#segments) deep — fine at 3
-    segments, but a year of micro-batches (10^4-10^5 segments) would melt
-    the analyzer before any task runs. Here the union happens at the FILE
-    LISTING level instead: one parquet scan over every segment's block
-    files, one ``mapInArrow``, with ``input_file_name()`` carrying each
-    block's segment so the decode fn resolves the right symbol-table
-    namespace (symtab ids are per-segment). Driver cost is O(#segments)
-    small meta.json reads — listing cost, not plan cost.
+    ``out_dir`` is a table dir or a list of segment dirs. The union happens
+    at the FILE LISTING level: one parquet scan over every listed table's
+    block files and one ``mapInArrow``, so plan depth does not grow with the
+    segment count (a union-of-decodes plan is O(#segments) deep; 10^5
+    micro-batches would melt the analyzer). Each block's source file
+    (``_metadata.file_path``) selects its table's symbol-table namespace.
+    Driver cost is O(#segments) small meta.json reads — listing cost, not
+    plan cost. All tables must share one logical schema (they are
+    micro-batches of the same stream); a mismatch raises rather than
+    miscasts.
 
-    All segments must share one logical schema (they are micro-batches of
-    the same stream); a mismatch raises rather than miscasts.
+    zone_filters: [(col, lo, hi)] keeps only blocks whose [min,max] overlaps
+    [lo,hi]. Zone maps are plain top-level block columns, so the predicate
+    pushes down to the parquet scan and prunes whole row groups via their
+    stats before any decode work — the cluster-scale descendant of the
+    reference's cheap AABB pre-filter before expensive intersection
+    (JtsAdapter.java:232). NOTE: pruning is block-level; callers still
+    apply the exact row-level predicate afterwards.
 
     Reference lineage: the reference decodes MANY layers from ONE tile
     buffer in a single pass, resolving each layer's own key/value tables
-    as it goes (MvtReader.java:149-158 iterates mvt.getLayersList() with
-    per-layer dictionaries) — segments are the cluster-scale layers here,
-    and the per-segment symbol-table namespace plays the per-layer
-    dictionary.
+    as it goes (MvtReader.java:149-158) — segments are the cluster-scale
+    layers here, and the per-segment symbol-table namespace plays the
+    per-layer dictionary.
     """
     import glob as _glob
 
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    seg_dirs = [out_dir] if isinstance(out_dir, (str, os.PathLike)) else list(out_dir)
     if not seg_dirs:
-        raise ValueError("decode_table_multi: empty segment list")
+        raise ValueError("decode_table: empty segment list")
     schema = None
     symtabs_by_dir: dict[str, dict[int, list[bytes]]] = {}
     files: list[str] = []
@@ -230,26 +152,24 @@ def decode_table_multi(spark, seg_dirs: list[str],
     for c in names:
         if c not in schema.names:
             raise KeyError(f"unknown column {c}")
-    out_fields = [schema.field(n) for n in names]
-    spark_schema = from_arrow_schema(pa.schema(out_fields))
+    spark_schema = from_arrow_schema(pa.schema([schema.field(n) for n in names]))
     if not files:
-        # all segments were zero-row tables (no block files written)
+        # zero-row tables: the encode job had no tasks, so no block files
         return spark.createDataFrame([], spark_schema)
-    blocks = spark.read.parquet(*files).withColumn(
-        "__src_file", F.input_file_name())
-    if zone_filters:
-        for col, lo, hi in zone_filters:
-            blocks = blocks.filter(
-                F.col(f"mn_{col}").isNull()
-                | ((F.col(f"mn_{col}") <= F.lit(int(hi)))
-                   & (F.col(f"mx_{col}") >= F.lit(int(lo)))))
-    need = ["part_id", "block_id", "n_rows"] + [f"c_{n}" for n in names]
-    if verify_crc:
-        need += [f"crc_{n}" for n in names]
-    blocks = blocks.select(*need, "__src_file")
+    blocks = spark.read.parquet(*files)
+    for col, lo, hi in zone_filters or ():
+        blocks = blocks.filter(
+            F.col(f"mn_{col}").isNull()
+            | ((F.col(f"mn_{col}") <= F.lit(int(hi)))
+               & (F.col(f"mx_{col}") >= F.lit(int(lo)))))
+    # explicit projection -> parquet reads ONLY the requested blob columns;
+    # the source file is a deterministic metadata column, so the zone
+    # filters above still push into the scan
+    need = (["part_id", "block_id", "n_rows"] + [f"c_{n}" for n in names]
+            + [f"crc_{n}" for n in names])
+    blocks = blocks.select(*need, F.col("_metadata.file_path").alias(_SRC))
     return blocks.mapInArrow(
-        make_multi_decode_fn(schema, symtabs_by_dir, columns, verify_crc),
-        spark_schema)
+        make_decode_fn(schema, symtabs_by_dir, columns), spark_schema)
 
 
 def read_manifest(spark, out_dir: str):

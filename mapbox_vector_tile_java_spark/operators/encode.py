@@ -76,8 +76,6 @@ def encode_batch(batch: pa.RecordBatch, pid: int, block_id: int,
 
 
 def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
-    if not rows:
-        return pa.RecordBatch.from_pylist([], schema=M.MANIFEST_ARROW)
     return pa.RecordBatch.from_pylist(rows, schema=M.MANIFEST_ARROW)
 
 

@@ -46,23 +46,6 @@ def block_schema(table_schema: pa.Schema) -> pa.Schema:
     return pa.schema(fields)
 
 # flat manifest row (no blob) — what the encode job returns to the driver
-MANIFEST_FIELDS = [
-    ("part_id", "int"), ("block_id", "long"), ("n_rows", "long"),
-    ("name", "string"), ("dtype", "string"), ("codec", "string"),
-    ("null_count", "long"), ("raw_bytes", "long"), ("enc_bytes", "long"),
-    ("content_crc", "long"), ("min_i64", "long"), ("max_i64", "long"),
-    ("symtab_id", "long"),
-]
-
-
-def manifest_spark_schema():
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
-
-    m = {"int": IntegerType(), "long": LongType(), "string": StringType()}
-    return StructType([StructField(n, m[t], True) for n, t in MANIFEST_FIELDS])
-
-
 MANIFEST_ARROW = pa.schema([
     pa.field("part_id", pa.int32()), pa.field("block_id", pa.int64()),
     pa.field("n_rows", pa.int64()), pa.field("name", pa.string()),
@@ -72,6 +55,12 @@ MANIFEST_ARROW = pa.schema([
     pa.field("min_i64", pa.int64()), pa.field("max_i64", pa.int64()),
     pa.field("symtab_id", pa.int64()),
 ])
+
+
+def manifest_spark_schema():
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(MANIFEST_ARROW)
 
 
 def blocks_dir(out_dir: str) -> str:

@@ -15,7 +15,7 @@ Design:
   batch re-enters ``encode_table`` with ``resume=True`` and every committed
   partition is skipped, so duplicate delivery cannot duplicate bytes;
 - ``decode_segments`` reads all segments back as one DataFrame through ONE
-  flat scan (``decode_table_multi``) — plan depth does not grow with the
+  flat scan (``decode_table``) — plan depth does not grow with the
   segment count, so 10^5 accumulated micro-batches stay analyzable;
 - ``compact_segments`` + ``promote_compacted`` are the LSM answer to
   segment accumulation; compacted segments live in their own name space
@@ -89,14 +89,14 @@ def decode_segments(spark, out_dir: str, columns: list[str] | None = None) -> Da
 
     One flat scan over all segments' block files (plan depth O(1) in the
     segment count), with per-segment symbol-table namespaces resolved by
-    block source file — see ``decode_table_multi``.
+    block source file — see ``decode_table``.
     """
-    from ..operators.decode import decode_table_multi
+    from ..operators.decode import decode_table
 
     segs = list_segments(out_dir)
     if not segs:
         raise FileNotFoundError(f"no committed segments under {out_dir}")
-    return decode_table_multi(spark, segs, columns=columns)
+    return decode_table(spark, segs, columns=columns)
 
 
 def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
@@ -132,7 +132,7 @@ def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
     skips finished partitions. The swap into place is ``promote_compacted``
     (separate, so callers control the cutover point).
     """
-    from ..operators.decode import decode_table_multi
+    from ..operators.decode import decode_table
     from ..operators.encode import encode_webtext
 
     segs = list_segments(out_dir)
@@ -151,7 +151,7 @@ def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
                 f"{sorted(missing)}")
     elif max_segments is not None:
         segs = segs[:max_segments]
-    df = decode_table_multi(spark, segs)
+    df = decode_table(spark, segs)
     man = encode_webtext(df, dst_dir, n_parts=n_parts, url_col=url_col,
                          resume=resume)
     snap = os.path.join(dst_dir, _SNAPSHOT_FILE)
@@ -280,7 +280,7 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
     """
     import shutil
 
-    from ..operators.decode import decode_table, decode_table_multi
+    from ..operators.decode import decode_table
 
     aside_root = os.path.join(out_dir, ".pre_compact")
     if not os.path.isdir(aside_root):
@@ -298,7 +298,7 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
             continue  # compacted away since; covered by a newer aside dir
         srcs = [os.path.join(aside, b) for b in info["segments"]
                 if os.path.exists(os.path.join(aside, b, "manifest.parquet"))]
-        want = content_fingerprint(decode_table_multi(spark, srcs))
+        want = content_fingerprint(decode_table(spark, srcs))
         got = content_fingerprint(decode_table(spark, comp))
         if want != got:
             raise ValueError(

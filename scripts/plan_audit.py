@@ -48,6 +48,13 @@ AUDITS = [
      "(no c_* blob columns in any ReadSchema), partial agg before the "
      "exchange",
      ["FileScan", "ReadSchema", "HashAggregate", "Exchange"]),
+    ("segments_pruned_decode",
+     "segment decode: ONE parquet scan over both segments' block files "
+     "carries the zone-map predicate as a pushed filter "
+     "(PushedFilters: Or(IsNull(mn_warc_ts), ...)), so row groups outside "
+     "the range are skipped at the scan; one MapInArrow decodes every "
+     "segment",
+     ["MapInArrow", "FileScan"]),
     ("dedup_incremental",
      "incremental dedup: the corpus side is a parquet scan of the "
      "persisted signature index (mvt_mh_idx: id+sig only, no text column, "
@@ -72,10 +79,16 @@ Regenerate with `python scripts/plan_audit.py` (this file's generator).
 
 
 def _clip(line: str) -> str:
-    """A plan line cut to 150 chars; scans keep their directory's name."""
+    """A plan line cut to 150 chars; scans keep their directory's name and
+    any filters pushed into them."""
     loc = re.search(r"Location: \w+\(\d+ paths\)\[([^\],]+)", line)
+    pushed = re.search(r"PushedFilters: (\[[^\]].*?), ReadSchema", line)
     out = line.strip()[:150]
-    return f"{out} [{os.path.basename(loc.group(1))}]" if loc else out
+    if loc:
+        out += f" [{os.path.basename(loc.group(1))}]"
+    if pushed:
+        out += f" PushedFilters: {pushed.group(1)}"
+    return out
 
 
 def main():

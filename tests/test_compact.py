@@ -87,9 +87,10 @@ def test_multi_segment_zone_filter_prunes_and_preserves(spark, tmp_path):
     time-split segments give disjoint per-segment zone maps, so a narrow
     ts range decodes only the matching segment's blocks (and a disjoint
     range decodes nothing), while the exact predicate result matches the
-    source."""
-    from mapbox_vector_tile_java_spark.operators.decode import (
-        decode_table_multi)
+    source. The zone predicate reaches the parquet scan itself, so row
+    groups are skipped before any block bytes are read."""
+    import re
+
     from mapbox_vector_tile_java_spark.streaming.incremental import (
         list_segments)
 
@@ -104,17 +105,51 @@ def test_multi_segment_zone_filter_prunes_and_preserves(spark, tmp_path):
     encode_webtext(src.where(us > cut), os.path.join(root, "segment=1"),
                    n_parts=2)
     segs = list_segments(root)
-    pruned = decode_table_multi(
+    pruned = decode_table(
         spark, segs, zone_filters=[("warc_ts", bounds["lo"], cut)])
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.split("\n") if "FileScan" in ln]
+    assert len(scans) == 1, plan
+    assert re.search(r"PushedFilters: \[[^\]]*mn_warc_ts", scans[0]), plan
     got = sorted(r["url"] for r in pruned.where(us <= cut).collect())
     want = sorted(r["url"] for r in src.where(us <= cut).collect())
     assert got == want and len(got) > 0
     # pruning is real: segment 1's blocks never decode
-    full_rows = decode_table_multi(spark, segs).count()
+    full_rows = decode_table(spark, segs).count()
     assert pruned.count() < full_rows
     # disjoint range prunes everything
-    assert decode_table_multi(
+    assert decode_table(
         spark, segs, zone_filters=[("warc_ts", 0, 10)]).count() == 0
+
+
+def test_multi_segment_crc_mismatch_fails_decode(spark, tmp_path):
+    """A block whose stored content crc disagrees with its decoded column
+    fails the segment decode instead of returning wrong rows."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapbox_vector_tile_java_spark.streaming.incremental import (
+        list_segments)
+
+    root = str(tmp_path / "crc_segs")
+    src = webtext_df(spark, 200, seed=5, partitions=2)
+    for k in range(2):
+        part = src.where(F.pmod(F.xxhash64("url"), F.lit(2)) == k)
+        encode_webtext(part, os.path.join(root, f"segment={k}"), n_parts=1)
+    segs = list_segments(root)
+    assert decode_table(spark, segs).count() == 200
+    path = sorted(glob.glob(os.path.join(segs[1], "blocks", "*.parquet")))[0]
+    t = pq.read_table(path)
+    crcs = t.column("crc_url").to_pylist()
+    v = crcs[0]
+    crcs[0] = v + 1 if v < 0 else v - 1
+    t = t.set_column(t.schema.get_field_index("crc_url"), "crc_url",
+                     pa.array(crcs, pa.int64()))
+    pq.write_table(t, path, compression="none", row_group_size=64)
+    with pytest.raises(Exception, match="checksum mismatch"):
+        decode_table(spark, segs).collect()
 
 
 def test_fifty_segments_one_scan_and_compaction(spark, tmp_path):
