@@ -564,6 +564,68 @@ def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
     return spark.read.parquet(gram_dir)
 
 
+def rank_gram_block(recs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One hash block's gram records (``S{4k+1}``, each doc's run sorted
+    bytewise) -> (vocab, codes): the block's sorted distinct records and
+    each record's int32 rank in ``vocab``. Ranks follow byte order, so
+    every doc's code run stays sorted. Pure numpy, shared by the verify
+    stage's per-block pack and the kernel tests."""
+    vocab, codes = np.unique(recs, return_inverse=True)
+    return vocab, codes.astype(np.int32)
+
+
+def block_pair_jaccard(x: tuple, y: tuple, ida: np.ndarray,
+                       idb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Exact gram jaccard of candidate pairs (ida[i] in block x, idb[i] in
+    block y). Each block is (ids, cnts, vocab, codes): ids sorted, cnts >= 1
+    per doc, and (vocab, codes) from ``rank_gram_block``.
+
+    Returns (sel, jaccard): the indices of the candidates whose docs both
+    have a gram row (a doc with text shorter than k has none and drops
+    out), and their jaccard rounded half-away to 6 digits. Nothing is
+    sorted: x's vocabulary maps into y's code space with one searchsorted,
+    and one more searchsorted intersects every pair's code runs at once.
+    """
+    from ..codecs.gather import multi_range
+
+    xi, xc, xv, cx = x
+    yi, yc, yv, cy = y
+    # ids sorted -> binary-search doc lookup
+    pa_ = np.searchsorted(xi, ida).clip(max=max(len(xi) - 1, 0))
+    pb_ = np.searchsorted(yi, idb).clip(max=max(len(yi) - 1, 0))
+    ok = np.zeros(len(ida), dtype=bool)
+    if len(xi) and len(yi):
+        ok = (xi[pa_] == ida) & (yi[pb_] == idb)
+    sel = np.flatnonzero(ok)
+    # x's vocabulary in y's code space; grams y lacks map to -1, which
+    # (with stride = len(yv) + 1 below) can never equal a code of y
+    xmap = np.full(len(xv), -1, dtype=np.int64)
+    if len(yv):
+        at = np.searchsorted(yv, xv).clip(max=len(yv) - 1)
+        found = yv[at] == xv
+        xmap[found] = at[found]
+    # each pair p's code runs are shifted by p * stride, so the
+    # concatenated target array stays globally sorted and one binary-search
+    # pass answers all pairs; per-pair hit counts fall out of a reduceat
+    # over the needle boundaries
+    ai, bi = pa_[sel], pb_[sel]
+    la, lb = xc[ai], yc[bi]
+    stride = np.int64(len(yv) + 1)
+    pair_no = np.arange(len(sel), dtype=np.int64)
+    A = (xmap[cx[multi_range((np.cumsum(xc) - xc)[ai], la)]]
+         + stride * np.repeat(pair_no, la))
+    B = (cy[multi_range((np.cumsum(yc) - yc)[bi], lb)].astype(np.int64)
+         + stride * np.repeat(pair_no, lb))
+    pos = np.searchsorted(B, A)
+    hit = np.zeros(len(A), dtype=bool)
+    inb = pos < len(B)
+    hit[inb] = B[pos[inb]] == A[inb]
+    # bool reduceat would saturate (logical or) - count in int64
+    inter = (np.add.reduceat(hit.astype(np.int64), np.cumsum(la) - la)
+             if len(A) else np.zeros(len(sel), dtype=np.int64))
+    return sel, round_half_away(inter / (la + lb - inter), 6)
+
+
 def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
                          id_col: str, k: int = 3, threshold: float = 0.5,
                          block_rows: int = 512,
@@ -573,15 +635,18 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     composes with (minhash-LSH: ngram_jaccard_lsh; winnowing:
     ngram_jaccard_winnow). Returns (id_a, id_b, jaccard >= threshold).
 
-    Verify plan (the round-2 32.7s wall was here): gram sets are packed
-    once per doc into sorted fixed-width records (_gram_record_df), docs
-    are grouped into hash blocks, candidate pairs are grouped by their
-    (block_a, block_b) key, and ONE Arrow kernel per block pair intersects
-    integer gram codes with numpy searchsorted. Each doc's gram set
-    crosses the wire once per partner BLOCK — not once per candidate pair,
-    which is what made both the Catalyst array_intersect plan and the
-    naive per-pair-kernel plan transfer-bound on candidate-dense corpora.
-    Exactness: records carry full gram bytes (length-prefixed, no
+    Verify plan: gram sets are packed once per doc into sorted fixed-width
+    records (_gram_record_df), and docs are grouped into hash blocks. Each
+    block's grams are ranked once, when the block is packed: the block
+    ships its sorted distinct records (``vocab``) and one int32 code per
+    record (``codes``), never the records themselves. Candidate pairs are
+    grouped by their (block_a, block_b) key, and ONE Arrow kernel per block
+    pair remaps x's vocabulary into y's code space and intersects integer
+    codes with numpy searchsorted (``block_pair_jaccard``). Each doc's codes
+    cross the wire once per partner BLOCK — not once per candidate pair,
+    which is what made both the Catalyst array_intersect plan and the naive
+    per-pair-kernel plan transfer-bound on candidate-dense corpora.
+    Exactness: vocabularies carry full gram bytes (length-prefixed, no
     hashing), and double division + half-away rounding match the ANSI
     oracle bit-for-bit.
     """
@@ -589,7 +654,7 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     from pyspark.sql.types import (BinaryType, IntegerType, StructField,
                                    StructType)
 
-    width = 4 * k
+    rw = 4 * k + 1
     spark = df.sparkSession
     if gram_dir is not None:
         fp = build_gram_records(df, text_col, id_col, k, gram_dir)
@@ -604,7 +669,8 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
         StructField("b", IntegerType(), False),
         StructField("ids", BinaryType(), False),
         StructField("cnts", BinaryType(), False),
-        StructField("recs", BinaryType(), False),
+        StructField("vocab", BinaryType(), False),
+        StructField("codes", BinaryType(), False),
     ])
 
     def pack(pdf):
@@ -613,51 +679,46 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy(dtype=np.int64)
         cnts = pdf["cnt"].to_numpy(dtype=np.int64)
-        recs = b"".join(pdf["rec"])
+        vocab, codes = rank_gram_block(
+            np.frombuffer(b"".join(pdf["rec"]), dtype=f"S{rw}"))
         return pd.DataFrame({"b": [int(pdf["b"].iloc[0])],
                              "ids": [ids.tobytes()],
-                             "cnts": [cnts.tobytes()], "recs": [recs]})
+                             "cnts": [cnts.tobytes()],
+                             "vocab": [vocab.tobytes()],
+                             "codes": [codes.tobytes()]})
 
     packed = (fp.withColumn("b", blk("id"))
                 .groupBy("b").applyInPandas(pack, pack_schema))
 
     # size-ratio prefilter (jaccard <= min|A|,|B| / max|A|,|B|) on the tiny
     # (id, cnt) side table — prunes pairs that can never reach threshold
-    # before any gram bytes move
+    # before any gram bytes move. The ratio is rounded like the kernel's
+    # jaccard, so a pair whose rounded jaccard reaches threshold survives
     sizes = fp.select("id", "cnt")
     sa = sizes.select(F.col("id").alias("id_a"), F.col("cnt").alias("ca"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("cnt").alias("cb"))
     pruned = (cands.join(sa, "id_a").join(sb, "id_b")
-              .where(F.least("ca", "cb") >= F.lit(threshold) * F.greatest("ca", "cb"))
+              .where(F.round(F.least("ca", "cb") / F.greatest("ca", "cb"), 6)
+                     >= F.lit(threshold))
               .select("id_a", "id_b"))
 
     grouped = (pruned
                .groupBy(blk("id_a").alias("ba"), blk("id_b").alias("bb"))
                .agg(F.collect_list(F.struct("id_a", "id_b")).alias("prs")))
     x, y = packed.alias("x"), packed.alias("y")
+    sides = ("ids", "cnts", "vocab", "codes")
     joined = (grouped
               .join(x, F.col("ba") == F.col("x.b"))
               .join(y, F.col("bb") == F.col("y.b"))
-              .select("prs", F.col("x.ids").alias("ids_x"),
-                      F.col("x.cnts").alias("cnts_x"),
-                      F.col("x.recs").alias("recs_x"),
-                      F.col("y.ids").alias("ids_y"),
-                      F.col("y.cnts").alias("cnts_y"),
-                      F.col("y.recs").alias("recs_y")))
+              .select("prs", *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                               for s in ("x", "y") for c in sides]))
 
     out_schema = pa.schema([pa.field("id_a", pa.int64()),
                             pa.field("id_b", pa.int64()),
                             pa.field("jaccard", pa.float64())])
-
-    def _unpack(bts, cnt_bts):
-        ids = np.frombuffer(bts, dtype=np.int64)
-        cnts = np.frombuffer(cnt_bts, dtype=np.int64)
-        return ids, cnts, np.concatenate(([0], np.cumsum(cnts)))
+    dtypes = (np.int64, np.int64, f"S{rw}", np.int32)
 
     def verify(batches):
-        from ..codecs.gather import multi_range
-
-        rw = width + 1
         for batch in batches:
             prs_col = batch.column("prs")
             p_off = np.concatenate(
@@ -666,64 +727,19 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
             st = prs_col.flatten()
             all_a = st.field("id_a").to_numpy(zero_copy_only=False)
             all_b = st.field("id_b").to_numpy(zero_copy_only=False)
+            cols = {s: [batch.column(f"{c}_{s}") for c in sides]
+                    for s in ("x", "y")}
+
+            def block(s, i):
+                # zero-copy views of one shipped block's cells
+                return tuple(np.frombuffer(col[i].as_buffer(), dtype=dt)
+                             for col, dt in zip(cols[s], dtypes))
+
             for i in range(batch.num_rows):
                 ida = all_a[p_off[i] : p_off[i + 1]]
                 idb = all_b[p_off[i] : p_off[i + 1]]
-                xi, xc, xo = _unpack(batch.column("ids_x")[i].as_py(),
-                                     batch.column("cnts_x")[i].as_py())
-                yi, yc, yo = _unpack(batch.column("ids_y")[i].as_py(),
-                                     batch.column("cnts_y")[i].as_py())
-                xr = np.frombuffer(batch.column("recs_x")[i].as_py(),
-                                   dtype=np.uint8).view(f"S{rw}")
-                yr = np.frombuffer(batch.column("recs_y")[i].as_py(),
-                                   dtype=np.uint8).view(f"S{rw}")
-                # one unique pass per block pair -> int codes; per-doc code
-                # arrays stay sorted (codes are byte-order ranks and each
-                # doc's records were sorted at pack time)
-                codes = np.unique(np.concatenate([xr, yr]),
-                                  return_inverse=True)[1].astype(np.int64)
-                cx, cy = codes[: len(xr)], codes[len(xr):]
-                # ids sorted at pack time -> binary-search doc lookup;
-                # candidates whose doc has no gram row (e.g. text shorter
-                # than k) are dropped, same as the old inner join
-                pa_ = np.searchsorted(xi, ida).clip(max=max(len(xi) - 1, 0))
-                pb_ = np.searchsorted(yi, idb).clip(max=max(len(yi) - 1, 0))
-                ok = np.zeros(len(ida), dtype=bool)
-                if len(xi) and len(yi):
-                    ok = (xi[pa_] == ida) & (yi[pb_] == idb)
-                sel = np.flatnonzero(ok)
-                if not len(sel):
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([], type=pa.int64()),
-                         pa.array([], type=pa.int64()),
-                         pa.array([], type=pa.float64())],
-                        schema=out_schema)
-                    continue
-                # batched intersection: ONE searchsorted over every
-                # candidate at once. Each pair p's (sorted) code arrays are
-                # shifted by p * n_codes, so the concatenated target array
-                # stays globally sorted and one binary-search pass answers
-                # all pairs; per-pair hit counts fall out of a reduceat
-                # over the needle boundaries. No Python-level per-pair
-                # iteration remains.
-                ai, bi = pa_[sel], pb_[sel]
-                la, lb = xc[ai], yc[bi]
-                stride = np.int64(len(codes)) if len(codes) else np.int64(1)
-                pair_no = np.arange(len(sel), dtype=np.int64)
-                A = (cx[multi_range(xo[ai], la)]
-                     + stride * np.repeat(pair_no, la))
-                B = (cy[multi_range(yo[bi], lb)]
-                     + stride * np.repeat(pair_no, lb))
-                pos = np.searchsorted(B, A)
-                hit = np.zeros(len(A), dtype=bool)
-                inb = pos < len(B)
-                hit[inb] = B[pos[inb]] == A[inb]
-                a_ofs = np.concatenate(([0], np.cumsum(la)))[:-1]
-                # bool reduceat would saturate (logical or) — count in int64
-                inter = (np.add.reduceat(hit.astype(np.int64), a_ofs)
-                         if len(A) else np.zeros(len(sel), dtype=np.int64))
-                union = la + lb - inter
-                jac = round_half_away(inter / union, 6)
+                sel, jac = block_pair_jaccard(block("x", i), block("y", i),
+                                              ida, idb)
                 keep = jac >= threshold
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(ida[sel][keep], type=pa.int64()),

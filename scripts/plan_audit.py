@@ -39,9 +39,11 @@ AUDITS = [
      ["Broadcast", "Window", "Exchange"]),
     ("dedup_ngram_lsh_verified",
      "block-pair exact verify: candidate pairs aggregate per (block_a, "
-     "block_b) key, packed gram blocks join once per partner block, one "
-     "MapInArrow kernel per block pair — gram bytes never shuffle per "
-     "candidate pair",
+     "block_b) key; each packed gram block is ranked once into a sorted "
+     "vocabulary plus int32 codes (vocab_*/codes_*) and joins once per "
+     "partner block; one MapInArrow kernel per block pair remaps one "
+     "vocabulary into the other's code space and intersects codes — gram "
+     "bytes never shuffle per candidate pair",
      ["MapInArrow", "Exchange", "HashAggregate"]),
     ("meta_only_stats",
      "aggregate pushdown to metadata: the ONLY scan is manifest.parquet "

@@ -351,3 +351,65 @@ def test_strict_trailing_bytes():
     spec.decode(r, 10)
     with pytest.raises(ValueError):
         r.expect_end()
+
+
+def _gram_block(doc_sets: dict, k: int = 3) -> tuple:
+    """(ids, cnts, vocab, codes) of one verify hash block, built the way the
+    gram-record stage and the verify pack build it: each doc's grams as
+    length-prefixed ``S{4k+1}`` records, sorted bytewise per doc."""
+    from mapbox_vector_tile_java_spark.operators.dedup import rank_gram_block
+
+    rw = 4 * k + 1
+    ids = np.array(sorted(doc_sets), dtype=np.int64)
+    recs = [r for i in ids
+            for r in sorted(bytes([len(g)]) + g + bytes(rw - 1 - len(g))
+                            for g in doc_sets[i])]
+    cnts = np.array([len(doc_sets[i]) for i in ids], dtype=np.int64)
+    return (ids, cnts, *rank_gram_block(np.array(recs, dtype=f"S{rw}")))
+
+
+def test_block_pair_jaccard_matches_set_jaccard():
+    """The verify kernel's block-pair intersection against python set
+    jaccard: random blocks with shared, disjoint and empty-intersection
+    vocabularies, one-doc blocks, and candidates naming docs the block has
+    no gram row for (those drop out)."""
+    from mapbox_vector_tile_java_spark.operators.dedup import (
+        block_pair_jaccard,
+        round_half_away,
+    )
+
+    gen = np.random.default_rng(7)
+    alpha = [bytes([c]) for c in b"abcdefgh"]
+    universe = [a + b + c for a in alpha for b in alpha for c in alpha[:3]]
+    other = [g.upper() for g in universe]  # disjoint from ``universe``
+    # multi-byte grams: length prefixes differ from the ascii records
+    wide = ["ü".encode() + g[:2] for g in universe[:40]]
+
+    def rand_block(first_id, n_docs, pool):
+        return {first_id + 2 * j: set(gen.choice(pool, gen.integers(1, 30),
+                                                 replace=False).tolist())
+                for j in range(n_docs)}
+
+    cases = []
+    for _ in range(25):
+        nx, ny = gen.integers(1, 8, size=2)
+        cases.append((rand_block(0, nx, universe + wide),
+                      rand_block(1, ny, universe + wide)))
+    cases.append((rand_block(0, 5, universe), rand_block(1, 4, other)))
+    cases.append((rand_block(0, 1, universe), rand_block(1, 1, universe)))
+    cases.append(({0: {b"abc"}}, {1: {b"abd"}}))
+    cases.append(({0: {b"abc", b"bcd"}}, {1: {b"abc", b"bcd", b"cde"}}))
+    for xs, ys in cases:
+        x, y = _gram_block(xs), _gram_block(ys)
+        # every cross pair, plus candidates whose doc has no gram row
+        ida = np.array([a for a in list(xs) + [999] for _ in list(ys) + [998]],
+                       dtype=np.int64)
+        idb = np.array([b for _ in list(xs) + [999] for b in list(ys) + [998]],
+                       dtype=np.int64)
+        sel, jac = block_pair_jaccard(x, y, ida, idb)
+        got = dict(zip(zip(ida[sel].tolist(), idb[sel].tolist()),
+                       jac.tolist()))
+        want = {(a, b): round_half_away(
+                    np.float64(len(xs[a] & ys[b]) / len(xs[a] | ys[b])), 6)
+                for a in xs for b in ys}
+        assert got == want

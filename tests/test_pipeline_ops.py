@@ -501,15 +501,18 @@ def test_ivf_topk_small_corpus_self_built_index_ok(spark):
     assert out.count() == 3
 
 
+MULTIBYTE = "übergrößenträger straße naïve café résumé 日本語のテキスト " * 6
+CYRILLIC = "мир труд май совершенно другой текст " * 6
+
+
 def test_ngram_lsh_char_semantics_non_ascii(spark):
     """The kernel-side gram extractor must use CHARACTER grams (like
     substring(text, i, k)), not byte grams — multi-byte texts exercise the
     per-row fallback and must agree exactly with the Catalyst exact
     baseline (same pairs, same jaccard)."""
-    base = "übergrößenträger straße naïve café résumé 日本語のテキスト " * 6
-    rows = [Row(doc_id=0, text=base),
-            Row(doc_id=1, text=base + " kleiner zusatz"),
-            Row(doc_id=2, text="мир труд май совершенно другой текст " * 6),
+    rows = [Row(doc_id=0, text=MULTIBYTE),
+            Row(doc_id=1, text=MULTIBYTE + " kleiner zusatz"),
+            Row(doc_id=2, text=CYRILLIC),
             Row(doc_id=3, text="plain ascii filler document " * 8),
             Row(doc_id=4, text="plain ascii filler document " * 8 + "x")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -524,6 +527,54 @@ def test_ngram_lsh_char_semantics_non_ascii(spark):
     assert (0, 1) in lsh and (3, 4) in lsh
     for pair, j in lsh.items():
         assert exact[pair] == j, (pair, j, exact.get(pair))
+
+
+def _all_pairs(df):
+    ids = sorted(r["doc_id"] for r in df.select("doc_id").collect())
+    return df.sparkSession.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long")
+
+
+def test_exact_verify_cross_block_matches_catalyst(spark):
+    """Exact verify across many hash blocks (block_rows=2), so each block
+    pair remaps one block's gram vocabulary into another's code space:
+    every candidate pair must carry the Catalyst baseline's jaccard, with
+    ascii, multi-byte, shorter-than-k and near-duplicate texts."""
+    texts = ["plain ascii filler document " * 4,
+             "plain ascii filler document " * 4 + "x",
+             "the quick brown fox jumps over the lazy dog",
+             "the quick brown fox jumped over the lazy dog",
+             MULTIBYTE, MULTIBYTE + " kleiner zusatz", CYRILLIC,
+             CYRILLIC.replace("труд", "трут", 1), "ab", "", "abc", "abcd"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    exact = {(r["id_a"], r["id_b"]): r["jaccard"]
+             for r in D.ngram_jaccard_pairs(df, "text", "doc_id", k=3,
+                                            threshold=0.0).collect()}
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in D.exact_jaccard_verify(df, _all_pairs(df), "text",
+                                           "doc_id", k=3, threshold=0.0,
+                                           block_rows=2).collect()}
+    assert len(exact) == 45  # the ten texts with at least one 3-gram
+    assert got == exact
+
+
+def test_exact_verify_size_prefilter_keeps_rounded_ties(spark):
+    """The size-ratio prefilter compares the ratio rounded like jaccard:
+    {abc, bcd} vs {abc, bcd, cde} has jaccard 2/3 = 0.666667 after
+    rounding, which reaches 0.6666669 although the unrounded 2/3 does not."""
+    df = spark.createDataFrame([(0, "abcd"), (1, "abcde")],
+                               "doc_id long, text string")
+    t = 0.6666669
+    exact = {(r["id_a"], r["id_b"]): r["jaccard"]
+             for r in D.ngram_jaccard_pairs(df, "text", "doc_id", k=3,
+                                            threshold=t).collect()}
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in D.exact_jaccard_verify(df, _all_pairs(df), "text",
+                                           "doc_id", k=3,
+                                           threshold=t).collect()}
+    assert exact == {(0, 1): 0.666667}
+    assert got == exact
 
 
 @pytest.mark.parametrize("algorithm", ["labelprop", "star"])
