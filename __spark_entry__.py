@@ -27,7 +27,7 @@ from mapbox_vector_tile_java_spark.operators.multimodal import (
     decode_media_meta,
     synth_media_df,
 )
-from mapbox_vector_tile_java_spark.plans.partitioning import plan_generic, plan_webtext
+from mapbox_vector_tile_java_spark.plans.partitioning import plan_generic
 from mapbox_vector_tile_java_spark.sources.webtext import webtext_df
 
 _T = lambda sf_dir, name: f"{sf_dir}/{name}.parquet"

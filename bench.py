@@ -143,11 +143,12 @@ def main():
     _naive_n = [0]
 
     def _naive():
-        # fresh dir each repeat — resume markers would short-circuit a rerun
+        # fresh dir each repeat — resume markers would short-circuit a rerun;
+        # every bytes column is overridden, so no sampling job runs
         _naive_n[0] += 1
         encode_table(
             plan_webtext(base, n_parts=CPUS, hot_hosts={}),
-            f"{work}/naive_{_naive_n[0]}", plan="block",
+            f"{work}/naive_{_naive_n[0]}",
             codec_overrides={c: ("dict_bytes", None)
                              for c in ("url", "html", "text", "lang")})
     timed("naive_reference_encode", _naive, repeats=2)

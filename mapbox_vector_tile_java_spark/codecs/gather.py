@@ -1,4 +1,4 @@
-"""Shared gather/scatter kernels + process heap warmup.
+"""Shared gather/scatter kernels.
 
 ``multi_range``/``gather_runs`` implement the concat-of-slices pattern
 (output = pool[s_i : s_i+l_i] for each run i) with a single cumsum instead
@@ -6,34 +6,11 @@ of the repeat+arange+add triple — 2 large temporaries instead of 4. In this
 sandbox (and on thin-provisioned cloud VMs generally) first-touch page
 faults dominate large-temp numpy code, so temp count is the constant that
 matters.
-
-``warm_heap`` pre-faults a block of pages once per process. Spark reuses
-python workers, so each worker pays this once; combined with the malloc
-tunables in session.py the pages are never returned to the OS.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
-
-_WARMED = 0
-
-
-def warm_heap(nbytes: int | None = None) -> None:
-    """Pre-fault ``nbytes`` of heap. No-op unless MVT_SPARK_WARM_BYTES is set
-    (or nbytes passed): with the malloc tunables from session.py the heap is
-    retained anyway, so first-touch cost is paid exactly once per page either
-    way — eager warmup only helps steady-state benchmarks."""
-    global _WARMED
-    nbytes = nbytes or int(os.environ.get("MVT_SPARK_WARM_BYTES", "0"))
-    if nbytes <= 0 or _WARMED >= nbytes:
-        return
-    block = np.zeros(nbytes, dtype=np.uint8)
-    block[::4096] = 1
-    del block
-    _WARMED = nbytes
 
 
 def multi_range(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:

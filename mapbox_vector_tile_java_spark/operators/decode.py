@@ -54,10 +54,8 @@ def make_decode_fn(schema: pa.Schema,
     out_schema = pa.schema([schema.field(n) for n in names])
 
     def fn(batches):
-        from ..codecs.gather import warm_heap
         from ..columns import content_crc
 
-        warm_heap()
         ctx_cache: dict[str, dict] = {}
         for b in batches:
             blobs = {n: b.column(f"c_{n}") for n in names}
@@ -186,7 +184,8 @@ def meta_column_stats(spark, out_dir: str):
 
     min/max are the encode-time zone-map values (``_minmax_i64``) — exact,
     not sampled: every block records the true min/max of its rows
-    (timestamps in their native tick unit; bytes-like columns yield NULL).
+    (timestamps in their native tick unit; bytes-like, float and uint64
+    columns yield NULL).
     The reference's analog is answering layer extent questions from the
     tile header instead of decoding features (MvtReader.java:99-147 reads
     layer metadata before any geometry decode).

@@ -7,10 +7,10 @@ with atomic commit markers -> manifest + meta committed by the driver.
 Scale notes:
 - the only shuffle is the explicit partition plan (hash on url-host+salt);
   encode itself is map-only and writes from executors — no driver data path.
-- global dictionaries are collected once (distinct on a low-cardinality
-  column — tiny) and shipped via closure broadcast, the cluster-scale analog
-  of the reference's layer-global key/value dicts (MvtLayerProps.java:33-60,
-  vector_tile.proto:69-72).
+- global dictionaries and FSST tables are trained once, driver-side, from
+  the planner's one sample and shipped via closure broadcast, the
+  cluster-scale analog of the reference's layer-global key/value dicts
+  (MvtLayerProps.java:33-60, vector_tile.proto:69-72).
 - resume: a partition whose .done marker validates is not re-encoded or
   re-written (its manifest rows are replayed from the marker), so a killed
   job re-run skips committed partitions (FIXTURES.md F5).
@@ -24,22 +24,27 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..columns import encode_column
+from ..columns import _is_byteslike, encode_column
 from ..plans import manifest as M
 
 def _minmax_i64(arr: pa.Array):
     """Zone-map min/max for int-like columns (decode-side pruning, the
-    manifest analog of the reference's AABB pre-filter, JtsAdapter.java:232)."""
+    manifest analog of the reference's AABB pre-filter, JtsAdapter.java:232).
+
+    NULL for floats and uint64: their int64 views (``_to_int64``) do not
+    preserve order, so a recorded min/max would be wrong."""
     from ..columns import _is_intlike, _to_int64
 
-    if not _is_intlike(arr.type) or arr.null_count == len(arr) or len(arr) == 0:
+    t = arr.type
+    if (not _is_intlike(t) or pa.types.is_floating(t) or pa.types.is_uint64(t)
+            or arr.null_count == len(arr)):
         return None, None
     v = _to_int64(arr.drop_null())
     return int(v.min()), int(v.max())
 
 
 def encode_batch(batch: pa.RecordBatch, pid: int, block_id: int,
-                 overrides: dict, plan_cache: dict | None = None) -> tuple[dict, list[dict]]:
+                 overrides: dict, plan_cache: dict) -> tuple[dict, list[dict]]:
     """Encode one Arrow batch into a block row + flat manifest rows.
 
     plan_cache carries bytes-codec choices (incl. trained FSST tables) across
@@ -48,7 +53,6 @@ def encode_batch(batch: pa.RecordBatch, pid: int, block_id: int,
     """
     mrows = []
     block = {"part_id": pid, "block_id": block_id, "n_rows": batch.num_rows}
-    plan_cache = plan_cache if plan_cache is not None else {}
     for name in batch.schema.names:
         arr = batch.column(name)
         if isinstance(arr, pa.ChunkedArray):
@@ -80,15 +84,12 @@ def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
 
 
 def make_encode_fn(out_dir: str, overrides: dict, resume: bool,
-                   schema: pa.Schema | None = None):
+                   schema: pa.Schema):
     """Build the mapInArrow function (runs on executors)."""
 
     def fn(batches):
         from pyspark import TaskContext
 
-        from ..codecs.gather import warm_heap
-
-        warm_heap()  # once per (reused) python worker
         pid = TaskContext.get().partitionId()
         if resume:
             committed = M.read_done(out_dir, pid)
@@ -103,7 +104,7 @@ def make_encode_fn(out_dir: str, overrides: dict, resume: bool,
         for block_id, batch in enumerate(batches):
             if batch.num_rows == 0:
                 continue
-            if schema is not None and batch.schema != schema:
+            if batch.schema != schema:
                 batch = pa.Table.from_batches([batch]).cast(schema).combine_chunks().to_batches()[0]
             block, rows = encode_batch(batch, pid, block_id, overrides, plan_cache)
             blocks.append(block)
@@ -121,8 +122,7 @@ def make_encode_fn(out_dir: str, overrides: dict, resume: bool,
     return fn
 
 
-def encode_table(df, out_dir: str, *, plan: str = "global",
-                 sample: "pa.Table | None" = None,
+def encode_table(df, out_dir: str, *, sample: "pa.Table | None" = None,
                  codec_overrides: dict | None = None, resume: bool = True,
                  config_note: dict | None = None, n_parts: int | None = None):
     """Encode a (pre-partitioned) DataFrame. Returns the manifest as a
@@ -131,20 +131,29 @@ def encode_table(df, out_dir: str, *, plan: str = "global",
     Callers should partition first (plans.partitioning.plan_webtext /
     plan_generic); this function does no shuffle of its own.
 
-    plan="global" (default): one sampling job trains every shared artifact
-    driver-side (FSST tables, global dictionaries) and fixes per-column
-    codecs up front — executors only compress (SURVEY §3.1: the cluster
-    analog of build-once-per-layer dictionaries, MvtEncoder.java:91). The
-    plan + symbol tables are persisted to meta.json BEFORE the encode job,
-    so a resumed run reuses the identical plan and mixed-run partitions
-    stay mutually decodable. plan="block": per-partition auto-selection
-    (no sampling job; each partition trains its own tables).
+    Codec planning: every bytes-like column that has neither a
+    ``codec_overrides`` entry nor a persisted plan (a resumed table's
+    meta.json) is planned from ONE sample — ``sample`` when given, else one
+    ``collect_sample`` job. ``plan_from_sample`` trains every shared
+    artifact driver-side (FSST tables, global dictionaries) and fixes
+    per-column codecs up front — executors only compress (SURVEY §3.1: the
+    cluster analog of build-once-per-layer dictionaries, MvtEncoder.java:91).
+    The plan + symbol tables are persisted to meta.json BEFORE the encode
+    job, so a resumed run reuses the identical plan and mixed-run
+    partitions stay mutually decodable. When every bytes-like column is
+    overridden, no sampling job runs; int-like columns always pick their
+    codec per block (exact-size selection, cheap).
 
     ``sample``: pre-collected pa.Table to plan from (lets a pipeline share
     one sample between codec planning and skew detection, and lets callers
     sample the UNSHUFFLED input — sampling `df` itself would pay its
     shuffle twice, since recompiled DataFrame actions do not reuse
     exchanges across jobs).
+
+    ``codec_overrides``: {column: (codec_name, params)} forced per block.
+    Global codecs (``dict_global``, ``fsst_global``, ``tok_dict``) are
+    refused with ``ValueError``: their symbol tables come from the planner,
+    which persists them for decode.
 
     ``n_parts``: the planned partition count, recorded in meta.json. Pass
     it when known (the partition planners know it) — the fallback is the
@@ -157,8 +166,13 @@ def encode_table(df, out_dir: str, *, plan: str = "global",
     from ..plans.codec_plan import (collect_sample, estimate_width,
                                     overrides_from_plan, plan_from_sample)
 
-    os.makedirs(out_dir, exist_ok=True)
     overrides = dict(codec_overrides or {})
+    for col, (cname, _) in overrides.items():
+        if cname in ("dict_global", "fsst_global", "tok_dict"):
+            raise ValueError(
+                f"codec override {cname!r} for column {col!r}: global codecs "
+                f"are planned from a sample, not overridden")
+    os.makedirs(out_dir, exist_ok=True)
     symtabs: dict[int, list[bytes]] = {}
     plan_note: dict = {}
     schema = to_arrow_schema(df.schema)
@@ -175,25 +189,12 @@ def encode_table(df, out_dir: str, *, plan: str = "global",
         planned = overrides_from_plan(plan_note, symtabs)
         for col, ov in planned.items():
             overrides.setdefault(col, ov)
-    elif plan == "global":
+    elif any(_is_byteslike(f.type) and f.name not in overrides
+             for f in schema):
         if sample is None:
             sample = collect_sample(df)
         o2, symtabs, plan_note = plan_from_sample(sample, skip=set(overrides))
         overrides.update(o2)
-
-    # caller-supplied global-codec overrides also need their symbols
-    # persisted for decode — regardless of plan mode (a plan="block" table
-    # whose blobs reference an unpersisted symtab_id would be undecodable)
-    for col, (cname, params) in list(overrides.items()):
-        if cname in ("dict_global", "fsst_global", "tok_dict") and isinstance(params, dict):
-            sid = params.get("symtab_id")
-            if sid is None:
-                raise ValueError(
-                    f"global codec override for column {col!r} needs a "
-                    f"'symtab_id' param so its symbols can be persisted")
-            if sid not in symtabs:
-                symtabs[sid] = (params["symbols"] if cname == "dict_global"
-                                else list(params["fsst_table"].symbols))
 
     M.write_meta(out_dir, schema, symtabs,
                  {"note": config_note or {}, "plan": plan_note,
@@ -212,12 +213,12 @@ def encode_table(df, out_dir: str, *, plan: str = "global",
     return df.sparkSession.read.parquet(mpath)
 
 
-def encode_webtext(df, out_dir: str, n_parts: int, url_col: str = "url",
-                   resume: bool = True, config_note: dict | None = None,
+def encode_webtext(df, out_dir: str, n_parts: int,
                    skip_if_empty: bool = False):
     """Full webtext pipeline: ONE sampling job on the unshuffled input
     drives both skew salting and codec planning, then one shuffle+encode
-    job. This is the production entry point for the north-rule table.
+    job. This is the production entry point for the north-rule table. It
+    always resumes: committed partitions of ``out_dir`` are kept.
 
     ``skip_if_empty``: return None without creating ``out_dir`` when the
     input has no rows. The check piggybacks on the sampling job this
@@ -226,16 +227,13 @@ def encode_webtext(df, out_dir: str, n_parts: int, url_col: str = "url",
     pays one extra ``isEmpty`` probe. This is how the streaming sink skips
     empty micro-batches without a dedicated per-batch probe job.
     """
-    from ..plans.codec_plan import (collect_sample, hot_keys_from_sample,
-                                    plan_from_sample)
+    from ..plans.codec_plan import collect_sample, hot_keys_from_sample
     from ..plans.partitioning import plan_webtext
 
     sample = collect_sample(df)
     if skip_if_empty and sample.num_rows == 0 and df.isEmpty():
         return None
-    hot = hot_keys_from_sample(sample, url_col, n_parts)
-    planned = plan_webtext(df, n_parts, url_col=url_col, hot_hosts=hot)
-    return encode_table(planned, out_dir, sample=sample, resume=resume,
-                        n_parts=n_parts,
-                        config_note={**(config_note or {}),
-                                     "hot_hosts": hot})
+    hot = hot_keys_from_sample(sample, n_parts)
+    planned = plan_webtext(df, n_parts, hot_hosts=hot)
+    return encode_table(planned, out_dir, sample=sample, n_parts=n_parts,
+                        config_note={"hot_hosts": hot})

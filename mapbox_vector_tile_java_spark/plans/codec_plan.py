@@ -23,6 +23,7 @@ import pyarrow as pa
 
 from ..codecs import fsst as fsstmod
 from ..codecs.selector import DICT_MAX_RATIO, FSST_MIN_DATA, row_sample
+from ..columns import _bytes_parts, _is_byteslike
 
 SAMPLE_ROWS_PER_PART = 512      # a few hundred KB per partition suffices:
 SAMPLE_PARTITIONS = 16          # per-column trials cap at TRIAL_BYTES anyway
@@ -44,11 +45,9 @@ def estimate_width(df) -> int:
     return n if n > 0 else df.sparkSession.sparkContext.defaultParallelism
 
 
-def collect_sample(df, rows_per_part: int = SAMPLE_ROWS_PER_PART,
-                   sample_partitions: int = SAMPLE_PARTITIONS,
-                   n_parts: int | None = None) -> pa.Table:
-    """One Spark job: head rows from ``sample_partitions`` evenly-strided
-    partitions.
+def collect_sample(df) -> pa.Table:
+    """One Spark job: the first ``SAMPLE_ROWS_PER_PART`` rows of
+    ``SAMPLE_PARTITIONS`` evenly-strided partitions.
 
     Fully deterministic for a given input+partitioning (unlike a global
     ``limit``, whose surviving rows depend on task completion order) — so
@@ -56,45 +55,34 @@ def collect_sample(df, rows_per_part: int = SAMPLE_ROWS_PER_PART,
     reproduces across independent runs. Non-selected partitions' tasks
     return immediately; selected tasks read only their first Arrow batch.
 
-    ``n_parts``: the input's partition count when the caller knows it
-    (the partition planners do). The fallback estimate is metadata-only —
-    ``df.inputFiles()`` (parquet splits at least one partition per file)
-    or the session default parallelism — never
+    The stride comes from ``estimate_width``, a metadata-only partition
+    count (input file count or the session default parallelism), never
     ``df.rdd.getNumPartitions()``, which forces a DataFrame->RDD plan
-    conversion. The estimate only spaces the sampled-partition stride;
+    conversion. The estimate only spaces the sampled partitions;
     under-estimating samples earlier partitions, and losslessness never
     depends on the sample (module docstring), so an off estimate costs
     sample spread, not correctness or determinism.
     """
-    if n_parts is None:
-        n_parts = estimate_width(df)
-    stride = max(1, n_parts // sample_partitions)
+    stride = max(1, estimate_width(df) // SAMPLE_PARTITIONS)
 
     def head(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        if pid % stride != 0 or pid // stride >= sample_partitions:
+        if pid % stride != 0 or pid // stride >= SAMPLE_PARTITIONS:
             return
         took = 0
         for b in batches:
-            if took >= rows_per_part:
+            if took >= SAMPLE_ROWS_PER_PART:
                 break
-            s = b.slice(0, min(b.num_rows, rows_per_part - took))
+            s = b.slice(0, min(b.num_rows, SAMPLE_ROWS_PER_PART - took))
             took += s.num_rows
             yield s
 
     return df.mapInArrow(head, df.schema).toArrow()
 
 
-def _is_byteslike(t: pa.DataType) -> bool:
-    from ..columns import _is_byteslike
-
-    return _is_byteslike(t)
-
-
-def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset(),
-                     next_sid: int = 0):
+def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
     """Build per-column codec overrides from a sample table.
 
     Returns (overrides, symtabs, plan_note):
@@ -104,13 +92,12 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset(),
       symtabs:   {sid: [symbol bytes, ...]} to persist in table meta.
       plan_note: json-able description for meta.json / lineage audit.
     """
-    from ..columns import _bytes_parts
     from ..codecs.bytescodecs import _tokd_encode
 
     overrides: dict = {}
     symtabs: dict[int, list[bytes]] = {}
     note: dict = {}
-    sid = next_sid
+    sid = 0
 
     cols = [f.name for f in sample.schema
             if f.name not in skip and _is_byteslike(f.type)]
@@ -220,17 +207,18 @@ def overrides_from_plan(plan_note: dict, symtabs: dict[int, list[bytes]]):
     return overrides
 
 
-def hot_keys_from_sample(sample: pa.Table, url_col: str, n_parts: int,
-                         frac_threshold: float | None = None) -> dict[str, int]:
+def hot_keys_from_sample(sample: pa.Table, n_parts: int) -> dict[str, int]:
     """Skew salt map from the sample's url hosts — no extra Spark job.
 
-    Same contract as plans.partitioning.detect_hot_keys: {host: n_buckets}
-    for hosts whose sampled share would overload one partition.
+    Returns {host: n_buckets} for each host whose share of the sampled rows
+    exceeds the fair share ``1 / n_parts``: such a host would overload one
+    partition, so ``plan_webtext`` splits it over
+    ``max(2, floor(share / fair) + 1)`` salt buckets.
     """
     import pyarrow.compute as pc
 
-    frac_threshold = frac_threshold or (1.0 / max(n_parts, 2))
-    urls = sample.column(url_col).combine_chunks()
+    fair = 1.0 / max(n_parts, 2)
+    urls = sample.column("url").combine_chunks()
     hosts = pc.extract_regex(urls.cast(pa.string()), r"^[a-z]+://(?P<host>[^/]+)")
     hosts = pc.struct_field(hosts, "host")
     vc = hosts.value_counts()
@@ -239,6 +227,6 @@ def hot_keys_from_sample(sample: pa.Table, url_col: str, n_parts: int,
     for item in vc.to_pylist():
         host, cnt = item["values"], item["counts"]
         frac = cnt / total
-        if host is not None and frac > frac_threshold:
-            out[host] = max(2, int(frac / frac_threshold) + 1)
+        if host is not None and frac > fair:
+            out[host] = max(2, int(frac / fair) + 1)
     return out

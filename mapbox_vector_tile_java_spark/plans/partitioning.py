@@ -7,9 +7,10 @@ dictionaries see homogeneous data), hot hosts are split by a salt derived
 from xxhash64(url), and rows are sorted within partitions to create the
 sorted warc_ts runs the RLE/delta codecs exploit.
 
-Everything here is deterministic across reruns (hash partitioning, fixed
-sample seed) — required for checksum-stable resume (SURVEY §4 "determinism
-rule"; the reference leans on LinkedHashMap insertion order,
+Everything here is deterministic across reruns (hash partitioning; the
+salt map comes from ``codec_plan.collect_sample``'s strided head sample,
+which needs no seed) — required for checksum-stable resume (SURVEY §4
+"determinism rule"; the reference leans on LinkedHashMap insertion order,
 MvtLayerProps.java:17-18, which Spark does not give us for free).
 """
 
@@ -17,77 +18,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-SAMPLE_SEED = 487125064  # reference test seed, MvtBuildTest.java:60
-
 
 def host_expr(url_col: str = "url"):
     return F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/]+)", 1)
 
 
-def detect_hot_keys(df: DataFrame, key, n_parts: int,
-                    frac_threshold: float | None = None,
-                    total_hint: int | None = None,
-                    sample_rows: int = 100_000) -> dict[str, int]:
-    """Sample key frequencies; return {key_value: n_salt_buckets} for keys
-    whose share would overload one partition. Deterministic (fixed seed).
-
-    One Spark job: per-partition head sampling (limit pushed into the scan)
-    + groupBy on the sampled rows; pass total_hint to skip the count job.
-    """
-    frac_threshold = frac_threshold or (1.0 / max(n_parts, 2))
-    if total_hint:
-        fraction = min(1.0, sample_rows / total_hint)
-        sample = (df.sample(fraction=fraction, seed=SAMPLE_SEED)
-                  if fraction < 1.0 else df)
-        top = (sample.groupBy(key.alias("k")).count()
-               .orderBy(F.desc("count"), F.asc("k")).limit(64).collect())
-        counts = [(r["k"], r["count"]) for r in top]
-    else:
-        # strided per-partition head sample (deterministic for a given
-        # input+partitioning, unlike a global limit whose surviving rows
-        # depend on task completion order)
-        from .codec_plan import collect_sample
-
-        tbl = collect_sample(df.select(key.alias("k")),
-                             rows_per_part=max(1, sample_rows // 16))
-        vc = tbl.column("k").combine_chunks().value_counts().to_pylist()
-        counts = sorted(((it["values"], it["counts"]) for it in vc),
-                        key=lambda x: (-x[1], str(x[0])))[:64]
-    n_sampled = max(sum(c for _, c in counts), 1)  # lower bound on sample size
-    out: dict[str, int] = {}
-    for kval, cnt in counts:
-        frac = cnt / n_sampled
-        if kval is not None and frac > frac_threshold:
-            out[kval] = max(2, int(frac / frac_threshold) + 1)
-    return out
-
-
-def plan_webtext(df: DataFrame, n_parts: int, url_col: str = "url",
-                 sort_cols: tuple[str, ...] = ("warc_ts",),
-                 hot_hosts: dict[str, int] | None = None) -> DataFrame:
+def plan_webtext(df: DataFrame, n_parts: int,
+                 hot_hosts: dict[str, int]) -> DataFrame:
     """Host-grouped, salt-split, sorted-within-partition layout for the
-    webtext table. hot_hosts=None -> detect via sampling."""
-    host = host_expr(url_col)
-    if hot_hosts is None:
-        hot_hosts = detect_hot_keys(df, host, n_parts)
+    webtext table. ``hot_hosts`` ({host: n_buckets}) comes from
+    ``codec_plan.hot_keys_from_sample`` on the same sample that drives the
+    codec plan; ``{}`` salts nothing."""
+    host = host_expr()
     salt = F.lit(0)
     if hot_hosts:
         buckets = F.create_map(*[x for h, n in sorted(hot_hosts.items())
                                  for x in (F.lit(h), F.lit(n))])
         nb = F.coalesce(buckets.getItem(host), F.lit(1))
-        salt = F.pmod(F.xxhash64(F.col(url_col)), nb)
+        salt = F.pmod(F.xxhash64(F.col("url")), nb)
     out = (df.withColumn("__pkey", F.xxhash64(host, salt))
              .repartition(n_parts, F.col("__pkey"))
-             .sortWithinPartitions(*[F.col(c) for c in ("__pkey", *sort_cols)])
+             .sortWithinPartitions("__pkey", "warc_ts")
              .drop("__pkey"))
     return out
 
 
-def plan_generic(df: DataFrame, n_parts: int, key_col: str,
-                 sort_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Hash-partition on xxhash64(key), sort within partitions — stable
-    across reruns (unlike repartitionByRange, whose sampled boundaries
-    depend on the RDD id)."""
-    sort = list(sort_cols) if sort_cols else [key_col]
+def plan_generic(df: DataFrame, n_parts: int, key_col: str) -> DataFrame:
+    """Hash-partition on xxhash64(key), sort within partitions by the key —
+    stable across reruns (unlike repartitionByRange, whose sampled
+    boundaries depend on the RDD id)."""
     return (df.repartition(n_parts, F.xxhash64(F.col(key_col)))
-              .sortWithinPartitions(*sort))
+              .sortWithinPartitions(key_col))

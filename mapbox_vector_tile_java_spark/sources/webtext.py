@@ -219,9 +219,6 @@ def webtext_df(spark, n_rows: int, seed: int = 42, partitions: int | None = None
     ])
 
     def gen(batches):
-        from ..codecs.gather import warm_heap
-
-        warm_heap()
         for b in batches:
             ids = b.column(0).to_numpy(zero_copy_only=False)
             yield gen_batch(ids, seed)

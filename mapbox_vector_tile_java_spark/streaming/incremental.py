@@ -37,7 +37,7 @@ _SNAPSHOT_FILE = "compact_sources.json"
 
 
 def encode_stream(stream_df: DataFrame, out_dir: str, n_parts: int = 4,
-                  checkpoint_dir: str | None = None, url_col: str = "url"):
+                  checkpoint_dir: str | None = None):
     """Start a streaming query that encodes each micro-batch as a segment.
 
     Returns the StreamingQuery; caller manages its lifecycle
@@ -52,8 +52,7 @@ def encode_stream(stream_df: DataFrame, out_dir: str, n_parts: int = 4,
     def sink(batch_df: DataFrame, batch_id: int):
         seg = os.path.join(out_dir, f"segment={batch_id}")
         # resume=True inside encode_webtext makes batch replay idempotent
-        encode_webtext(batch_df, seg, n_parts=n_parts, url_col=url_col,
-                       skip_if_empty=True)
+        encode_webtext(batch_df, seg, n_parts=n_parts, skip_if_empty=True)
 
     writer = (stream_df.writeStream
               .foreachBatch(sink)
@@ -100,7 +99,6 @@ def decode_segments(spark, out_dir: str, columns: list[str] | None = None) -> Da
 
 
 def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
-                     url_col: str = "url", resume: bool = True,
                      max_segments: int | None = None,
                      segments: list[str] | None = None):
     """Merge committed segments into ONE compacted encoded table.
@@ -127,10 +125,10 @@ def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
     decode(compact(segments)) must equal decode(segments) row-for-row.
 
     Scale: one decode map + one repartition shuffle + one encode map —
-    identical plan shape to a fresh bulk encode; ``resume=True`` gives the
-    same per-partition idempotent commit, so a killed compaction rerun
-    skips finished partitions. The swap into place is ``promote_compacted``
-    (separate, so callers control the cutover point).
+    identical plan shape to a fresh bulk encode; ``encode_webtext``
+    resumes with the same per-partition idempotent commit, so a killed
+    compaction rerun skips finished partitions. The swap into place is
+    ``promote_compacted`` (separate, so callers control the cutover point).
     """
     from ..operators.decode import decode_table
     from ..operators.encode import encode_webtext
@@ -152,8 +150,7 @@ def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
     elif max_segments is not None:
         segs = segs[:max_segments]
     df = decode_table(spark, segs)
-    man = encode_webtext(df, dst_dir, n_parts=n_parts, url_col=url_col,
-                         resume=resume)
+    man = encode_webtext(df, dst_dir, n_parts=n_parts)
     snap = os.path.join(dst_dir, _SNAPSHOT_FILE)
     tmp = snap + ".tmp"
     with open(tmp, "w") as f:
@@ -352,8 +349,7 @@ def compaction_due(spark, out_dir: str, min_segments: int = 4,
 
 
 def maintain_table(spark, out_dir: str, n_parts: int,
-                   min_segments: int = 4, max_segments: int = 64,
-                   url_col: str = "url") -> str | None:
+                   min_segments: int = 4, max_segments: int = 64) -> str | None:
     """One table-maintenance round: size-tiered trigger → compact →
     promote → fingerprint-verified reap. Returns the promoted segment
     path, or ``None`` when compaction is not warranted yet.
@@ -374,8 +370,7 @@ def maintain_table(spark, out_dir: str, n_parts: int,
     if not due:
         return None
     staging = os.path.join(out_dir, ".compact_tmp", uuid.uuid4().hex[:12])
-    compact_segments(spark, out_dir, staging, n_parts, url_col=url_col,
-                     segments=due)
+    compact_segments(spark, out_dir, staging, n_parts, segments=due)
     promoted = promote_compacted(out_dir, staging)
     verify_and_reap(spark, out_dir)
     try:  # the promote moved the staging dir away; drop the empty parent

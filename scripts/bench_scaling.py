@@ -55,8 +55,8 @@ wall = min(walls)  # shared noisy host: min == steady-state
 # throughput; it is the only non-scaling phase left (round-3 phase
 # decomposition in BENCH/BASELINE.md), which this variant isolates.
 sample = collect_sample(base)
-hot = hot_keys_from_sample(sample, "url", n_parts)
-planned = plan_webtext(base, n_parts, url_col="url", hot_hosts=hot)
+hot = hot_keys_from_sample(sample, n_parts)
+planned = plan_webtext(base, n_parts, hot_hosts=hot)
 walls_p = []
 for rep in range(repeats):
     d = f"{work}/encp{rep}"

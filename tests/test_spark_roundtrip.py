@@ -16,8 +16,13 @@ from mapbox_vector_tile_java_spark.operators.decode import (
     decode_table,
     read_manifest,
 )
-from mapbox_vector_tile_java_spark.operators.encode import encode_table
+from mapbox_vector_tile_java_spark.operators.encode import (
+    encode_batch,
+    encode_table,
+    encode_webtext,
+)
 from mapbox_vector_tile_java_spark.operators.verify import verify_roundtrip
+from mapbox_vector_tile_java_spark.plans import codec_plan
 from mapbox_vector_tile_java_spark.plans.partitioning import plan_generic, plan_webtext
 from mapbox_vector_tile_java_spark.sources.webtext import webtext_df
 
@@ -27,9 +32,8 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def webtext_encoded(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc") / "webtext")
-    df = webtext_df(spark, 20_000, seed=42, partitions=4)
-    pdf = plan_webtext(df, n_parts=8)
-    encode_table(pdf, out)
+    encode_webtext(webtext_df(spark, 20_000, seed=42, partitions=4), out,
+                   n_parts=8)
     return out
 
 
@@ -81,6 +85,35 @@ def test_zone_map_pruning(spark, tmp_path):
     assert decode_table(spark, out, zone_filters=[("warc_ts", 0, 10)]).count() == 0
 
 
+def test_zone_maps_only_for_order_preserving_ints(spark, tmp_path):
+    """Zone-map min/max are exact for int64 and NULL for uint64 and
+    floats, whose int64 views do not preserve order."""
+    import pyarrow as pa
+    from pyspark.sql import Row
+
+    from mapbox_vector_tile_java_spark.operators.decode import meta_column_stats
+
+    batch = pa.RecordBatch.from_pydict({
+        "i": pa.array([3, -7, None, 12], pa.int64()),
+        "u": pa.array([1, 2**63 + 5, 2, None], pa.uint64()),
+        "f": pa.array([-1.0, -2.0, 3.5, None], pa.float64()),
+    })
+    block, rows = encode_batch(batch, 0, 0, {}, {})
+    got = {r["name"]: (r["min_i64"], r["max_i64"]) for r in rows}
+    assert got == {"i": (-7, 12), "u": (None, None), "f": (None, None)}
+    assert (block["mn_i"], block["mx_i"]) == (-7, 12)
+    assert block["mn_u"] is block["mx_u"] is block["mn_f"] is block["mx_f"] is None
+
+    # the same values through Spark and the metadata-only aggregate
+    src = spark.createDataFrame([Row(k=k, f=f) for k, f in
+                                 [(3, -1.0), (-7, -2.0), (12, 3.5)]])
+    out = str(tmp_path / "zm")
+    encode_table(plan_generic(src, 2, "k"), out)
+    stats = {r["name"]: (r["min_i64"], r["max_i64"])
+             for r in meta_column_stats(spark, out).collect()}
+    assert stats == {"k": (-7, 12), "f": (None, None)}
+
+
 @pytest.mark.parametrize("table,key", [
     ("documents", "doc_id"),
     ("events", "event_id"),
@@ -99,13 +132,12 @@ def test_testdata_roundtrip(spark, tmp_path, table, key):
 def test_resume_skips_committed_partitions(spark, tmp_path):
     out = str(tmp_path / "resume")
     df = webtext_df(spark, 5_000, seed=7, partitions=2)
-    pdf = plan_webtext(df, n_parts=4)
-    encode_table(pdf, out)
+    encode_webtext(df, out, n_parts=4)
     files = sorted(glob.glob(os.path.join(out, "blocks", "*.parquet")))
     mtimes = {f: os.path.getmtime(f) for f in files}
     # simulate a torn partition: remove one data file (its marker goes stale)
     os.remove(files[0])
-    encode_table(pdf, out)  # resume run
+    encode_webtext(df, out, n_parts=4)  # resume run
     files2 = sorted(glob.glob(os.path.join(out, "blocks", "*.parquet")))
     assert files2 == files
     for f in files[1:]:
@@ -138,8 +170,6 @@ def test_encode_reproducible_across_runs(spark, tmp_path):
     """Two independent fresh encodes of the same input produce identical
     manifests (codecs, byte counts, checksums) — the determinism rule that
     makes checksums and resume meaningful (SURVEY §4)."""
-    from mapbox_vector_tile_java_spark.operators.encode import encode_webtext
-
     df = webtext_df(spark, 4_000, seed=42, partitions=4)
     outs = []
     for run in ("a", "b"):
@@ -156,8 +186,6 @@ def test_encode_reproducible_across_runs(spark, tmp_path):
 def test_empty_and_single_row_tables(spark, tmp_path):
     """Zero-row input produces a decodable empty table (the encode job has
     no tasks, so no block files exist); one row round-trips."""
-    from mapbox_vector_tile_java_spark.operators.encode import encode_webtext
-
     empty = webtext_df(spark, 0, seed=1, partitions=2)
     out_e = str(tmp_path / "empty")
     encode_webtext(empty, out_e, n_parts=2)
@@ -170,3 +198,32 @@ def test_empty_and_single_row_tables(spark, tmp_path):
     out_1 = str(tmp_path / "one")
     encode_webtext(one, out_1, n_parts=2)
     verify_roundtrip(one, decode_table(spark, out_1))
+
+
+def test_all_bytes_overridden_runs_no_sampling_job(spark, tmp_path, monkeypatch):
+    """Planning samples only for bytes columns without an override: with
+    every one overridden, encode_table starts no sampling job."""
+    def no_sample(df):
+        raise AssertionError("collect_sample ran")
+
+    monkeypatch.setattr(codec_plan, "collect_sample", no_sample)
+    bytes_cols = ("url", "html", "text", "lang")
+    src = webtext_df(spark, 2_000, seed=3, partitions=2)
+    out = str(tmp_path / "overridden")
+    encode_table(plan_webtext(src, 4, hot_hosts={}), out,
+                 codec_overrides={c: ("dict_bytes", None) for c in bytes_cols})
+    verify_roundtrip(src, decode_table(spark, out))
+    pairs = read_manifest(spark, out).select("name", "codec").distinct().collect()
+    assert {r["codec"] for r in pairs if r["name"] in bytes_cols} == {"dict_bytes"}
+
+
+def test_global_codec_override_rejected(spark, tmp_path):
+    """Global codecs need planner-persisted symbol tables; a caller
+    override naming one is refused before anything is written."""
+    src = webtext_df(spark, 100, seed=3, partitions=1)
+    out = str(tmp_path / "global_override")
+    with pytest.raises(ValueError, match="dict_global"):
+        encode_table(plan_webtext(src, 2, hot_hosts={}), out,
+                     codec_overrides={"lang": ("dict_global", {
+                         "symbols": [b"en"], "symtab_id": 0})})
+    assert not os.path.exists(out)
