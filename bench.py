@@ -1,7 +1,7 @@
-"""Benchmark harness. Prints ONE JSON line:
+"""Benchmark harness. Prints ONE compact JSON line (under 2,000 chars):
 
-  {"metric": "headline_suite_wall", "value": <sec>, "unit": "sec",
-   "queries": {<name>: <sec>, ...}, "sf": <float>, ...extras}
+  {"metric":"headline_suite_wall","value":<sec>,"unit":"sec",
+   "queries":{<name>:<min sec>,...},"sf":<float>,...extras}
 
 Headline = the codec engine on the synthetic Common-Crawl-style webtext
 table at a size proportional to SF (sf * 1M rows), plus the operator suite
@@ -9,7 +9,9 @@ on the driver-provided parquet tables at $SPARK_GRAFT_SF_DIR.
 
 Extras recorded for BASELINE.md: encode/decode GB/s, compression ratio, and
 the parquet+zstd baseline size of the identical table (the
-"reference-discipline generic codec" bound from BASELINE.md).
+"reference-discipline generic codec" bound from BASELINE.md). Every draw
+behind each min (the ``*_runs`` arrays) and the re-drawn query lists go to
+``bench_runs.json`` next to this file.
 """
 
 from __future__ import annotations
@@ -28,6 +30,24 @@ apply_malloc_env()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+RUNS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "bench_runs.json")
+
+SUITE = [
+    "q1_pricing_summary", "stats_lang_hist", "window_user_deltas",
+    "join_orders_customers", "agg_source_stats", "text_token_stats",
+    "text_quality", "lang_id_stopwords", "doc_fingerprints",
+    "doc_fingerprints_rolling", "doc_fingerprints_winnow",
+    "dedup_exact", "dedup_minhash_lsh",
+    "dedup_simhash", "dedup_embedding_cosine", "dedup_embedding_srp",
+    "dedup_ngram_lsh_verified", "dedup_winnow_candidates",
+    "dedup_ngram_winnow_verified", "dedup_incremental",
+    "ann_bruteforce_topk",
+    "ann_ivf_topk", "ann_ivf_recall", "roundtrip_lineitem",
+    "roundtrip_events", "roundtrip_struct_props", "roundtrip_decimal",
+    "text_bpe_tokens", "media_features", "transform_simplify_quantize",
+    "compaction_roundtrip", "meta_only_stats",
+]
 
 
 def main():
@@ -229,27 +249,12 @@ def main():
     overrides = {"compaction_roundtrip": _bench_compaction,
                  "meta_only_stats": _bench_meta_stats}
 
-    suite = [
-        "q1_pricing_summary", "stats_lang_hist", "window_user_deltas",
-        "join_orders_customers", "agg_source_stats", "text_token_stats",
-        "text_quality", "lang_id_stopwords", "doc_fingerprints",
-        "doc_fingerprints_rolling", "doc_fingerprints_winnow",
-        "dedup_exact", "dedup_minhash_lsh",
-        "dedup_simhash", "dedup_embedding_cosine", "dedup_embedding_srp",
-        "dedup_ngram_lsh_verified", "dedup_winnow_candidates",
-        "dedup_ngram_winnow_verified", "dedup_incremental",
-        "ann_bruteforce_topk",
-        "ann_ivf_topk", "ann_ivf_recall", "roundtrip_lineitem",
-        "roundtrip_events", "roundtrip_struct_props", "roundtrip_decimal",
-        "text_bpe_tokens", "media_features", "transform_simplify_quantize",
-        "compaction_roundtrip", "meta_only_stats",
-    ]
     # two INTERLEAVED full passes (not back-to-back repeats): a noise burst
     # then inflates single runs scattered across queries instead of both
     # runs of whichever query it lands on — min-of-2 per query stays clean.
     # ann_ivf_* runs reuse the index built (and timed) above as
     # ann_ivf_build, so they measure pure query cost.
-    suite_runs: dict[str, list[float]] = {n: [] for n in suite}
+    suite_runs: dict[str, list[float]] = {n: [] for n in SUITE}
     pass_eff: list[float] = []
 
     def _draw(name):
@@ -261,14 +266,14 @@ def main():
     for _pass in range(2):
         # per-pass ambient-load signal alongside the walls it contextualizes
         pass_eff.append(round(probe_effective_parallelism(), 3))
-        for name in suite:
+        for name in SUITE:
             _draw(name)
     # re-draw queries with no two consistent quiet samples yet: when the two
     # BEST draws disagree >2x, at least one pass was load-polluted for this
     # query (VERDICT r04: minhash drew 6.7/9.8 while a quiet window gives
     # 1.8) — extra interleaved draws give min-of-N a later, quieter window
     for _extra in range(2):
-        noisy = [n for n in suite
+        noisy = [n for n in SUITE
                  if sorted(suite_runs[n])[1] > 2.0 * min(suite_runs[n])]
         if not noisy:
             break
@@ -277,16 +282,30 @@ def main():
         for name in noisy:
             _draw(name)
     extras["bw_probe_pass_eff"] = pass_eff
-    for name in suite:
+    for name in SUITE:
         timings[name] = min(suite_runs[name])
         extras[f"{name}_runs"] = suite_runs[name]
 
-    total = round(sum(timings.values()), 3)
-    out = {"metric": "headline_suite_wall", "value": total, "unit": "sec",
-           "queries": timings, "sf": sf, "webtext_rows": n_webtext, **extras}
-    print(json.dumps(out))
+    line, runs = split_record(timings, extras, sf, n_webtext)
+    with open(RUNS_PATH, "w") as f:
+        json.dump(runs, f)
+    print(line)
     shutil.rmtree(work, ignore_errors=True)
     spark.stop()
+
+
+def split_record(timings: dict, extras: dict, sf: float,
+                 n_webtext: int) -> tuple[str, dict]:
+    """(line, runs): the compact JSON line to print (headline, per-query
+    min, ratio, bytes and probe) and the per-draw arrays for the side file,
+    which would push the line past what a log tail keeps."""
+    runs = {k: v for k, v in extras.items()
+            if k.endswith("_runs") or k == "redrawn"}
+    out = {"metric": "headline_suite_wall",
+           "value": round(sum(timings.values()), 3), "unit": "sec",
+           "queries": timings, "sf": sf, "webtext_rows": n_webtext,
+           **{k: v for k, v in extras.items() if k not in runs}}
+    return json.dumps(out, separators=(",", ":")), runs
 
 
 def _dir_bytes(d: str) -> int:

@@ -359,26 +359,6 @@ def from_full_bytes(buf: bytes) -> SymbolTable:
 # ---------------------------------------------------------------------------
 # training
 
-def _merge_pass(toks: np.ndarray, a: int, b: int, t: int) -> np.ndarray:
-    """Replace adjacent (a, b) token pairs with token t, one vectorized pass.
-    Overlaps (a == b) resolved greedily left-to-right via run parity."""
-    if len(toks) < 2:
-        return toks
-    m = np.flatnonzero((toks[:-1] == a) & (toks[1:] == b))
-    if len(m) == 0:
-        return toks
-    if a == b:
-        first = np.empty(len(m), dtype=bool)
-        first[0] = True
-        np.not_equal(np.diff(m), 1, out=first[1:])
-        run_start = m[np.maximum.accumulate(np.where(first, np.arange(len(m)), 0))]
-        m = m[(m - run_start) % 2 == 0]
-    toks[m] = t
-    keep = np.ones(len(toks), dtype=bool)
-    keep[m + 1] = False
-    return toks[keep]
-
-
 def spread_sample(data: np.ndarray, cap: int, k: int = 16) -> np.ndarray:
     """Deterministic diverse sample: k evenly spaced chunks totalling cap."""
     chunk = cap // k
@@ -397,7 +377,9 @@ def train(
     merge_cap: int = 1 << 17,
 ) -> SymbolTable:
     """Train a table: pair-merge candidate generation + encoder-aligned
-    refinement. Deterministic (ties break to the smallest pair key).
+    refinement. Deterministic (ties break to the smallest pair key); the
+    tables must equal those of the reference trainer in
+    ``tests/fsst_reference.py`` symbol for symbol (wire bytes depend on them).
 
     The merge loop costs O(rounds * tokens) — it runs on a smaller
     sub-sample (merge_cap) than the refinement parse (sample_cap): candidate
@@ -411,33 +393,50 @@ def train(
     toks = msample.astype(np.int32)
     tok_bytes: list[bytes] = [bytes([i]) for i in range(256)]
     ntok = 256 + max_rounds
-    tok_lens = np.ones(ntok, dtype=np.int64)
+    tok_lens = np.ones(ntok, dtype=np.int32)
     min_count = max(4, int(len(msample) * min_count_frac))
-    # dense pair-count grid instead of per-round sort-based np.unique: the
-    # key domain is ntok^2 (~380k), so one bincount + one argmax per round.
-    # Selection is IDENTICAL to the sorted-unique version: argmax over the
-    # dense ascending-key array returns the smallest (a, b) with the max
-    # valid count — the same tie-break np.unique's sorted keys gave.
-    # `valid` (la + lb <= MAX_SYMBOL_LEN) is maintained incrementally: one
-    # row + one column update when a token is created.
-    valid = np.zeros((ntok, ntok), dtype=bool)
-    valid[:256, :256] = True  # 1 + 1 <= MAX_SYMBOL_LEN
-    for _ in range(max_rounds):
-        if len(toks) < 2:
-            break
-        keys = toks[:-1] * np.int32(ntok) + toks[1:]
-        counts = np.bincount(keys, minlength=ntok * ntok)
-        counts[~valid.ravel()[: len(counts)]] = 0
-        best = int(np.argmax(counts))
+
+    def pair_keys(pos: np.ndarray) -> np.ndarray:
+        """Keys a * ntok + b of the pairs (toks[p], toks[p + 1]), p in pos,
+        that could merge (la + lb <= MAX_SYMBOL_LEN); only those are
+        counted. Positions with no pair are dropped."""
+        pos = pos[(pos >= 0) & (pos < len(toks) - 1)]
+        a, b = toks[pos], toks[pos + 1]
+        ok = tok_lens[a] + tok_lens[b] <= MAX_SYMBOL_LEN
+        return a[ok] * np.int32(ntok) + b[ok]
+
+    # Incremental pair counts (standard BPE): count every adjacent pair once,
+    # then per merge retire the pairs that touch a merge site and count the
+    # pairs the new token forms. A pair's validity depends only on token
+    # lengths, which never change, so retiring and counting agree on it.
+    # argmax over the dense ascending-key prefix of existing tokens returns
+    # the smallest (a, b) among the max counts: ties break to the smallest
+    # pair key. int32 counts (bounded by len(msample)) halve argmax's bytes.
+    counts = np.bincount(pair_keys(np.arange(len(toks) - 1)),
+                         minlength=ntok * ntok).astype(np.int32)
+    for t in range(256, ntok):
+        best = int(np.argmax(counts[: t * ntok]))
         if counts[best] < min_count:
             break
         a, b = divmod(best, ntok)
-        t = len(tok_bytes)
         tok_bytes.append(tok_bytes[a] + tok_bytes[b])
         tok_lens[t] = len(tok_bytes[t])
-        valid[t, :] = tok_lens[t] + tok_lens <= MAX_SYMBOL_LEN
-        valid[:, t] = tok_lens + tok_lens[t] <= MAX_SYMBOL_LEN
-        toks = _merge_pass(toks, a, b, t)
+        m = np.flatnonzero((toks[:-1] == a) & (toks[1:] == b))
+        if a == b:  # overlapping runs merge greedily left to right
+            first = np.empty(len(m), dtype=bool)
+            first[0] = True
+            np.not_equal(np.diff(m), 1, out=first[1:])
+            run_start = m[np.maximum.accumulate(
+                np.where(first, np.arange(len(m)), 0))]
+            m = m[(m - run_start) % 2 == 0]
+        np.subtract.at(counts, pair_keys(np.unique(
+            np.concatenate((m - 1, m, m + 1)))), 1)
+        toks[m] = t
+        keep = np.ones(len(toks), dtype=bool)
+        keep[m + 1] = False
+        toks = toks[keep]
+        j = m - np.arange(len(m))  # merge sites in the compacted tokens
+        np.add.at(counts, pair_keys(np.unique(np.concatenate((j - 1, j)))), 1)
 
     # candidate pool: every distinct multi-byte token + frequent single bytes
     cand = sorted(set(s for s in tok_bytes[256:]))

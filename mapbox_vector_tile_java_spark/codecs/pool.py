@@ -17,18 +17,9 @@ output-size formulas instead of growing them per feature
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 
-_TLS = threading.local()
-
-
-def _pool() -> dict[str, np.ndarray]:
-    p = getattr(_TLS, "pool", None)
-    if p is None:
-        p = _TLS.pool = {}
-    return p
+_POOL: dict[str, np.ndarray] = {}
 
 
 def pbuf(name: str, n: int, dtype=np.uint8) -> np.ndarray:
@@ -36,22 +27,17 @@ def pbuf(name: str, n: int, dtype=np.uint8) -> np.ndarray:
 
     Contents are arbitrary (caller must fill). Grow-only, power-of-two
     capacity; pages are pre-faulted on (re)allocation so the one-time cost
-    never lands inside a timed kernel region. Thread-local: the driver-side
-    planner runs codec trials on several columns concurrently (executor
-    python workers are single-threaded, so there the pool is per-process
-    as before).
+    never lands inside a timed kernel region. One pool per process: every
+    caller is single-threaded (executor python workers, and the codec
+    planner, which plans columns one at a time), so the planner's buffers
+    also persist from one encode to the next.
     """
     dt = np.dtype(dtype)
     need = int(n) * dt.itemsize
-    pool = _pool()
-    a = pool.get(name)
+    a = _POOL.get(name)
     if a is None or a.nbytes < need:
         cap = 1 << max(20, (need - 1).bit_length())
         a = np.empty(cap, dtype=np.uint8)
         a[:: 4096] = 0  # pre-fault every page
-        pool[name] = a
+        _POOL[name] = a
     return a[:need].view(dt)
-
-
-def pool_clear() -> None:
-    _pool().clear()

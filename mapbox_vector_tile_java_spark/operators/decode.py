@@ -193,12 +193,14 @@ def meta_column_stats(spark, out_dir: str):
     from pyspark.sql import functions as F
 
     m = read_manifest(spark, out_dir)
+    # one row per column: sort it in one partition; a global orderBy would
+    # range-partition it, sampling the ranges in jobs of their own
     return (m.groupBy("name")
             .agg(F.sum("n_rows").alias("n_rows"),
                  F.sum("null_count").alias("null_count"),
                  F.min("min_i64").alias("min_i64"),
                  F.max("max_i64").alias("max_i64"))
-            .orderBy("name"))
+            .coalesce(1).sortWithinPartitions("name"))
 
 
 def compression_report(spark, out_dir: str):
@@ -212,4 +214,4 @@ def compression_report(spark, out_dir: str):
                  F.count("*").alias("n_blocks"),
                  F.first("codec").alias("example_codec"))
             .withColumn("ratio", F.col("raw_bytes") / F.col("enc_bytes"))
-            .orderBy("name"))
+            .coalesce(1).sortWithinPartitions("name"))

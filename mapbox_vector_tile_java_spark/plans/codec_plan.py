@@ -110,7 +110,7 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
         lens, data = _bytes_parts(nn)
         n = len(lens)
         if n == 0 or len(data) < FSST_MIN_DATA:
-            return col, None
+            return None
         raw_size = int(len(data)) + n
         best = ("raw_bytes", raw_size, {}, None)  # name, est, params, symbols
 
@@ -125,12 +125,20 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
             if est < best[1]:
                 best = ("dict_global", est, {"symbols": symbols}, symbols)
 
+        # FSST's estimate is at least n, so when the dictionary already fits
+        # in n bytes and no tok_dict trial is due, training cannot change the
+        # choice: skip it
+        trial = (data if len(data) <= TRIAL_BYTES
+                 else fsstmod.spread_sample(data, TRIAL_BYTES))
+        n_sep = int((np.asarray(trial) == 0x20).sum())
+        tok_trial = n_sep >= 0.02 * len(trial)
+        if best[1] <= n and not tok_trial:
+            return (*best, n)
+
         # FSST candidate: train once on a spread sample
         train_data = (data if len(data) <= FSST_TRAIN_BYTES
                       else fsstmod.spread_sample(data, FSST_TRAIN_BYTES))
         table = fsstmod.train(train_data)
-        trial = (data if len(data) <= TRIAL_BYTES
-                 else fsstmod.spread_sample(data, TRIAL_BYTES))
         comp = table.compress(trial)
         # all candidate estimates below are at sample scale (len(data) is the
         # sample's bytes), so they compare like-for-like with raw_size
@@ -141,29 +149,19 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
 
         # tok_dict candidate (self-contained blocks; shared table for its
         # inline token-table compression)
-        n_sep = int((np.asarray(trial) == 0x20).sum())
-        if n_sep >= 0.02 * len(trial):
+        if tok_trial:
             s_lens, s_data = row_sample(lens, data, TRIAL_BYTES)
             blob = _tokd_encode((s_lens, s_data), {"fsst_table": table})
             tok_est = int(len(blob) * (len(data) / max(len(s_data), 1)))
             if tok_est < best[1]:
                 best = ("tok_dict", tok_est, {"fsst_table": table},
                         list(table.symbols))
-        return col, (*best, n)
+        return (*best, n)
 
-    # plan columns concurrently: training/trials are big-array numpy work
-    # (GIL mostly released) and this is the job's only serial driver-side
-    # section — it bounds scaling efficiency at small data sizes
-    if len(cols) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(cols))) as ex:
-            results = dict(ex.map(plan_col, cols))
-    else:
-        results = dict(map(plan_col, cols))
-
-    for col in cols:  # deterministic sid assignment in schema order
-        r = results[col]
+    # one column at a time, in schema order (deterministic sids): FSST
+    # training holds the GIL, so planning columns on threads only adds CPU
+    for col in cols:
+        r = plan_col(col)
         if r is None:
             continue
         name, est, params, symbols, n = r

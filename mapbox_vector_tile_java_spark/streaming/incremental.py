@@ -240,23 +240,23 @@ def content_fingerprint(df: DataFrame) -> tuple[int, int]:
     partition + a single-row final combine — the cheapest whole-content
     equality check that does not ship any data anywhere.
 
-    The row hash is a sum of POSITION-BOUND column hashes
-    (xxhash64(ordinal, value)), not one xxhash64 over all columns:
-    Spark's hash functions skip NULL arguments, so the single-call form
-    would hash (NULL, 'a') and ('a', NULL) identically — a null shifted
-    across columns would go undetected, and this fingerprint gates
-    deletion. Binding each column to its ordinal keeps a NULL's position
-    in the row observable (hash(i) is a column-specific constant).
+    The row hash is ONE xxhash64 over the row's POSITION-BOUND column
+    hashes (xxhash64(ordinal, value)). Binding each column to its ordinal
+    keeps a NULL's position in the row observable: Spark's hash functions
+    skip NULL arguments, so a bare xxhash64 over the columns would hash
+    (NULL, 'a') and ('a', NULL) identically, while the inner hashes are
+    never NULL. Hashing them together binds the columns to their row: a
+    sum of per-column hashes factorizes per column, so two values swapped
+    between rows of one column would leave it unchanged — and this
+    fingerprint gates deletion.
     """
     from pyspark.sql import functions as F
 
-    row_hash = sum(
-        (F.xxhash64(F.lit(i), F.col(c)).cast("decimal(38,0)")
-         for i, c in enumerate(df.columns)),
-        start=F.lit(0).cast("decimal(38,0)"))
+    row_hash = F.xxhash64(*[F.xxhash64(F.lit(i), F.col(c))
+                            for i, c in enumerate(df.columns)])
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(row_hash).alias("fp")).first()
+        F.sum(row_hash.cast("decimal(38,0)")).alias("fp")).first()
     return int(row["n"]), int(row["fp"] or 0)
 
 

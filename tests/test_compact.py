@@ -382,6 +382,55 @@ def test_verify_and_reap_deletes_only_on_match(spark, tmp_path):
     assert content_fingerprint(na) != content_fingerprint(nb)
 
 
+def test_content_fingerprint_binds_values_to_rows(spark):
+    """Two values swapped between rows of one column change the
+    fingerprint: a sum of per-column hashes would factorize per column and
+    miss the swap."""
+    from mapbox_vector_tile_java_spark.streaming.incremental import (
+        content_fingerprint)
+
+    a = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    b = spark.createDataFrame([(1, "b"), (2, "a")], "k long, v string")
+    assert content_fingerprint(a)[0] == content_fingerprint(b)[0] == 2
+    assert content_fingerprint(a) != content_fingerprint(b)
+
+
+def test_verify_and_reap_catches_swapped_values(spark, tmp_path):
+    """A compacted segment re-encoded from its own rows with two text values
+    swapped between rows keeps every column's multiset of values;
+    verify_and_reap must still refuse to reap its sources."""
+    import shutil
+
+    from mapbox_vector_tile_java_spark.streaming.incremental import (
+        verify_and_reap)
+
+    root = str(tmp_path / "tbl")
+    src = webtext_df(spark, 300, seed=13, partitions=2)
+    for k in range(2):
+        encode_webtext(src.where(F.pmod(F.xxhash64("url"), F.lit(2)) == k),
+                       os.path.join(root, f"segment={k}"), n_parts=2)
+    dst = str(tmp_path / "compacted")
+    compact_segments(spark, root, dst, n_parts=2)
+    comp = promote_compacted(root, dst)
+    rows = decode_table(spark, comp)
+    (u1, t1), (u2, t2) = [
+        (r["url"], r["text"]) for r in rows.where(F.length("text") > 0)
+        .orderBy("url").limit(2).collect()]
+    assert t1 != t2
+    swapped = rows.withColumn(
+        "text", F.when(F.col("url") == u1, F.lit(t2))
+        .when(F.col("url") == u2, F.lit(t1)).otherwise(F.col("text")))
+    redo = str(tmp_path / "swapped")
+    encode_webtext(swapped, redo, n_parts=2)
+    shutil.rmtree(comp)
+    shutil.move(redo, comp)
+    aside_root = os.path.join(root, ".pre_compact")
+    (aside,) = os.listdir(aside_root)
+    with pytest.raises(ValueError, match="does not match"):
+        verify_and_reap(spark, root)
+    assert os.path.isdir(os.path.join(aside_root, aside))  # kept for recovery
+
+
 def test_promote_refuses_missing_snapshot_segment(spark, segmented, tmp_path):
     """Promote raises (rather than silently dropping data) when a snapshot
     segment vanished between compact and promote."""
@@ -425,3 +474,19 @@ def test_meta_column_stats_exact(spark, tmp_path):
     assert got["warc_ts"]["max_i64"] == exp["ts_max"]
     # bytes-like columns carry no zone map
     assert got["url"]["min_i64"] is None and got["text"]["max_i64"] is None
+
+
+def test_meta_column_stats_sorts_without_range_jobs(spark, tmp_path):
+    """The one-row-per-column stats are sorted in one partition: no
+    range-partitioning jobs, at most 3 jobs for the whole collect."""
+    enc = str(tmp_path / "enc")
+    encode_webtext(webtext_df(spark, 400, seed=3, partitions=2), enc,
+                   n_parts=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("meta_stats_jobs", "meta_stats_jobs")
+    try:
+        names = [r["name"] for r in meta_column_stats(spark, enc).collect()]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert names == sorted(["url", "warc_ts", "html", "text", "lang"])
+    assert len(sc.statusTracker().getJobIdsForGroup("meta_stats_jobs")) <= 3
