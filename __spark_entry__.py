@@ -61,17 +61,11 @@ _MINHASH_IDX_CACHE: dict[str, str] = {}
 
 def _minhash_idx_dir(sf_dir: str) -> str:
     """Write-once minhash signature index dir for the incremental-dedup
-    query (same per-sf_dir cache discipline as the IVF index). Registered
-    with dedup's temp reaper; the query rebuilds on a missing marker, so
-    an early cleanup self-heals."""
+    query (same per-sf_dir cache discipline as the IVF index). A dedup
+    ``temp_dir``; the query rebuilds on a missing marker, so an early
+    cleanup self-heals."""
     if sf_dir not in _MINHASH_IDX_CACHE:
-        d = tempfile.mkdtemp(prefix="mvt_mh_idx_")
-        if not D._FP_TMP_DIRS:
-            import atexit
-
-            atexit.register(D.cleanup_temp_dirs)
-        D._FP_TMP_DIRS.append(d)
-        _MINHASH_IDX_CACHE[sf_dir] = d
+        _MINHASH_IDX_CACHE[sf_dir] = D.temp_dir("mvt_mh_idx_")
     return _MINHASH_IDX_CACHE[sf_dir]
 
 
@@ -81,16 +75,9 @@ def _gram_dir(sf_dir: str) -> str:
     per-doc gram records over documents.text (k=3), so whichever runs
     first materializes the stage and the other reuses it (the
     ``build_gram_records`` marker protocol). Same write-once/read-many
-    discipline as the IVF index dir above."""
+    discipline as the IVF index dir above; a dedup ``temp_dir``."""
     if sf_dir not in _GRAM_CACHE:
-        d = tempfile.mkdtemp(prefix="mvt_gramshare_")
-        # reaped by dedup's atexit backstop like its own temp stages
-        if not D._FP_TMP_DIRS:
-            import atexit
-
-            atexit.register(D.cleanup_temp_dirs)
-        D._FP_TMP_DIRS.append(d)
-        _GRAM_CACHE[sf_dir] = d
+        _GRAM_CACHE[sf_dir] = D.temp_dir("mvt_gramshare_")
     return _GRAM_CACHE[sf_dir]
 
 

@@ -126,7 +126,11 @@ def _bytes_array(lens: np.ndarray, data: np.ndarray) -> pa.Array:
     )
 
 
-def _array_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+def _bytes_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Non-null varbinary arrow array -> (lengths int64, data uint8):
+    zero-copy views of its large_binary offsets and data buffers."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
     arr = arr.cast(pa.large_binary())
     o = np.frombuffer(arr.buffers()[1], dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(arr.buffers()[2] or b"", dtype=np.uint8)[o[0] : o[-1]]
@@ -139,7 +143,7 @@ def _dictb_encode(inp: tuple[np.ndarray, np.ndarray], params: dict) -> bytes:
     enc = arr.dictionary_encode()
     table = enc.dictionary
     idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    t_lens, t_data = _array_parts(table)
+    t_lens, t_data = _bytes_parts(table)
     parts: list[bytes] = []
     put_uvarint(parts, len(table))
     parts.append(encode_int_sub(t_lens))
@@ -363,7 +367,7 @@ def _tokd_encode(inp: tuple[np.ndarray, np.ndarray], params: dict) -> bytes:
         [None, pa.py_buffer(tofs.tobytes()), pa.py_buffer(values.tobytes())])
     denc = tok_arr.dictionary_encode()
     ids = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    t_lens, t_data = _array_parts(denc.dictionary)
+    t_lens, t_data = _bytes_parts(denc.dictionary)
 
     # frequency remap: hot tokens -> small ids -> 1-byte varints.
     # deterministic: stable sort, ties keep first-occurrence order.

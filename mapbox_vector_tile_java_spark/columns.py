@@ -45,7 +45,7 @@ import pyarrow as pa
 
 from .codecs import base
 from .codecs.base import ByteReader, by_id, by_name
-from .codecs.bytescodecs import decode_int_sub, encode_int_sub
+from .codecs.bytescodecs import _bytes_parts, decode_int_sub, encode_int_sub
 from .codecs.primitives import pack_validity, unpack_validity, varint_encode_one
 from .codecs.selector import choose_bytes_codec, choose_int_codec
 
@@ -148,17 +148,6 @@ def _from_int64(vals: np.ndarray, t: pa.DataType, valid: np.ndarray) -> pa.Array
     vbuf = None if nulls == 0 else pa.py_buffer(pack_validity(valid))
     return pa.Array.from_buffers(t, n, [vbuf, pa.py_buffer(ticks.tobytes())],
                                  null_count=nulls)
-
-
-def _bytes_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Non-null varbinary arrow array -> (lengths int64, data uint8)."""
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    arr = arr.cast(pa.large_binary())
-    o = np.frombuffer(arr.buffers()[1], dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
-    data_buf = arr.buffers()[2]
-    data = (np.frombuffer(data_buf, dtype=np.uint8)[o[0] : o[-1]]
-            if data_buf is not None else np.empty(0, dtype=np.uint8))
-    return np.diff(o), data
 
 
 def _build_varbin(t: pa.DataType, lens: np.ndarray, data: np.ndarray,

@@ -24,13 +24,16 @@ rows during encode; dedup is an explicit operator).
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..codecs.bytescodecs import _bytes_parts
+from ..plans.manifest import read_marker, write_marker
+from .similarity import _norms_seq
 
 MERSENNE = (1 << 61) - 1
 
@@ -49,11 +52,7 @@ def _bytes_view(txt: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     non-null rows, concatenated data bytes). Zero-copy views."""
     valid = (txt.is_valid().to_numpy(zero_copy_only=False)
              if txt.null_count else np.ones(len(txt), dtype=bool))
-    nn = txt.drop_null().cast(pa.large_binary())
-    o = np.frombuffer(nn.buffers()[1], dtype=np.int64)[nn.offset : nn.offset + len(nn) + 1]
-    data = (np.frombuffer(nn.buffers()[2] or b"", dtype=np.uint8)[o[0] : o[-1]]
-            if len(nn) else np.empty(0, dtype=np.uint8))
-    return valid, np.diff(o), data
+    return (valid, *_bytes_parts(txt.drop_null()))
 
 
 # ---------------------------------------------------------------------------
@@ -259,9 +258,11 @@ def band_pairs(df: DataFrame, keys: list, probe: DataFrame | None = None
 _MINHASH_IDX_MARKER = "_MINHASH_OK"
 
 
-def _read_idx_marker(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, _MINHASH_IDX_MARKER)) as fh:
-        return json.load(fh)
+def _index_params(index_dir: str) -> dict:
+    p = read_marker(os.path.join(index_dir, _MINHASH_IDX_MARKER))
+    if p is None:
+        raise FileNotFoundError(f"no committed minhash index at {index_dir}")
+    return p
 
 
 def build_minhash_index(df: DataFrame, text_col: str, id_col: str,
@@ -282,12 +283,8 @@ def build_minhash_index(df: DataFrame, text_col: str, id_col: str,
     spark = df.sparkSession
     minhash_signatures(df, text_col, id_col, num_perm, shingle_k,
                        seed).write.mode("overwrite").parquet(index_dir)
-    marker = os.path.join(index_dir, _MINHASH_IDX_MARKER)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"num_perm": num_perm, "shingle_k": shingle_k,
-                   "seed": seed}, fh)
-    os.replace(tmp, marker)
+    write_marker(os.path.join(index_dir, _MINHASH_IDX_MARKER),
+                 {"num_perm": num_perm, "shingle_k": shingle_k, "seed": seed})
     return spark.read.parquet(index_dir)
 
 
@@ -297,7 +294,7 @@ def minhash_index_append(new_df: DataFrame, text_col: str, id_col: str,
     batch passed ``dedup_incremental`` and was admitted to the corpus).
     Parameters come from the index marker, so appended signatures are
     always comparable with the existing ones."""
-    p = _read_idx_marker(index_dir)
+    p = _index_params(index_dir)
     minhash_signatures(new_df, text_col, id_col, p["num_perm"],
                        p["shingle_k"], p["seed"]).write.mode(
                            "append").parquet(index_dir)
@@ -327,7 +324,7 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     Accepted workflow: drop/keep decisions from the returned pairs, then
     ``minhash_index_append`` the admitted rows.
     """
-    p = _read_idx_marker(index_dir)
+    p = _index_params(index_dir)
     keys = _minhash_band_keys(p["num_perm"], bands, hashed=True)
     spark = corpus_df.sparkSession
     new_sig = _materialize_fp(
@@ -345,30 +342,35 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
                                 gram_dir=gram_dir)
 
 
-def _spread(df: DataFrame, n_parts: int | None = None) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Repartition up to the session's parallelism when the input scan is
     too narrow (e.g. one parquet file) — otherwise the vectorized
-    fingerprint kernels run on a single core.
+    fingerprint kernels run on a single core. The width probe is the
+    planner's metadata-only ``estimate_width`` (file count — parquet is
+    splittable, so it under-counts, never over-counts, width — or the
+    session parallelism for an input Spark lists no files for)."""
+    from ..plans.codec_plan import estimate_width
 
-    The width probe is metadata-only: ``df.inputFiles()`` lists the leaf
-    scan's files without running a job or converting the plan to an RDD
-    (``df.rdd.getNumPartitions()`` forces a DataFrame->RDD conversion — an
-    avoidable analysis pass on a 100 TB plan). A file-backed input with at
-    least ``target`` files is already wide (parquet is additionally
-    splittable, so this under-counts, never over-counts, width); inputs
-    Spark can't enumerate files for are conservatively respread. Callers
-    that know their partitioning pass ``n_parts`` explicitly."""
-    target = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files >= target:
-        return df
-    return df.repartition(target)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df if estimate_width(df) >= target else df.repartition(target)
 
 
 _FP_TMP_DIRS: list[str] = []
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh temp dir that ``cleanup_temp_dirs`` removes — explicitly, or
+    at interpreter exit as the backstop. It must outlive every DataFrame
+    that lazily re-reads its files, so nothing deletes it any earlier."""
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    if not _FP_TMP_DIRS:
+        import atexit
+
+        atexit.register(cleanup_temp_dirs)
+    _FP_TMP_DIRS.append(d)
+    return d
 
 
 def _materialize_fp(df: DataFrame, spark, prefix: str,
@@ -376,29 +378,18 @@ def _materialize_fp(df: DataFrame, spark, prefix: str,
     """Land a fingerprint/signature stage as a parquet temp table so the
     self-join reads it twice from storage instead of recomputing the
     python kernel per side or pinning an executor cache for the session.
-
-    Callers who pass ``work_dir`` own its lifecycle. Auto-created temp dirs
-    are tracked and removed at interpreter exit (they must outlive the
-    returned DataFrame, which lazily re-reads the files, so they cannot be
-    deleted any earlier)."""
-    import tempfile
-
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix=prefix)
-        if not _FP_TMP_DIRS:
-            import atexit
-
-            atexit.register(cleanup_temp_dirs)
-        _FP_TMP_DIRS.append(work_dir)
+    Callers who pass ``work_dir`` own its lifecycle; otherwise it is a
+    ``temp_dir``."""
+    work_dir = work_dir or temp_dir(prefix)
     df.write.mode("overwrite").parquet(work_dir)
     return spark.read.parquet(work_dir)
 
 
 def cleanup_temp_dirs() -> int:
-    """Remove every auto-created signature/gram temp dir NOW and return how
-    many were deleted. Long-lived driver sessions call this between dedup
-    batches so disk does not accumulate one dir per operator call; it also
-    runs once at interpreter exit as the backstop.
+    """Remove every ``temp_dir`` (signature/gram stages, cached index dirs)
+    NOW and return how many were deleted. Long-lived driver sessions call
+    this between dedup batches so disk does not accumulate one dir per
+    operator call; it also runs once at interpreter exit as the backstop.
 
     Only call after fully consuming (or persisting) the DataFrames the
     dedup operators returned — they lazily re-read these files."""
@@ -534,6 +525,9 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
                                 gram_dir=gram_dir)
 
 
+_GRAMS_MARKER = "_GRAMS_OK"
+
+
 def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
                        gram_dir: str) -> DataFrame:
     """Materialize (or reuse) the per-doc gram-record stage at ``gram_dir``.
@@ -543,25 +537,25 @@ def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
     ``exact_jaccard_verify`` — so when several routes run over one corpus
     (minhash-verified, winnow-verified, a cleaning pipeline), the stage is
     built ONCE and reused, exactly like the write-once IVF index. A
-    ``_GRAMS_OK`` marker (ignored by the parquet reader: leading
-    underscore) records the parameters; a parameter mismatch rebuilds and
-    overwrites. Callers own ``gram_dir``'s lifecycle; reuse across process
-    restarts is safe as long as the source table is unchanged (the same
-    contract as the IVF index dir and the encode resume markers)."""
+    ``_GRAMS_OK`` marker (``write_marker``; ignored by the parquet reader:
+    leading underscore) records the parameters and ``n_rows``, the record
+    count taken by one count of the written parquet, so a reuse needs no
+    count job. A parameter mismatch, or a marker that is missing or
+    unreadable, rebuilds and overwrites. Callers own ``gram_dir``'s
+    lifecycle; reuse across process restarts is safe as long as the source
+    table is unchanged (the same contract as the IVF index dir and the
+    encode resume markers)."""
     spark = df.sparkSession
-    marker = os.path.join(gram_dir, "_GRAMS_OK")
+    marker = os.path.join(gram_dir, _GRAMS_MARKER)
     want = {"k": int(k), "text_col": text_col, "id_col": id_col}
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if json.load(fh) == want:
-                return spark.read.parquet(gram_dir)
+    got = read_marker(marker) or {}
+    if got.pop("n_rows", None) is not None and got == want:
+        return spark.read.parquet(gram_dir)
     _gram_record_df(df, text_col, id_col, k).write.mode(
         "overwrite").parquet(gram_dir)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(want, fh)
-    os.replace(tmp, marker)
-    return spark.read.parquet(gram_dir)
+    recs = spark.read.parquet(gram_dir)
+    write_marker(marker, {**want, "n_rows": recs.count()})
+    return recs
 
 
 def rank_gram_block(recs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -649,19 +643,21 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     Exactness: vocabularies carry full gram bytes (length-prefixed, no
     hashing), and double division + half-away rounding match the ANSI
     oracle bit-for-bit.
+
+    The records come from ONE path, ``build_gram_records``: into
+    ``gram_dir`` when given (reused when its marker matches ``k`` and the
+    columns), else into a fresh ``temp_dir``. The hash-block count is sized
+    from the ``n_rows`` that marker records, so verify itself runs no count
+    job.
     """
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import (BinaryType, IntegerType, StructField,
                                    StructType)
 
     rw = 4 * k + 1
-    spark = df.sparkSession
-    if gram_dir is not None:
-        fp = build_gram_records(df, text_col, id_col, k, gram_dir)
-    else:
-        fp = _materialize_fp(_gram_record_df(df, text_col, id_col, k),
-                             spark, "mvt_gramrec_")
-    n = fp.count()  # parquet metadata count on the materialized stage
+    gram_dir = gram_dir or temp_dir("mvt_gramrec_")
+    fp = build_gram_records(df, text_col, id_col, k, gram_dir)
+    n = read_marker(os.path.join(gram_dir, _GRAMS_MARKER))["n_rows"]
     n_blocks = max(1, -(-n // block_rows))
     blk = lambda c: F.pmod(F.xxhash64(c), F.lit(n_blocks)).cast("int")
 
@@ -1143,15 +1139,6 @@ def embedding_srp_pairs(df: DataFrame, vec_col: str, id_col: str,
 
 # ---------------------------------------------------------------------------
 # embedding cosine near-dup
-
-def _norms_seq(M: np.ndarray) -> np.ndarray:
-    """Dimension-sequential L2 norms — the same left-to-right fold as the
-    ANSI-SQL oracle's sqrt(list_sum(x*x)), so values match bit-for-bit."""
-    acc = np.zeros(len(M))
-    for kdim in range(M.shape[1]):
-        acc += M[:, kdim] * M[:, kdim]
-    return np.sqrt(acc)
-
 
 def embedding_neardup_pairs(df: DataFrame, vec_col: str, id_col: str,
                             threshold: float = 0.95,

@@ -22,12 +22,13 @@ the DuckDB oracle can reproduce them bit-for-bit.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..plans.manifest import read_marker, write_marker
 
 
 def _as_double(vec_col):
@@ -68,6 +69,15 @@ def brute_force_topk(df: DataFrame, vec_col: str, id_col: str,
 
 # ---------------------------------------------------------------------------
 # IVF index: numpy core (shared by the Spark build job and oracle fixtures)
+
+def _norms_seq(M: np.ndarray) -> np.ndarray:
+    """Dimension-sequential L2 norms — the same left-to-right fold as the
+    ANSI-SQL oracle's sqrt(list_sum(x*x)), so values match bit-for-bit."""
+    acc = np.zeros(len(M))
+    for kdim in range(M.shape[1]):
+        acc += M[:, kdim] * M[:, kdim]
+    return np.sqrt(acc)
+
 
 def seq_dots(M: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, c) dot products accumulated dimension-sequentially — the SQL
@@ -177,13 +187,9 @@ def build_ivf_index(df: DataFrame, vec_col: str, id_col: str, index_dir: str,
             V = np.asarray(vv.flatten().to_numpy(zero_copy_only=False),
                            dtype=np.float64).reshape(len(ids), -1)
             # dimension-sequential norms == the SQL fold used at query time
-            acc = np.zeros(len(ids))
-            for kdim in range(V.shape[1]):
-                acc += V[:, kdim] * V[:, kdim]
-            nrm = np.sqrt(acc)
             yield pa.RecordBatch.from_arrays(
                 [b.column("nid"), vv,
-                 pa.array(nrm, type=pa.float64()),
+                 pa.array(_norms_seq(V), type=pa.float64()),
                  pa.array(assign_buckets(V, C), type=pa.int32())],
                 schema=out_schema)
 
@@ -198,8 +204,7 @@ def build_ivf_index(df: DataFrame, vec_col: str, id_col: str, index_dir: str,
             "n_iters": n_iters, "seed": seed,
             "sample_rows": sample_rows, "stride": stride, "n_rows": int(n),
             "dim": int(C.shape[1])}
-    with open(os.path.join(index_dir, "ivf_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_marker(os.path.join(index_dir, "ivf_meta.json"), meta)
     return meta
 
 
@@ -232,36 +237,23 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_ids: list[int],
     spark = df.sparkSession
     if index_dir is None:
         index_dir = tempfile.mkdtemp(prefix="mvt_ivf_")
-    meta_path = os.path.join(index_dir, "ivf_meta.json")
-    if not os.path.exists(meta_path):
-        build_ivf_index(df, vec_col, id_col, index_dir,
-                        n_centroids=n_centroids, seed=seed)
-    with open(meta_path) as f:
-        meta = json.load(f)
+    meta = read_marker(os.path.join(index_dir, "ivf_meta.json"))
+    if meta is None:
+        meta = build_ivf_index(df, vec_col, id_col, index_dir,
+                               n_centroids=n_centroids, seed=seed)
     # a reused index must match the caller's build parameters — silently
     # answering from a differently-shaped or differently-seeded index would
     # return stale results with no warning. Compare against the REQUESTED
     # centroid count, not the realized one: train_centroids clamps to the
     # sample size on tiny corpora, and an index this call just built must
     # never fail its own check.
-    # an index written before requested_n_centroids existed only records
-    # the REALIZED (possibly sample-clamped) count — comparing that against
-    # the caller's request would spuriously reject a matching index, so a
-    # missing field is treated as unknown and only the seed is enforced
     req = meta.get("requested_n_centroids")
-    if (req is not None and req != n_centroids) or meta.get("seed") != seed:
+    if req != n_centroids or meta.get("seed") != seed:
         raise ValueError(
             f"index at {index_dir} was built with n_centroids={req}, "
             f"seed={meta.get('seed')} but caller requested "
             f"n_centroids={n_centroids}, seed={seed}; pass a fresh "
             f"index_dir (or delete the stale index) to rebuild")
-    if req is None:
-        import warnings
-
-        warnings.warn(
-            f"index at {index_dir} predates requested_n_centroids metadata; "
-            f"accepting on matching seed without verifying the centroid "
-            f"count (realized n_centroids={meta.get('n_centroids')})")
     C = load_centroids(index_dir)
     base = spark.read.parquet(os.path.join(index_dir, "assignments"))
 

@@ -22,8 +22,9 @@ import numpy as np
 import pyarrow as pa
 
 from ..codecs import fsst as fsstmod
+from ..codecs.bytescodecs import _bytes_parts
 from ..codecs.selector import DICT_MAX_RATIO, FSST_MIN_DATA, row_sample
-from ..columns import _bytes_parts, _is_byteslike
+from ..columns import _is_byteslike
 
 SAMPLE_ROWS_PER_PART = 512      # a few hundred KB per partition suffices:
 SAMPLE_PARTITIONS = 16          # per-column trials cap at TRIAL_BYTES anyway

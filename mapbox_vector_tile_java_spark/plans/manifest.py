@@ -7,7 +7,7 @@ and the table meta pins schema + global symbol tables.
 
 Layout under <out_dir>/:
     blocks/part-<pid>.parquet   one file per Spark partition, rows = blocks
-    blocks/part-<pid>.done      commit marker: json manifest rows + file crc
+    commits/part-<pid>.done     commit marker: json manifest rows + file crc
                                 (per-partition atomic commit -> exact resume;
                                 reference analog: cursor rollback keeping
                                 prior state intact, JtsAdapter.java:374,424)
@@ -75,55 +75,66 @@ def done_file(out_dir: str, pid: int) -> str:
     return os.path.join(out_dir, "commits", f"part-{pid:05d}.done")
 
 
-def write_done(out_dir: str, pid: int, manifest_rows: list[dict]) -> None:
-    """Atomic commit marker: manifest rows + crc of the data file."""
-    pf = part_file(out_dir, pid)
-    with open(pf, "rb") as f:
-        crc = zlib.crc32(f.read())
-    os.makedirs(os.path.dirname(done_file(out_dir, pid)), exist_ok=True)
-    tmp = done_file(out_dir, pid) + ".tmp"
+def write_marker(path: str, obj) -> None:
+    """Commit one write-once JSON artifact: write a tmp file, fsync it, then
+    ``os.replace`` it onto ``path``. A reader sees the whole object or no
+    file — never a torn one, whatever instant the writer dies at."""
+    tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"pid": pid, "file_crc": crc, "rows": manifest_rows}, f)
+        json.dump(obj, f)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, done_file(out_dir, pid))
+    os.replace(tmp, path)
+
+
+def read_marker(path: str) -> dict | None:
+    """The object ``write_marker`` committed at ``path``, or None when the
+    file is absent or does not parse (treated as never written)."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def write_done(out_dir: str, pid: int, manifest_rows: list[dict]) -> None:
+    """Atomic commit marker: manifest rows + crc of the data file."""
+    with open(part_file(out_dir, pid), "rb") as f:
+        crc = zlib.crc32(f.read())
+    os.makedirs(os.path.dirname(done_file(out_dir, pid)), exist_ok=True)
+    write_marker(done_file(out_dir, pid),
+                 {"pid": pid, "file_crc": crc, "rows": manifest_rows})
 
 
 def read_done(out_dir: str, pid: int) -> list[dict] | None:
     """Return committed manifest rows iff marker exists and data file crc
     matches (a torn/partial data file is treated as uncommitted)."""
-    df_, pf = done_file(out_dir, pid), part_file(out_dir, pid)
-    if not (os.path.exists(df_) and os.path.exists(pf)):
+    d = read_marker(done_file(out_dir, pid))
+    if d is None:
         return None
     try:
-        with open(df_) as f:
-            d = json.load(f)
-        with open(pf, "rb") as f:
-            if zlib.crc32(f.read()) != d["file_crc"]:
-                return None
-        return d["rows"]
-    except (json.JSONDecodeError, KeyError, OSError):
+        with open(part_file(out_dir, pid), "rb") as f:
+            return d["rows"] if zlib.crc32(f.read()) == d["file_crc"] else None
+    except (KeyError, OSError):
         return None
 
 
 def write_meta(out_dir: str, schema: pa.Schema, symtabs: dict[int, list[bytes]],
                config: dict) -> None:
-    meta = {
+    write_marker(os.path.join(out_dir, "meta.json"), {
         "format_version": FORMAT_VERSION,
         "schema_b64": base64.b64encode(schema.serialize().to_pybytes()).decode(),
         "symtabs": {str(k): [base64.b64encode(s).decode() for s in v]
                     for k, v in symtabs.items()},
         "config": config,
-    }
-    tmp = os.path.join(out_dir, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(out_dir, "meta.json"))
+    })
 
 
 def read_meta(out_dir: str) -> tuple[pa.Schema, dict[int, list[bytes]], dict]:
-    with open(os.path.join(out_dir, "meta.json")) as f:
-        meta = json.load(f)
+    path = os.path.join(out_dir, "meta.json")
+    meta = read_marker(path)
+    if meta is None:
+        raise FileNotFoundError(f"no readable table meta at {path}")
     if meta["format_version"] != FORMAT_VERSION:
         raise ValueError(f"unknown format version {meta['format_version']}")
     schema = pa.ipc.read_schema(pa.py_buffer(base64.b64decode(meta["schema_b64"])))

@@ -28,10 +28,11 @@ tile appended to a growing tileset.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
+
+from ..plans.manifest import read_marker, write_marker
 
 _SNAPSHOT_FILE = "compact_sources.json"
 
@@ -151,11 +152,8 @@ def compact_segments(spark, out_dir: str, dst_dir: str, n_parts: int,
         segs = segs[:max_segments]
     df = decode_table(spark, segs)
     man = encode_webtext(df, dst_dir, n_parts=n_parts)
-    snap = os.path.join(dst_dir, _SNAPSHOT_FILE)
-    tmp = snap + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"source_segments": [os.path.basename(s) for s in segs]}, f)
-    os.replace(tmp, snap)
+    write_marker(os.path.join(dst_dir, _SNAPSHOT_FILE),
+                 {"source_segments": [os.path.basename(s) for s in segs]})
     return man
 
 
@@ -198,13 +196,12 @@ def promote_compacted(out_dir: str, compacted_dir: str,
         raise FileNotFoundError(
             f"compacted table at {compacted_dir} has no committed manifest")
     if segments is None:
-        snap = os.path.join(compacted_dir, _SNAPSHOT_FILE)
-        if not os.path.exists(snap):
+        snap = read_marker(os.path.join(compacted_dir, _SNAPSHOT_FILE))
+        if snap is None:
             raise FileNotFoundError(
                 f"{compacted_dir} has no {_SNAPSHOT_FILE} snapshot — compact "
                 f"with compact_segments, or pass segments= explicitly")
-        with open(snap) as f:
-            segments = json.load(f)["source_segments"]
+        segments = snap["source_segments"]
     missing = [b for b in segments
                if not os.path.isdir(os.path.join(out_dir, b))]
     if missing:
@@ -224,9 +221,8 @@ def promote_compacted(out_dir: str, compacted_dir: str,
         shutil.move(os.path.join(out_dir, b), os.path.join(aside, b))
     # pair this aside dir with its compacted segment so verify_and_reap can
     # fingerprint-compare the two before deleting anything
-    with open(os.path.join(aside, "promoted.json"), "w") as f:
-        json.dump({"compacted": os.path.basename(dst),
-                   "segments": segments}, f)
+    write_marker(os.path.join(aside, "promoted.json"),
+                 {"compacted": os.path.basename(dst), "segments": segments})
     return dst
 
 
@@ -285,11 +281,9 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
     reaped = []
     for name in sorted(os.listdir(aside_root)):
         aside = os.path.join(aside_root, name)
-        meta = os.path.join(aside, "promoted.json")
-        if not os.path.exists(meta):
-            continue  # pre-pairing aside dir: manual reap only
-        with open(meta) as f:
-            info = json.load(f)
+        info = read_marker(os.path.join(aside, "promoted.json"))
+        if info is None:
+            continue  # no committed pairing: manual reap only
         comp = os.path.join(out_dir, info["compacted"])
         if not os.path.exists(os.path.join(comp, "manifest.parquet")):
             continue  # compacted away since; covered by a newer aside dir

@@ -37,3 +37,20 @@ def assert_bit_equal(a: pa.Array, b: pa.Array) -> None:
         assert_bit_equal(an.cast(lt), bn.cast(lt))
     else:
         assert an.equals(bn), f"value mismatch for {t}: {an[:5]} vs {bn[:5]}"
+
+
+def tear_json_dump(monkeypatch, key: str) -> None:
+    """Make ``json.dump`` of any dict holding ``key`` write half of its
+    output and then raise — a writer killed mid-write. Other dumps pass."""
+    import json
+
+    real = json.dump
+
+    def torn(obj, fp, *a, **kw):
+        if isinstance(obj, dict) and key in obj:
+            s = json.dumps(obj)
+            fp.write(s[: len(s) // 2])
+            raise OSError("writer killed mid-write")
+        return real(obj, fp, *a, **kw)
+
+    monkeypatch.setattr(json, "dump", torn)

@@ -382,6 +382,35 @@ def test_verify_and_reap_deletes_only_on_match(spark, tmp_path):
     assert content_fingerprint(na) != content_fingerprint(nb)
 
 
+def test_promote_torn_pairing_keeps_aside(spark, tmp_path, monkeypatch):
+    """A promote killed inside its promoted.json write leaves no pairing
+    file (write_marker commits by rename): the next verify_and_reap does
+    not fail to parse a partial file, and keeps the unpaired aside dir."""
+    from helpers import tear_json_dump
+
+    from mapbox_vector_tile_java_spark.streaming.incremental import (
+        verify_and_reap)
+
+    root = str(tmp_path / "tbl")
+    src = webtext_df(spark, 300, seed=4, partitions=2)
+    for k in range(2):
+        encode_webtext(src.where(F.pmod(F.xxhash64("url"), F.lit(2)) == k),
+                       os.path.join(root, f"segment={k}"), n_parts=1)
+    dst = str(tmp_path / "compacted")
+    compact_segments(spark, root, dst, n_parts=1)
+    with monkeypatch.context() as m:
+        tear_json_dump(m, "compacted")
+        with pytest.raises(OSError, match="mid-write"):
+            promote_compacted(root, dst)
+    aside_root = os.path.join(root, ".pre_compact")
+    (aside,) = os.listdir(aside_root)
+    assert not os.path.exists(os.path.join(aside_root, aside, "promoted.json"))
+    assert verify_and_reap(spark, root) == []
+    assert {"segment=0", "segment=1"} <= set(
+        os.listdir(os.path.join(aside_root, aside)))
+    assert _rows(decode_segments(spark, root)) == _rows(src)
+
+
 def test_content_fingerprint_binds_values_to_rows(spark):
     """Two values swapped between rows of one column change the
     fingerprint: a sum of per-column hashes would factorize per column and

@@ -436,6 +436,28 @@ def test_ivf_index_param_mismatch_raises(spark, vectors, tmp_path):
                    n_centroids=4, n_probe=3, seed=7, index_dir=idx)
 
 
+def test_ivf_meta_torn_write_rebuilds(spark, vectors, tmp_path, monkeypatch):
+    """A build killed inside its ivf_meta.json write leaves no meta file
+    (write_marker commits by rename), so the next ivf_topk rebuilds the
+    index and answers instead of failing to parse a partial file."""
+    import os
+
+    from helpers import tear_json_dump
+
+    idx = str(tmp_path / "ivf")
+    with monkeypatch.context() as m:
+        tear_json_dump(m, "requested_n_centroids")
+        with pytest.raises(OSError, match="mid-write"):
+            S.build_ivf_index(vectors, "embedding", "vec_id", idx,
+                              n_centroids=4)
+    assert not os.path.exists(os.path.join(idx, "ivf_meta.json"))
+    out = S.ivf_topk(vectors, "embedding", "vec_id", [0], k=3,
+                     n_centroids=4, n_probe=3, index_dir=idx).collect()
+    assert len(out) == 3
+    assert {r["rank"]: r["neighbor_id"] for r in out}[1] == 99
+    assert os.path.exists(os.path.join(idx, "ivf_meta.json"))
+
+
 def test_extract_features_drops_null_media(spark):
     """A null media blob must NOT become an all-zero embedding row."""
     from mapbox_vector_tile_java_spark.operators.multimodal import (
@@ -535,7 +557,7 @@ def _all_pairs(df):
         [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long")
 
 
-def test_exact_verify_cross_block_matches_catalyst(spark):
+def test_exact_verify_cross_block_matches_catalyst(spark, tmp_path):
     """Exact verify across many hash blocks (block_rows=2), so each block
     pair remaps one block's gram vocabulary into another's code space:
     every candidate pair must carry the Catalyst baseline's jaccard, with
@@ -557,6 +579,83 @@ def test_exact_verify_cross_block_matches_catalyst(spark):
                                            block_rows=2).collect()}
     assert len(exact) == 45  # the ten texts with at least one 3-gram
     assert got == exact
+    # the same pairs from records built into (then reused from) a gram_dir
+    for _ in range(2):
+        reused = {(r["id_a"], r["id_b"]): r["jaccard"]
+                  for r in D.exact_jaccard_verify(
+                      df, _all_pairs(df), "text", "doc_id", k=3,
+                      threshold=0.0, block_rows=2,
+                      gram_dir=str(tmp_path / "grams")).collect()}
+        assert reused == exact
+
+
+def _job_count(spark, tag, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(tag)), out
+
+
+def test_gram_records_reused_without_rewrite_or_count(spark, tmp_path):
+    """Matching params reuse gram_dir as is (part files untouched), the
+    marker records the row count, and verify over the reused records runs
+    no job beyond reading them: no count job."""
+    import glob
+    import os
+
+    from mapbox_vector_tile_java_spark.plans.manifest import read_marker
+
+    df = spark.createDataFrame(
+        [(0, "plain ascii filler document " * 4),
+         (1, "plain ascii filler document " * 4 + "x"),
+         (2, "the quick brown fox"), (3, "the quick brown fix"), (4, "ab")],
+        "doc_id long, text string")
+    g = str(tmp_path / "grams")
+    D.build_gram_records(df, "text", "doc_id", 3, g)
+    marker = read_marker(os.path.join(g, "_GRAMS_OK"))
+    assert marker == {"k": 3, "text_col": "text", "id_col": "doc_id",
+                      "n_rows": 4}  # "ab" has no 3-gram, so no record
+    parts = {p: os.path.getmtime(p)
+             for p in glob.glob(os.path.join(g, "part-*"))}
+    assert parts
+    D.build_gram_records(df, "text", "doc_id", 3, g)
+    assert {p: os.path.getmtime(p)
+            for p in glob.glob(os.path.join(g, "part-*"))} == parts
+
+    cands = _all_pairs(df)
+    n_verify, v = _job_count(spark, "verify_plan", lambda: (
+        D.exact_jaccard_verify(df, cands, "text", "doc_id", k=3,
+                               gram_dir=g)))
+    n_read, _ = _job_count(spark, "grams_read",
+                           lambda: spark.read.parquet(g))
+    assert n_verify == n_read
+    assert {(r["id_a"], r["id_b"]) for r in v.collect()} == {(0, 1), (2, 3)}
+
+
+def test_gram_records_rebuilt_on_k_mismatch(spark, tmp_path):
+    """A gram_dir built with another k is rebuilt, not reused: the marker
+    and the records follow the caller's k."""
+    import os
+
+    from mapbox_vector_tile_java_spark.plans.manifest import read_marker
+
+    df = spark.createDataFrame([(0, "abcd"), (1, "abcde"), (2, "abc")],
+                               "doc_id long, text string")
+    g = str(tmp_path / "grams")
+    D.build_gram_records(df, "text", "doc_id", 3, g)
+    assert read_marker(os.path.join(g, "_GRAMS_OK"))["n_rows"] == 3
+    recs = D.build_gram_records(df, "text", "doc_id", 4, g)
+    assert read_marker(os.path.join(g, "_GRAMS_OK")) == {
+        "k": 4, "text_col": "text", "id_col": "doc_id", "n_rows": 2}
+    assert {r["id"]: len(r["rec"]) for r in recs.collect()} == {
+        0: 17, 1: 2 * 17}  # one record of 4k+1 bytes per distinct 4-gram
+    assert {(r["id_a"], r["id_b"], r["jaccard"])
+            for r in D.exact_jaccard_verify(
+                df, _all_pairs(df), "text", "doc_id", k=4, threshold=0.0,
+                gram_dir=g).collect()} == {(0, 1, 0.5)}
 
 
 def test_exact_verify_size_prefilter_keeps_rounded_ties(spark):
