@@ -87,7 +87,7 @@ def _write_oracle_fixtures() -> None:
     import pyarrow.parquet as pq
 
     from mapbox_vector_tile_java_spark.operators.dedup import (
-        _bytes_view, minhash_kernel, simhash_kernel)
+        signature_batch, simhash_batch, text_batches)
     from mapbox_vector_tile_java_spark.operators.multimodal import (
         KINDS, synth_media_batch)
     from mapbox_vector_tile_java_spark.sources.webtext import SCHEMA, gen_batch
@@ -109,24 +109,18 @@ def _write_oracle_fixtures() -> None:
     pq.write_table(t, f"{FIXTURE_DIR}/stream_spread2000.parquet")
 
     # 3/4: simhash fingerprints + minhash signatures of the sf0.01 documents
-    # (same numpy kernels as the Spark stage — the *join/banding logic* is
-    # what DuckDB independently verifies; the kernels themselves are covered
-    # by pytest unit tests)
-    docs = pq.read_table(f"{ORACLE_SF_DIR}/documents.parquet",
-                         columns=["doc_id", "text"])
-    valid, lens, data = _bytes_view(docs.column("text").combine_chunks())
-    ids = docs.column("doc_id").to_numpy(zero_copy_only=False)[valid]
-    fps = simhash_kernel(lens, data, shingle_k=4).view(np.int64)
-    pq.write_table(pa.table({"id": pa.array(ids, type=pa.int64()),
-                             "simhash": pa.array(fps, type=pa.int64())}),
-                   f"{FIXTURE_DIR}/simhash_fp.parquet")
-    sigs = minhash_kernel(lens, data, num_perm=64, shingle_k=5, seed=42)
-    sig_arr = pa.ListArray.from_arrays(
-        pa.array(np.arange(len(ids) + 1, dtype=np.int32) * 64),
-        pa.array(sigs.view(np.int64).ravel(), type=pa.int64()))
-    pq.write_table(pa.table({"id": pa.array(ids, type=pa.int64()),
-                             "sig": sig_arr}),
-                   f"{FIXTURE_DIR}/minhash_sig.parquet")
+    # (the Spark stages' own batch reader and builders — the *join/banding
+    # logic* is what DuckDB independently verifies; the kernels themselves
+    # are checked against plain-python references by pytest unit tests)
+    docs = list(text_batches(pq.read_table(
+        f"{ORACLE_SF_DIR}/documents.parquet",
+        columns=["doc_id", "text"]).to_batches()))
+    pq.write_table(pa.Table.from_batches(
+        [simhash_batch(*d, shingle_k=4) for d in docs]),
+        f"{FIXTURE_DIR}/simhash_fp.parquet")
+    pq.write_table(pa.Table.from_batches(
+        [signature_batch(*d, num_perm=64, shingle_k=5, seed=42) for d in docs]),
+        f"{FIXTURE_DIR}/minhash_sig.parquet")
 
     # 5: expected media metadata via an INDEPENDENT plain-python header
     # parser (row loop + struct.unpack) — the reference implementation the
@@ -153,7 +147,7 @@ def _write_oracle_fixtures() -> None:
     emb0 = pq.read_table(f"{ORACLE_SF_DIR}/embeddings.parquet",
                          columns=["vec_id", "embedding"]).drop_null()
     V0 = np.array(emb0.column("embedding").to_pylist(), dtype=np.float64)
-    srp = srp_kernel(V0, V0.shape[1], seed=42).view(np.int64)
+    srp = srp_kernel(V0, seed=42).view(np.int64)
     pq.write_table(
         pa.table({"id": pa.array(
                       emb0.column("vec_id").to_numpy(zero_copy_only=False),

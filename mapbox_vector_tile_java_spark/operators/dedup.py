@@ -16,6 +16,11 @@ Every banded route (minhash, incremental, winnowing, simhash, SRP) joins
 through ONE primitive, ``band_pairs``; its probe mode pairs a small batch
 with a large index through the batch's broadcast keys, never index×index.
 
+Every text fingerprint stage (minhash and simhash signatures, the rolling
+and winnowing fingerprints in textstats.py, the gram records) reads its
+Arrow batches through ONE reader, ``text_batches``, and every hashed route
+folds its k-byte windows through ONE window hash, ``_window_hashes``.
+
 Reference lineage: consecutive-duplicate detection is the reference's
 repeated-point stats (JtsGeomStats.java:105-153) and dedup-on-encode
 (JtsAdapter.java:405,488) — lossy there, analysis-only here (we never drop
@@ -36,6 +41,7 @@ from ..plans.manifest import read_marker, write_marker
 from .similarity import _norms_seq
 
 MERSENNE = (1 << 61) - 1
+SHINGLE_BASE = 0x9E3779B97F4A7C15  # minhash/simhash shingle fold, mod 2^64
 
 
 def round_half_away(x: np.ndarray, digits: int = 6) -> np.ndarray:
@@ -53,6 +59,40 @@ def _bytes_view(txt: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     valid = (txt.is_valid().to_numpy(zero_copy_only=False)
              if txt.null_count else np.ones(len(txt), dtype=bool))
     return (valid, *_bytes_parts(txt.drop_null()))
+
+
+def text_batches(batches):
+    """The one per-batch read of every text fingerprint stage: each
+    non-empty Arrow batch of (id, text) columns -> (ids, lens, data) over
+    its non-null text rows (lens/data as ``_bytes_view``)."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        valid, lens, data = _bytes_view(batch.column(1))
+        yield batch.column(0).to_numpy(zero_copy_only=False)[valid], lens, data
+
+
+def _window_hashes(lens: np.ndarray, data: np.ndarray, k: int, base: int,
+                   mod: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """The one k-byte window hash of every text fingerprint route:
+    ``h = fold(h * base + byte)``, reduced mod ``mod`` after each step, or
+    wrapping at 2^64 when ``mod`` is None. Returns (per-doc window counts,
+    uint64 hashes of each doc's in-doc windows, doc-concatenated)."""
+    n_win = np.maximum(lens - (k - 1), 0)
+    if not n_win.any():
+        return n_win, np.empty(0, dtype=np.uint64)
+    # hash all length-k windows of the concatenated buffer, then select the
+    # in-bounds windows per doc via multi_range over doc-local offsets
+    from ..codecs.gather import multi_range
+
+    h = np.zeros(len(data) - (k - 1), dtype=np.uint64)
+    b = np.uint64(base)
+    for j in range(k):
+        h *= b
+        h += data[j : len(data) - (k - 1) + j]
+        if mod is not None:
+            h %= np.uint64(mod)
+    return n_win, h[multi_range(np.cumsum(lens) - lens, n_win)]
 
 
 # ---------------------------------------------------------------------------
@@ -116,31 +156,12 @@ def _minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def _shingle_hashes(lens: np.ndarray, data: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Rolling k-byte hashes of each doc's bytes, boundary-safe, vectorized.
-    Returns (per-doc shingle counts, flat shingle hash array uint64)."""
-    n_sh = np.maximum(lens - (k - 1), 0)
-    if len(data) == 0 or int(n_sh.sum()) == 0:
-        return n_sh, np.empty(0, dtype=np.uint64)
-    # hash all length-k windows of the concatenated buffer, then select the
-    # in-bounds windows per doc via multi_range over doc-local offsets
-    from ..codecs.gather import multi_range
-
-    h = np.zeros(len(data) - (k - 1), dtype=np.uint64)
-    mult = np.uint64(0x9E3779B97F4A7C15)
-    for j in range(k):
-        h = h * mult + data[j : len(data) - (k - 1) + j]
-    doc_ofs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-    idx = multi_range(doc_ofs, n_sh)
-    return n_sh, h[idx]
-
-
 def minhash_kernel(lens: np.ndarray, data: np.ndarray, num_perm: int,
                    shingle_k: int, seed: int) -> np.ndarray:
     """(n, num_perm) uint64 minhash signature matrix — pure numpy, shared by
     the Spark mapInArrow stage and the oracle fixture writer."""
     a_par, b_par = _minhash_params(num_perm, seed)
-    n_sh, sh = _shingle_hashes(lens, data, shingle_k)
+    n_sh, sh = _window_hashes(lens, data, shingle_k, SHINGLE_BASE)
     sigs = np.full((len(lens), num_perm), MERSENNE, dtype=np.uint64)
     if len(sh):
         bounds = np.concatenate(([0], np.cumsum(n_sh)))
@@ -150,6 +171,18 @@ def minhash_kernel(lens: np.ndarray, data: np.ndarray, num_perm: int,
             pj = (a_par[j] * sh + b_par[j]) % np.uint64(MERSENNE)
             sigs[nz, j] = np.minimum.reduceat(pj, starts)
     return sigs
+
+
+def signature_batch(ids: np.ndarray, lens: np.ndarray, data: np.ndarray,
+                    num_perm: int, shingle_k: int, seed: int) -> pa.RecordBatch:
+    """(id, sig) record batch of one ``text_batches`` item — the rows the
+    signature stage emits and the oracle fixture writer persists."""
+    sigs = minhash_kernel(lens, data, num_perm, shingle_k, seed)
+    offsets = pa.array(np.arange(len(lens) + 1, dtype=np.int32) * num_perm)
+    values = pa.array(sigs.view(np.int64).ravel(), type=pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, type=pa.int64()),
+         pa.ListArray.from_arrays(offsets, values)], names=["id", "sig"])
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
@@ -164,16 +197,8 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     ])
 
     def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            valid, lens, data = _bytes_view(batch.column(1))
-            sigs = minhash_kernel(lens, data, num_perm, shingle_k, seed)
-            offsets = pa.array(np.arange(len(lens) + 1, dtype=np.int32) * num_perm)
-            values = pa.array(sigs.view(np.int64).ravel(), type=pa.int64())
-            arr = pa.ListArray.from_arrays(offsets, values)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[valid], type=pa.int64()), arr],
-                names=["id", "sig"])
+        for ids, lens, data in text_batches(batches):
+            yield signature_batch(ids, lens, data, num_perm, shingle_k, seed)
 
     src = _spread(df.select(F.col(id_col).cast("long").alias("id"),
                             F.col(text_col)))
@@ -183,8 +208,7 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_perm: int = 64, bands: int = 16,
                       shingle_k: int = 5, seed: int = 42,
-                      hash_bands: bool = False,
-                      work_dir: str | None = None) -> DataFrame:
+                      hash_bands: bool = False) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >=1 LSH band bucket.
 
     Scale path: the only shuffle is the band-bucket join key of
@@ -198,14 +222,15 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     from 8*rows_per_band to 8 bytes at a vanishing (2^-64 per bucket)
     collision risk — the right trade at 10^12 docs.
 
-    The signature stage is materialized to ``work_dir`` parquet (an explicit
-    temp table), so the self-join reads it twice from storage instead of
-    recomputing the python kernel per side or pinning an executor cache.
+    The signature stage is materialized to a ``temp_dir`` parquet table
+    (``_materialize_fp``), so the self-join reads it twice from storage
+    instead of recomputing the python kernel per side or pinning an
+    executor cache.
     """
     keys = _minhash_band_keys(num_perm, bands, hash_bands)
     sigs = _materialize_fp(
         minhash_signatures(df, text_col, id_col, num_perm, shingle_k, seed),
-        df.sparkSession, "mvt_minhash_", work_dir)
+        "mvt_minhash_")
     return band_pairs(sigs, keys)
 
 
@@ -330,7 +355,7 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     new_sig = _materialize_fp(
         minhash_signatures(new_df, text_col, id_col, p["num_perm"],
                            p["shingle_k"], p["seed"]),
-        spark, "mvt_minhash_inc_")
+        "mvt_minhash_inc_")
     cands = band_pairs(spark.read.parquet(index_dir), keys,
                        probe=new_sig).select("id_a", "id_b")
     both = (corpus_df.select(F.col(id_col).cast("long").alias(id_col),
@@ -373,16 +398,14 @@ def temp_dir(prefix: str) -> str:
     return d
 
 
-def _materialize_fp(df: DataFrame, spark, prefix: str,
-                    work_dir: str | None = None) -> DataFrame:
-    """Land a fingerprint/signature stage as a parquet temp table so the
-    self-join reads it twice from storage instead of recomputing the
-    python kernel per side or pinning an executor cache for the session.
-    Callers who pass ``work_dir`` own its lifecycle; otherwise it is a
-    ``temp_dir``."""
-    work_dir = work_dir or temp_dir(prefix)
+def _materialize_fp(df: DataFrame, prefix: str) -> DataFrame:
+    """Land a fingerprint/signature stage as a parquet table in a fresh
+    ``temp_dir`` so the self-join reads it twice from storage instead of
+    recomputing the python kernel per side or pinning an executor cache
+    for the session."""
+    work_dir = temp_dir(prefix)
     df.write.mode("overwrite").parquet(work_dir)
-    return spark.read.parquet(work_dir)
+    return df.sparkSession.read.parquet(work_dir)
 
 
 def cleanup_temp_dirs() -> int:
@@ -434,11 +457,7 @@ def _gram_record_df(df: DataFrame, text_col: str, id_col: str,
     def fn(batches):
         from ..codecs.gather import multi_range
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            valid, lens, data = _bytes_view(batch.column(1))
-            ids = batch.column(0).to_numpy(zero_copy_only=False)[valid]
+        for ids, lens, data in text_batches(batches):
             n = len(ids)
             ofs = np.concatenate(([0], np.cumsum(lens)))
             # per-row ascii flag: any byte >= 0x80 forces the char fallback
@@ -493,7 +512,6 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
                       shingle_k: int = 5, seed: int = 42,
                       block_rows: int = 512,
                       hash_bands: bool = True,
-                      work_dir: str | None = None,
                       gram_dir: str | None = None) -> DataFrame:
     """Scale-path near-dup detection: minhash-LSH candidate pairs, then
     EXACT char-k-gram jaccard computed only on the candidates.
@@ -518,8 +536,7 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
     a colliding non-duplicate pair is measured and dropped.
     """
     cands = minhash_lsh_pairs(df, text_col, id_col, num_perm, bands,
-                              shingle_k, seed, hash_bands=hash_bands,
-                              work_dir=work_dir)
+                              shingle_k, seed, hash_bands=hash_bands)
     return exact_jaccard_verify(df, cands, text_col, id_col, k=k,
                                 threshold=threshold, block_rows=block_rows,
                                 gram_dir=gram_dir)
@@ -957,7 +974,7 @@ def simhash_kernel(lens: np.ndarray, data: np.ndarray,
                    shingle_k: int) -> np.ndarray:
     """uint64 simhash per row (per-bit majority vote over shingle hashes) —
     pure numpy, shared by the Spark stage and the oracle fixture writer."""
-    n_sh, sh = _shingle_hashes(lens, data, shingle_k)
+    n_sh, sh = _window_hashes(lens, data, shingle_k, SHINGLE_BASE)
     fps = np.zeros(len(lens), dtype=np.uint64)
     if len(sh):
         bits = np.unpackbits(sh.view(np.uint8).reshape(-1, 8), axis=1,
@@ -971,6 +988,17 @@ def simhash_kernel(lens: np.ndarray, data: np.ndarray,
     return fps
 
 
+def simhash_batch(ids: np.ndarray, lens: np.ndarray, data: np.ndarray,
+                  shingle_k: int) -> pa.RecordBatch:
+    """(id, simhash) record batch of one ``text_batches`` item — the rows
+    the simhash stage emits and the oracle fixture writer persists."""
+    fps = simhash_kernel(lens, data, shingle_k)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, type=pa.int64()),
+         pa.array(fps.view(np.int64), type=pa.int64())],
+        names=["id", "simhash"])
+
+
 def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str,
                          shingle_k: int = 4) -> DataFrame:
     """(id, simhash long): per-bit majority vote over shingle hashes."""
@@ -982,42 +1010,30 @@ def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str,
     ])
 
     def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            valid, lens, data = _bytes_view(batch.column(1))
-            fps = simhash_kernel(lens, data, shingle_k)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[valid], type=pa.int64()),
-                 pa.array(fps.view(np.int64), type=pa.int64())],
-                names=["id", "simhash"])
+        for ids, lens, data in text_batches(batches):
+            yield simhash_batch(ids, lens, data, shingle_k)
 
     src = _spread(df.select(F.col(id_col).cast("long").alias("id"),
                             F.col(text_col)))
     return src.mapInArrow(fn, out_schema)
 
 
-def simhash_band_exprs(n_blocks: int = 8):
-    """Composite band keys: the 64-bit fingerprint split into ``n_blocks``
-    equal blocks, one key per unordered block *pair* (C(n,2) keys).
+def simhash_band_exprs():
+    """Composite band keys: the 64-bit fingerprint split into 8 blocks of
+    8 bits, one key per unordered block *pair* (28 keys).
 
-    Pigeonhole recall guarantee: hamming <= n_blocks - 2 flips bits in at
-    most n_blocks - 2 blocks, leaving >= 2 blocks identical — so some block
-    pair matches exactly and the pair is a candidate. With the default 8
-    blocks of 8 bits that guarantees every hamming<=6 pair is found (the
-    old 4x16 banding only guaranteed hamming<=3 while advertising 6).
+    Pigeonhole recall guarantee: hamming <= 6 flips bits in at most 6
+    blocks, leaving >= 2 blocks identical — so some block pair matches
+    exactly and every hamming<=6 pair is a candidate.
     """
-    assert 64 % n_blocks == 0
-    w = 64 // n_blocks
-    mask = (1 << w) - 1
-    blocks = [F.shiftright("simhash", i * w).bitwiseAND(F.lit(mask))
-              for i in range(n_blocks)]
-    return [F.shiftleft(blocks[i], w) + blocks[j]
-            for i in range(n_blocks) for j in range(i + 1, n_blocks)]
+    blocks = [F.shiftright("simhash", 8 * i).bitwiseAND(F.lit(0xFF))
+              for i in range(8)]
+    return [F.shiftleft(blocks[i], 8) + blocks[j]
+            for i in range(8) for j in range(i + 1, 8)]
 
 
 def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
-                  max_hamming: int = 6, shingle_k: int = 4,
-                  work_dir: str | None = None) -> DataFrame:
+                  max_hamming: int = 6, shingle_k: int = 4) -> DataFrame:
     """ALL pairs with fingerprint hamming distance <= max_hamming (exact for
     max_hamming <= 6 by the block-pair pigeonhole — see simhash_band_exprs),
     verified against a DuckDB all-pairs hamming join in the oracle gate.
@@ -1028,16 +1044,17 @@ def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
     fingerprint) make the *output itself* quadratic — run exact_dedup first
     at scale so identical texts collapse before near-dup detection.
 
-    The fingerprint stage is materialized to ``work_dir`` parquet so the
-    self-join reads it from storage twice instead of recomputing the python
-    kernel per side or pinning an executor cache for the session.
+    The fingerprint stage is materialized to a ``temp_dir`` parquet table
+    (``_materialize_fp``) so the self-join reads it from storage twice
+    instead of recomputing the python kernel per side or pinning an
+    executor cache for the session.
     """
     if max_hamming > 6:
         raise ValueError("recall guarantee covers max_hamming <= 6 "
                          "(8 blocks, pairs of blocks); got "
                          f"{max_hamming}")
     fp = _materialize_fp(simhash_fingerprints(df, text_col, id_col, shingle_k),
-                         df.sparkSession, "mvt_simhash_", work_dir)
+                         "mvt_simhash_")
     return simhash_pairs_from_fps(fp, max_hamming)
 
 
@@ -1056,14 +1073,14 @@ def simhash_pairs_from_fps(fp: DataFrame, max_hamming: int = 6) -> DataFrame:
 # ---------------------------------------------------------------------------
 # sign-random-projection LSH for embeddings (sub-quadratic cosine dedup)
 
-def srp_kernel(V: np.ndarray, dim: int, n_bits: int = 64,
-               seed: int = 42) -> np.ndarray:
-    """uint64 sign-random-projection fingerprints: bit j = sign(V @ R[:, j])
-    with a seeded gaussian projection matrix. Pure numpy — shared by the
-    Spark stage and the oracle fixture writer. P(bit differs) = angle/pi,
-    so hamming distance estimates the angle between vectors."""
+def srp_kernel(V: np.ndarray, seed: int = 42) -> np.ndarray:
+    """uint64 sign-random-projection fingerprints: bit j (of 64) =
+    sign(V @ R[:, j]) with a seeded gaussian projection matrix. Pure numpy
+    — shared by the Spark stage and the oracle fixture writer. P(bit
+    differs) = angle/pi, so hamming distance estimates the angle between
+    vectors."""
     rng = np.random.default_rng(seed)
-    R = rng.standard_normal((dim, n_bits))
+    R = rng.standard_normal((V.shape[1], 64))
     bits = (V @ R) > 0
     return np.packbits(bits.astype(np.uint8), axis=1,
                        bitorder="little").view(np.uint64).ravel()
@@ -1086,9 +1103,13 @@ def srp_fingerprints(df: DataFrame, vec_col: str, id_col: str,
                 continue
             ids = b.column(0).to_numpy(zero_copy_only=False)
             vv = b.column(1)
+            dims = np.unique(vv.value_lengths().to_numpy(zero_copy_only=False))
+            if len(dims) > 1:
+                raise ValueError(
+                    f"ragged embedding dimensions in batch: {dims.tolist()}")
             V = np.asarray(vv.flatten().to_numpy(zero_copy_only=False),
                            dtype=np.float64).reshape(len(ids), -1)
-            fps = srp_kernel(V, V.shape[1], seed=seed)
+            fps = srp_kernel(V, seed=seed)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids, type=pa.int64()),
                  pa.array(fps.view(np.int64), type=pa.int64())],
@@ -1102,8 +1123,7 @@ def srp_fingerprints(df: DataFrame, vec_col: str, id_col: str,
 
 
 def embedding_srp_pairs(df: DataFrame, vec_col: str, id_col: str,
-                        threshold: float = 0.95, seed: int = 42,
-                        work_dir: str | None = None) -> DataFrame:
+                        threshold: float = 0.95, seed: int = 42) -> DataFrame:
     """Sub-quadratic cosine near-dup pairs: SRP band candidates -> EXACT
     cosine verify on candidates only. Returns (id_a, id_b, cosine).
 
@@ -1120,7 +1140,7 @@ def embedding_srp_pairs(df: DataFrame, vec_col: str, id_col: str,
     from .similarity import _as_double, _dot, _norm
 
     fp = _materialize_fp(srp_fingerprints(df, vec_col, id_col, seed),
-                         df.sparkSession, "mvt_srp_", work_dir)
+                         "mvt_srp_")
     cands = band_pairs(fp, simhash_band_exprs())
     v = (df.where(F.col(vec_col).isNotNull())
            .select(F.col(id_col).cast("long").alias("id"),

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, functions as F
 def corpus_clean(df: DataFrame, text_col: str, id_col: str,
                  min_quality: float = 1.01,
                  jaccard_threshold: float = 0.5, k: int = 3,
-                 work_dir: str | None = None,
                  gram_dir: str | None = None,
                  candidate_route: str = "minhash") -> DataFrame:
     """Kept document ids after the full cleaning chain:
@@ -80,13 +79,12 @@ def corpus_clean(df: DataFrame, text_col: str, id_col: str,
     good = df.select(id_col, text_col).join(good_ids, id_col)
     survivors = exact_dedup(good, text_col, id_col)
     if candidate_route == "minhash":
-        cands = minhash_lsh_pairs(survivors, text_col, id_col,
-                                  hash_bands=True, work_dir=work_dir)
+        cands = minhash_lsh_pairs(survivors, text_col, id_col, hash_bands=True)
     elif candidate_route == "winnow":
         cands = winnow_candidate_pairs(survivors, text_col, id_col)
     elif candidate_route == "both":
         cands = (minhash_lsh_pairs(survivors, text_col, id_col,
-                                   hash_bands=True, work_dir=work_dir)
+                                   hash_bands=True)
                  .select("id_a", "id_b")
                  .unionByName(winnow_candidate_pairs(
                      survivors, text_col, id_col).select("id_a", "id_b"))

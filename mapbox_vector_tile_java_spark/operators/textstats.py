@@ -86,33 +86,28 @@ def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                      pred.alias("lang_pred"))
 
 
-def fingerprint(df: DataFrame, text_col: str, id_col: str, k: int = 8,
-                stride: int = 1) -> DataFrame:
+def fingerprint(df: DataFrame, text_col: str, id_col: str,
+                k: int = 8) -> DataFrame:
     """Document fingerprints:
     - md5_full: content hash of the exact text bytes
-    - min_gram_md5: min md5 over ALL char k-grams (stride=1, the default).
-      The global min over the full gram set is stable under document
-      reordering: two documents with the same content in a different order
-      share min_gram_md5 exactly. Both columns are reproducible in SQL.
+    - min_gram_md5: min md5 over ALL char k-grams. The global min over the
+      full gram set is stable under document reordering: two documents
+      with the same content in a different order share min_gram_md5
+      exactly. Both columns are reproducible in SQL.
 
-    ``stride > 1`` is an opt-in *positional sample* (every stride-th gram
-    position). It is NOT winnowing and weakens the reordering-stability
-    property: shifted/reordered copies sample different gram subsets, so
-    the probability both sides retain the global-min gram drops to roughly
-    1/stride per side. Use it only when an approximate content sketch is
-    acceptable; for cheap fingerprints with a real guarantee use
+    Every gram is hashed in the JVM. For cheap fingerprints use
     fingerprint_rolling (exact global min, one vectorized pass, no per-gram
     JVM hashing) or fingerprint_winnow (true winnowing: shared substrings
     of length >= window + k - 1 are GUARANTEED to share a fingerprint).
     """
     c = F.col(text_col)
-    # the length guard is load-bearing: sequence(1, 0, step) RAISES in
-    # Spark ("Illegal sequence boundaries"), so texts shorter than k must
-    # short-circuit to an empty gram list (min over empty -> NULL, which
-    # is also what the SQL oracle's CASE produces)
+    # the length guard is load-bearing: sequence(1, 0) yields a DESCENDING
+    # [1, 0] in Spark, so texts shorter than k must short-circuit to an
+    # empty gram list (min over empty -> NULL, which is also what the SQL
+    # oracle's CASE produces)
     grams = F.expr(
         f"CASE WHEN length({text_col}) >= {k} THEN "
-        f"transform(sequence(1, length({text_col}) - {k - 1}, {stride}),"
+        f"transform(sequence(1, length({text_col}) - {k - 1}),"
         f" i -> substring({text_col}, i, {k})) "
         f"ELSE array() END")
     return df.select(
@@ -168,34 +163,23 @@ def fingerprint_rolling(df: DataFrame, text_col: str, id_col: str,
     import numpy as np
     import pyarrow as pa
 
-    from .dedup import _bytes_view
+    from .dedup import _window_hashes, text_batches
 
     out_schema = pa.schema([pa.field("id", pa.int64()),
                             pa.field("min_gram_hash", pa.int64()),
                             pa.field("n_grams", pa.int64())])
 
     def fn(batches):
-        B, M = np.uint64(FP_BASE), np.uint64(FP_MOD)
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            valid, lens, data = _bytes_view(batch.column(1))
-            n_gr = np.maximum(lens - (k - 1), 0)
+        for ids, lens, data in text_batches(batches):
+            n_gr, h = _window_hashes(lens, data, k, FP_BASE, FP_MOD)
             mins = np.full(len(lens), -1, dtype=np.int64)
-            if len(data) >= k and int(n_gr.sum()) > 0:
-                h = np.zeros(len(data) - (k - 1), dtype=np.uint64)
-                for j in range(k):
-                    h = (h * B + data[j : len(data) - (k - 1) + j]) % M
-                from ..codecs.gather import multi_range
-
-                doc_ofs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-                nz = n_gr > 0
-                win = h[multi_range(doc_ofs[nz], n_gr[nz])]
-                starts = np.concatenate(([0], np.cumsum(n_gr[nz])))[:-1]
-                mins[nz] = np.minimum.reduceat(win, starts).view(np.int64)
-            arr = pa.array(mins, type=pa.int64(),
-                           mask=(mins < 0))
+            nz = n_gr > 0
+            if len(h):
+                starts = (np.cumsum(n_gr) - n_gr)[nz]
+                mins[nz] = np.minimum.reduceat(h, starts).view(np.int64)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[valid], type=pa.int64()), arr,
+                [pa.array(ids, type=pa.int64()),
+                 pa.array(mins, type=pa.int64(), mask=(mins < 0)),
                  pa.array(n_gr, type=pa.int64())],
                 schema=out_schema)
 
@@ -211,7 +195,7 @@ def fingerprint_winnow(df: DataFrame, text_col: str, id_col: str,
     the distinct minima of every sliding ``window`` of consecutive k-gram
     rolling hashes. Guarantee: two documents sharing any substring of
     length >= window + k - 1 share at least one fingerprint — the property
-    positional sampling (fingerprint(stride=...)) cannot give.
+    a positional gram sample cannot give.
 
     Returns exploded (id, fp) rows, one per distinct fingerprint — the
     shape a dedup index joins on. Documents with fewer than ``window``
@@ -225,39 +209,26 @@ def fingerprint_winnow(df: DataFrame, text_col: str, id_col: str,
     import numpy as np
     import pyarrow as pa
 
-    from .dedup import _bytes_view
+    from ..codecs.gather import multi_range
+    from .dedup import _window_hashes, text_batches
 
     out_schema = pa.schema([pa.field("id", pa.int64()),
                             pa.field("fp", pa.int64())])
 
     def fn(batches):
-        B, M = np.uint64(FP_BASE), np.uint64(FP_MOD)
         w = window
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            valid, lens, data = _bytes_view(batch.column(1))
-            vids = ids[valid]
-            n_gr = np.maximum(lens - (k - 1), 0)
-            if len(data) < k or int(n_gr.sum()) == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([], type=pa.int64()),
-                     pa.array([], type=pa.int64())], schema=out_schema)
+        for ids, lens, data in text_batches(batches):
+            n_gr, g = _window_hashes(lens, data, k, FP_BASE, FP_MOD)
+            if not len(g):
                 continue
-            h = np.zeros(len(data) - (k - 1), dtype=np.uint64)
-            for j in range(k):
-                h = (h * B + data[j : len(data) - (k - 1) + j]) % M
-            from ..codecs.gather import multi_range
-
-            doc_ofs = np.concatenate(([0], np.cumsum(lens)))[:-1]
             nz = n_gr > 0
-            g = h[multi_range(doc_ofs[nz], n_gr[nz])]  # doc-concatenated grams
             cnt = n_gr[nz]
             starts = np.concatenate(([0], np.cumsum(cnt)))[:-1]
             # sliding min over the flat gram-hash array, then per-doc select
             # only the windows fully inside the doc; short docs (0 < grams
             # < window) fall back to min-of-all-grams
             n_win = np.maximum(cnt - w + 1, 1)
-            out_id = np.repeat(vids[nz], n_win)
+            out_id = np.repeat(ids[nz], n_win)
             if len(g) >= w:
                 sw = np.lib.stride_tricks.sliding_window_view(g, w).min(axis=1)
             else:

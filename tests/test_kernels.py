@@ -413,3 +413,72 @@ def test_block_pair_jaccard_matches_set_jaccard():
                     np.float64(len(xs[a] & ys[b]) / len(xs[a] | ys[b])), 6)
                 for a in xs for b in ys}
         assert got == want
+
+
+_M64 = (1 << 64) - 1
+
+
+def _utf8_batch():
+    """(ids, lens, data) of random ascii and multi-byte texts, read through
+    the fingerprint stages' own batch reader (the null row drops out)."""
+    import random
+
+    import pyarrow as pa
+
+    from mapbox_vector_tile_java_spark.operators.dedup import text_batches
+
+    rng = random.Random(11)
+    alphabet = "abcde fghij _-.!?ü日本🎉"
+    texts = ["", "abcd", "abcde", "日本", None] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 60)))
+        for _ in range(40)]
+    batch = pa.record_batch([pa.array(range(len(texts)), type=pa.int64()),
+                             pa.array(texts, type=pa.string())],
+                            names=["id", "text"])
+    (ids, lens, data), = text_batches([batch])
+    docs = [t.encode() for t in texts if t is not None]
+    assert ids.tolist() == [i for i, t in enumerate(texts) if t is not None]
+    assert lens.tolist() == [len(d) for d in docs]
+    return lens, data, docs
+
+
+def _ref_shingles(bts: bytes, k: int) -> list[int]:
+    """Plain-python shingle fold over UTF-8 bytes, wrapping at 2^64."""
+    out = []
+    for i in range(len(bts) - k + 1):
+        h = 0
+        for c in bts[i : i + k]:
+            h = (h * 0x9E3779B97F4A7C15 + c) & _M64
+        out.append(h)
+    return out
+
+
+def test_minhash_kernel_matches_reference_impl():
+    """Signatures against a per-doc python minhash over UTF-8 bytes: the
+    (a * h + b) step wraps at 2^64 before the Mersenne mod, as in numpy;
+    a doc with no shingle keeps MERSENNE in every slot."""
+    from mapbox_vector_tile_java_spark.operators.dedup import (
+        MERSENNE, _minhash_params, minhash_kernel)
+
+    lens, data, docs = _utf8_batch()
+    a, b = (p.tolist() for p in _minhash_params(16, 42))
+    got = minhash_kernel(lens, data, num_perm=16, shingle_k=5, seed=42)
+    for row, bts in zip(got.tolist(), docs):
+        sh = _ref_shingles(bts, 5)
+        exp = [min(((aj * s & _M64) + bj & _M64) % MERSENNE for s in sh)
+               if sh else MERSENNE for aj, bj in zip(a, b)]
+        assert row == exp, bts
+
+
+def test_simhash_kernel_matches_reference_impl():
+    """Fingerprints against a per-doc python simhash over UTF-8 bytes: bit
+    i is set when more shingle hashes have bit i set than clear; a doc
+    with no shingle (or a tied vote) leaves the bit clear."""
+    from mapbox_vector_tile_java_spark.operators.dedup import simhash_kernel
+
+    lens, data, docs = _utf8_batch()
+    got = simhash_kernel(lens, data, shingle_k=4)
+    for fp, bts in zip(got.tolist(), docs):
+        sh = _ref_shingles(bts, 4)
+        votes = [sum(1 if s >> i & 1 else -1 for s in sh) for i in range(64)]
+        assert fp == sum(1 << i for i in range(64) if votes[i] > 0), bts

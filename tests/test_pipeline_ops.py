@@ -194,6 +194,17 @@ def test_embedding_neardup_ragged_raises(spark):
                                   threshold=0.0, block_rows=100).collect()
 
 
+def test_srp_fingerprints_ragged_raises(spark):
+    """Rows of dims 2, 4, 3, 3 hold 12 values, which reshape into four
+    3-vectors without error; in one batch they must raise instead."""
+    df = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[float(i + j) for j in range(d)])
+         for i, d in enumerate((2, 4, 3, 3))],
+        "vec_id long, embedding array<double>").coalesce(1)
+    with pytest.raises(Exception, match="ragged"):
+        D.srp_fingerprints(df, "embedding", "vec_id").collect()
+
+
 def test_minhash_hash_bands_equivalent(spark, docs):
     exact = {(r["id_a"], r["id_b"], r["n_bands"])
              for r in D.minhash_lsh_pairs(docs, "text", "doc_id").collect()}
@@ -267,8 +278,8 @@ def test_media_meta_plumbing(spark):
 def test_short_and_empty_texts_dont_break_gram_ops(spark):
     """Texts shorter than the gram size must contribute NO grams (Spark's
     sequence(1, 0) yields a descending [1, 0] — the guard in gram_set_expr
-    prevents phantom grams) and must not crash the strided fingerprint
-    (sequence(1, 0, step) raises without its guard)."""
+    prevents phantom grams) and must get a NULL min gram from the md5
+    fingerprint, whose guard stops the same descending sequence."""
     from mapbox_vector_tile_java_spark.operators import textstats as T
 
     rows = [Row(doc_id=0, text=""), Row(doc_id=1, text="ab"),
@@ -285,7 +296,7 @@ def test_short_and_empty_texts_dont_break_gram_ops(spark):
            for r in D.ngram_jaccard_lsh(df, "text", "doc_id", k=3,
                                         threshold=0.5).collect()}
     assert lsh == {(3, 4)}
-    # strided md5 fingerprint: short texts -> NULL min-gram, no crash
+    # md5 fingerprint: short texts -> NULL min-gram
     fps = {r["doc_id"]: r["min_gram_md5"]
            for r in T.fingerprint(df, "text", "doc_id").collect()}
     assert fps[0] is None and fps[1] is None and fps[2] is None
@@ -476,18 +487,24 @@ def test_extract_features_drops_null_media(spark):
 def test_fingerprint_winnow_matches_reference_impl(spark):
     """The vectorized sliding-window-min kernel must agree with a plain
     per-doc python winnowing over UTF-8 bytes — including non-ascii text
-    (the kernel is byte-based; only the SQL oracle is ascii-gated)."""
+    (the kernel is byte-based; only the SQL oracle is ascii-gated). The
+    rolling fingerprint's min gram hash and gram count over the same
+    hashes are checked too."""
     import random
 
     from mapbox_vector_tile_java_spark.operators import textstats as T
 
-    def ref_winnow(bts, k=8, w=4):
+    def ref_hashes(bts, k=8):
         hs = []
         for i in range(len(bts) - k + 1):
             h = 0
             for c in bts[i : i + k]:
                 h = (h * 1000003 + c) % 2147483647
             hs.append(h)
+        return hs
+
+    def ref_winnow(bts, w=4):
+        hs = ref_hashes(bts)
         if not hs:
             return set()
         if len(hs) < w:
@@ -507,6 +524,11 @@ def test_fingerprint_winnow_matches_reference_impl(spark):
     for row in rows:
         exp = ref_winnow(row.text.encode())
         assert got.get(row.doc_id, set()) == exp, row.doc_id
+    roll = {r["id"]: (r["min_gram_hash"], r["n_grams"])
+            for r in T.fingerprint_rolling(df, "text", "doc_id").collect()}
+    for row in rows:
+        hs = ref_hashes(row.text.encode())
+        assert roll[row.doc_id] == (min(hs, default=None), len(hs)), row.doc_id
 
 
 def test_ivf_topk_small_corpus_self_built_index_ok(spark):
