@@ -78,7 +78,6 @@ class ByteReader:
 # physical shapes a codec can operate on
 SHAPE_INT = "int"      # np.int64 array
 SHAPE_BYTES = "bytes"  # (lengths: np.int64 array, data: np.uint8 array)
-SHAPE_FLOAT = "float"  # raw little-endian IEEE bytes, element size known
 
 
 @dataclass(frozen=True)

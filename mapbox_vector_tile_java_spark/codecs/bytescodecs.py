@@ -38,7 +38,6 @@ from .intcodecs import (
     rle_size,
     varint_int_size,
 )
-from .pool import pbuf
 from .gather import gather_runs, multi_range
 
 
@@ -388,7 +387,7 @@ def _tokd_encode(inp: tuple[np.ndarray, np.ndarray], params: dict) -> bytes:
     parts.append(encode_int_sub(t_lens))
     tb_len = t_data.nbytes  # materialize bytes only if the raw path wins
     table = params.get("fsst_table")
-    use_fsst = tb_len >= 2048 and params.get("table_fsst", True)
+    use_fsst = tb_len >= 2048
     if use_fsst:
         if table is None:
             table = fsstmod.train(t_data, sample_cap=1 << 16)

@@ -34,7 +34,6 @@ import numpy as np
 
 from .gather import multi_range
 from .pool import pbuf
-from .primitives import varint_decode, varint_encode_one
 
 ESCAPE = 255
 MAX_SYMBOLS = 255  # codes 0..254; 255 reserved for escape
@@ -325,14 +324,6 @@ class SymbolTable:
         parts.append(b"".join(self.symbols))
         return b"".join(parts)
 
-    def full_bytes(self) -> bytes:
-        tb = self.table_bytes()
-        return varint_encode_one(len(tb)) + tb
-
-    @property
-    def merges(self):  # legacy shim for introspection/tests
-        return []
-
 
 def table_from_bytes(buf) -> tuple[list[bytes], int]:
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
@@ -346,13 +337,6 @@ def table_from_bytes(buf) -> tuple[list[bytes], int]:
 
 def decoder_from_table_bytes(buf) -> SymbolTable:
     symbols, _ = table_from_bytes(buf)
-    return SymbolTable(symbols=symbols)
-
-
-def from_full_bytes(buf: bytes) -> SymbolTable:
-    b = np.frombuffer(buf, dtype=np.uint8)
-    tlen, consumed = varint_decode(b, 1)
-    symbols, _ = table_from_bytes(b[consumed : consumed + int(tlen[0])])
     return SymbolTable(symbols=symbols)
 
 

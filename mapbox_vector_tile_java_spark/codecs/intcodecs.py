@@ -29,7 +29,6 @@ from .primitives import (
     bitpack,
     bitunpack,
     varint_byte_lengths,
-    varint_decode,
     varint_encode,
     varint_encode_one,
     zigzag_decode,
@@ -291,12 +290,6 @@ def _huff_decode(r: ByteReader, n: int) -> np.ndarray:
     from . import huffman
 
     return huffman.decode(r, n)
-
-
-def huff_size(a: np.ndarray) -> int:
-    from . import huffman
-
-    return huffman.encoded_size(a)
 
 
 # ---------------------------------------------------------------------------

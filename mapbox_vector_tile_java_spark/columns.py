@@ -43,7 +43,6 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from .codecs import base
 from .codecs.base import ByteReader, by_id, by_name
 from .codecs.bytescodecs import _bytes_parts, decode_int_sub, encode_int_sub
 from .codecs.primitives import pack_validity, unpack_validity, varint_encode_one
@@ -172,134 +171,127 @@ def _build_varbin(t: pa.DataType, lens: np.ndarray, data: np.ndarray,
 # ---------------------------------------------------------------------------
 # encode / decode
 
+def _split_nulls(arr: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """(validity mask, the non-null values) of one column."""
+    if not arr.null_count:
+        return np.ones(len(arr), dtype=bool), arr
+    return arr.is_valid().to_numpy(zero_copy_only=False), arr.drop_null()
+
+
+def _list_lengths(nn: pa.Array) -> np.ndarray:
+    """Per-row value counts of a list array without nulls."""
+    large = pa.types.is_large_list(nn.type)
+    obuf = np.frombuffer(nn.buffers()[1], dtype=np.int64 if large else np.int32)
+    return np.diff(obuf[nn.offset : nn.offset + len(nn) + 1].astype(np.int64))
+
+
+def _map_entries(arr: pa.Array) -> pa.Array:
+    """A map column as its wire-identical list<struct<key,value>>."""
+    t = arr.type
+    return arr.cast(pa.list_(pa.struct([t.key_field, t.item_field])))
+
+
 def encode_column(arr: pa.Array | pa.ChunkedArray, codec: str = "auto",
                   params: dict | None = None) -> tuple[bytes, dict]:
     """Encode one column block. Returns (blob, meta).
 
-    meta: {codec, raw_bytes, enc_bytes, content_crc, n_rows, null_count}
+    meta: {codec, raw_bytes, enc_bytes, content_crc, n_rows, null_count,
+    symtab_id}. The checksum is ``content_crc`` of the whole column, taken
+    once here rather than per nested child.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    params = params or {}
+    blob, name = _encode(arr, codec, params)
+    canon = _map_entries(arr) if pa.types.is_map(arr.type) else arr
+    n, nulls = len(arr), arr.null_count
+    return blob, {
+        "codec": name,
+        "raw_bytes": sum(b.size for b in canon.buffers() if b is not None),
+        "enc_bytes": len(blob),
+        "content_crc": content_crc(arr),
+        "n_rows": n,
+        "null_count": nulls,
+        "symtab_id": int(params.get("symtab_id", -1)) if nulls < n else -1,
+    }
+
+
+def _encode(arr: pa.Array, codec: str, params: dict) -> tuple[bytes, str]:
+    """The envelope of one column (recursing into nested children).
+    Returns (blob, codec name)."""
     t = arr.type
     if pa.types.is_map(t):
-        # wire-identical to list<struct<key,value>> (decode rebuilds the map)
-        lst = arr.cast(pa.list_(pa.struct([t.key_field, t.item_field])))
-        blob, meta = encode_column(lst, codec, params)
-        meta["codec"] = f"map({meta['codec']})"
-        return blob, meta
+        blob, name = _encode(_map_entries(arr), codec, params)
+        return blob, f"map({name})"
     n = len(arr)
-    params = dict(params or {})
-    valid = (arr.is_valid().to_numpy(zero_copy_only=False)
-             if arr.null_count else np.ones(n, dtype=bool))
-    nn = arr.drop_null() if arr.null_count else arr
+    valid, nn = _split_nulls(arr)
 
     parts: list[bytes] = [bytes([ENVELOPE_VERSION]), varint_encode_one(n),
                           varint_encode_one(int(arr.null_count))]
     if 0 < arr.null_count < n:
         parts.append(pack_validity(valid))
 
-    raw_bytes = sum(b.size for b in arr.buffers() if b is not None)
-    crc = zlib.crc32(pack_validity(valid))
-
     if arr.null_count == n or n == 0:
-        blob = b"".join(parts)
-        return blob, _meta("all_null", raw_bytes, len(blob), crc, n, int(arr.null_count))
+        return b"".join(parts), "all_null"
 
     if _is_intlike(t):
         vals = _to_int64(nn)
-        crc = zlib.crc32(np.ascontiguousarray(vals), crc)
         name = choose_int_codec(vals) if codec == "auto" else codec
         spec = by_name(name)
         parts.append(bytes([spec.codec_id]))
         parts.append(spec.encode(vals, params))
     elif _is_byteslike(t):
         lens, data = _bytes_parts(nn)
-        crc = zlib.crc32(np.ascontiguousarray(lens), crc)
-        crc = zlib.crc32(np.ascontiguousarray(data), crc)
-        chosen = None
         if codec == "auto":
             name, auto_params = choose_bytes_codec(lens, data, nn)
             params = {**auto_params, **params}
-            chosen = (name, params)
         else:
             name = codec
         spec = by_name(name)
         parts.append(bytes([spec.codec_id]))
         parts.append(spec.encode((lens, data), params))
-        if chosen is not None and name in ("fsst", "tok_dict", "dict_bytes", "raw_bytes"):
-            # safe to reuse for sibling blocks (lossless regardless of data);
-            # saves re-training FSST tables per block
-            blob = b"".join(parts)
-            meta = _meta(name, raw_bytes, len(blob), crc, n, int(arr.null_count),
-                         params.get("symtab_id", -1))
-            meta["reusable_plan"] = chosen
-            return blob, meta
     elif _is_listlike(t):
-        flat = nn.flatten()  # values of non-null lists only
-        large = pa.types.is_large_list(t)
-        obuf = np.frombuffer(nn.buffers()[1], dtype=np.int64 if large else np.int32)
-        o = obuf[nn.offset : nn.offset + len(nn) + 1].astype(np.int64)
-        lens = np.diff(o)
-        crc = zlib.crc32(np.ascontiguousarray(lens), crc)
-        child_blob, child_meta = encode_column(flat, codec, params)
-        crc = zlib.crc32(child_meta["content_crc"].to_bytes(8, "little"), crc)
-        parts.append(encode_int_sub(lens))
+        # values of non-null lists only
+        child_blob, child_name = _encode(nn.flatten(), codec, params)
+        parts.append(encode_int_sub(_list_lengths(nn)))
         parts.append(varint_encode_one(len(child_blob)))
         parts.append(child_blob)
-        name = f"list({child_meta['codec']})"
+        name = f"list({child_name})"
     elif pa.types.is_struct(t):
         sub = []
         for i in range(t.num_fields):
-            child_blob, child_meta = encode_column(nn.field(i), codec, params)
-            crc = zlib.crc32(child_meta["content_crc"].to_bytes(8, "little"), crc)
+            child_blob, child_name = _encode(nn.field(i), codec, params)
             parts.append(varint_encode_one(len(child_blob)))
             parts.append(child_blob)
-            sub.append(child_meta["codec"])
+            sub.append(child_name)
         name = f"struct({','.join(sub)})"
     elif pa.types.is_decimal128(t):
         lo, hi = _decimal_planes(nn)
-        crc = zlib.crc32(np.ascontiguousarray(lo), crc)
-        crc = zlib.crc32(np.ascontiguousarray(hi), crc)
         parts.append(encode_int_sub(lo))
         parts.append(encode_int_sub(hi))
         name = "decimal128"
     else:
         raise TypeError(f"unsupported column type: {t}")
-
-    blob = b"".join(parts)
-    return blob, _meta(name, raw_bytes, len(blob), crc, n, int(arr.null_count),
-                       params.get("symtab_id", -1))
-
-
-def _meta(codec, raw_bytes, enc_bytes, crc, n, nulls, symtab_id=-1):
-    return {
-        "codec": codec,
-        "raw_bytes": int(raw_bytes),
-        "enc_bytes": int(enc_bytes),
-        "content_crc": int(crc) & 0xFFFFFFFFFFFFFFFF,
-        "n_rows": int(n),
-        "null_count": int(nulls),
-        "symtab_id": int(symtab_id),
-    }
+    return b"".join(parts), name
 
 
 def content_crc(arr: pa.Array | pa.ChunkedArray) -> int:
-    """Recompute the manifest content checksum of an arrow column — the
-    exact chain encode_column builds while encoding, so decode can verify
-    bit-identity without the source (SURVEY A16: corruption check ≡
-    checksum in manifest; round-trip discipline of MvtBuildTest.java:179)."""
+    """The manifest content checksum of an arrow column: the one definition
+    — ``encode_column`` records it and decode recomputes it from the decoded
+    column, so decode verifies bit-identity without the source (SURVEY A16:
+    corruption check ≡ checksum in manifest; round-trip discipline of
+    MvtBuildTest.java:179). A nested child enters its parent's chain as its
+    own checksum in 8 little-endian bytes (part of the stored value)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     t = arr.type
     if pa.types.is_map(t):
-        return content_crc(arr.cast(pa.list_(pa.struct([t.key_field, t.item_field]))))
+        return content_crc(_map_entries(arr))
     n = len(arr)
-    valid = (arr.is_valid().to_numpy(zero_copy_only=False)
-             if arr.null_count else np.ones(n, dtype=bool))
-    nn = arr.drop_null() if arr.null_count else arr
+    valid, nn = _split_nulls(arr)
     crc = zlib.crc32(pack_validity(valid))
     if arr.null_count == n or n == 0:
-        return crc & 0xFFFFFFFFFFFFFFFF
+        return crc
     if _is_intlike(t):
         crc = zlib.crc32(np.ascontiguousarray(_to_int64(nn)), crc)
     elif _is_byteslike(t):
@@ -307,13 +299,8 @@ def content_crc(arr: pa.Array | pa.ChunkedArray) -> int:
         crc = zlib.crc32(np.ascontiguousarray(lens), crc)
         crc = zlib.crc32(np.ascontiguousarray(data), crc)
     elif _is_listlike(t):
-        flat = nn.flatten()
-        large = pa.types.is_large_list(t)
-        obuf = np.frombuffer(nn.buffers()[1], dtype=np.int64 if large else np.int32)
-        o = obuf[nn.offset : nn.offset + len(nn) + 1].astype(np.int64)
-        lens = np.diff(o)
-        crc = zlib.crc32(np.ascontiguousarray(lens), crc)
-        crc = zlib.crc32(content_crc(flat).to_bytes(8, "little"), crc)
+        crc = zlib.crc32(np.ascontiguousarray(_list_lengths(nn)), crc)
+        crc = zlib.crc32(content_crc(nn.flatten()).to_bytes(8, "little"), crc)
     elif pa.types.is_struct(t):
         for i in range(t.num_fields):
             crc = zlib.crc32(content_crc(nn.field(i)).to_bytes(8, "little"), crc)
@@ -323,7 +310,7 @@ def content_crc(arr: pa.Array | pa.ChunkedArray) -> int:
         crc = zlib.crc32(np.ascontiguousarray(hi), crc)
     else:
         raise TypeError(f"unsupported column type: {t}")
-    return crc & 0xFFFFFFFFFFFFFFFF
+    return crc
 
 
 def decode_column(blob: bytes | memoryview | np.ndarray, t: pa.DataType,

@@ -79,14 +79,11 @@ def make_decode_fn(schema: pa.Schema,
                     blob = blobs[n][i].as_buffer()
                     arr = decode_column(blob, out_schema.field(n).type, ctx)
                     want = crcs[n][i].as_py()
-                    if want is not None:
-                        if want < 0:
-                            want += 1 << 64
-                        got = content_crc(arr)
-                        if got != want:
-                            raise ValueError(
-                                f"checksum mismatch decoding column {n!r}: "
-                                f"manifest={want} decoded={got} — block is corrupt")
+                    got = content_crc(arr)
+                    if got != want:
+                        raise ValueError(
+                            f"checksum mismatch decoding column {n!r}: "
+                            f"manifest={want} decoded={got} — block is corrupt")
                     arrays.append(arr)
                 yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -44,12 +43,14 @@ def _minmax_i64(arr: pa.Array):
 
 
 def encode_batch(batch: pa.RecordBatch, pid: int, block_id: int,
-                 overrides: dict, plan_cache: dict) -> tuple[dict, list[dict]]:
+                 overrides: dict) -> tuple[dict, list[dict]]:
     """Encode one Arrow batch into a block row + flat manifest rows.
 
-    plan_cache carries bytes-codec choices (incl. trained FSST tables) across
-    sibling blocks of a partition — training once per partition, the way the
-    reference builds one dict per layer, not per feature (MvtEncoder.java:91).
+    ``overrides`` is the table's persisted plan, fresh or resumed
+    (``overrides_from_plan``): its trained tables are built once on the
+    driver, the way the reference builds one dict per layer, not per
+    feature (MvtEncoder.java:91). A column without a plan picks its codec
+    per block.
     """
     mrows = []
     block = {"part_id": pid, "block_id": block_id, "n_rows": batch.num_rows}
@@ -57,13 +58,9 @@ def encode_batch(batch: pa.RecordBatch, pid: int, block_id: int,
         arr = batch.column(name)
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
-        codec, params = overrides.get(name) or plan_cache.get(name) or ("auto", None)
-        blob, meta = encode_column(arr, codec, params)
-        if "reusable_plan" in meta:
-            plan_cache[name] = meta.pop("reusable_plan")
+        blob, meta = encode_column(arr, *overrides.get(name, ("auto", None)))
         mn, mx = _minmax_i64(arr)
         crc = meta["content_crc"]
-        crc = crc - (1 << 64) if crc >= (1 << 63) else crc  # int64 view
         block[f"c_{name}"] = blob
         block[f"crc_{name}"] = crc
         block[f"mn_{name}"] = mn
@@ -100,13 +97,12 @@ def make_encode_fn(out_dir: str, overrides: dict, resume: bool,
                 yield _manifest_batch(committed)
                 return
         blocks, mrows = [], []
-        plan_cache: dict = {}
         for block_id, batch in enumerate(batches):
             if batch.num_rows == 0:
                 continue
             if batch.schema != schema:
                 batch = pa.Table.from_batches([batch]).cast(schema).combine_chunks().to_batches()[0]
-            block, rows = encode_batch(batch, pid, block_id, overrides, plan_cache)
+            block, rows = encode_batch(batch, pid, block_id, overrides)
             blocks.append(block)
             mrows.extend(rows)
         os.makedirs(M.blocks_dir(out_dir), exist_ok=True)
@@ -139,10 +135,13 @@ def encode_table(df, out_dir: str, *, sample: "pa.Table | None" = None,
     per-column codecs up front — executors only compress (SURVEY §3.1: the
     cluster analog of build-once-per-layer dictionaries, MvtEncoder.java:91).
     The plan + symbol tables are persisted to meta.json BEFORE the encode
-    job, so a resumed run reuses the identical plan and mixed-run
-    partitions stay mutually decodable. When every bytes-like column is
-    overridden, no sampling job runs; int-like columns always pick their
-    codec per block (exact-size selection, cheap).
+    job. Executors get the persisted plan, fresh or resumed: both paths
+    build their overrides with ``overrides_from_plan``, so a resumed run
+    ships exactly what the first run shipped and mixed-run partitions stay
+    mutually decodable. A column without a plan picks its codec per block.
+    When every bytes-like column is overridden, no sampling job runs;
+    int-like columns always pick their codec per block (exact-size
+    selection, cheap).
 
     ``sample``: pre-collected pa.Table to plan from (lets a pipeline share
     one sample between codec planning and skew detection, and lets callers
@@ -183,18 +182,19 @@ def encode_table(df, out_dir: str, *, sample: "pa.Table | None" = None,
             prior = M.read_meta(out_dir)
         except (FileNotFoundError, ValueError, KeyError):
             prior = None
+    planned: dict = {}
     if prior is not None and prior[2].get("plan"):
         _, symtabs, cfg = prior
         plan_note = cfg["plan"]
         planned = overrides_from_plan(plan_note, symtabs)
-        for col, ov in planned.items():
-            overrides.setdefault(col, ov)
     elif any(_is_byteslike(f.type) and f.name not in overrides
              for f in schema):
         if sample is None:
             sample = collect_sample(df)
-        o2, symtabs, plan_note = plan_from_sample(sample, skip=set(overrides))
-        overrides.update(o2)
+        planned, symtabs, plan_note = plan_from_sample(sample,
+                                                       skip=set(overrides))
+    for col, ov in planned.items():
+        overrides.setdefault(col, ov)
 
     M.write_meta(out_dir, schema, symtabs,
                  {"note": config_note or {}, "plan": plan_note,

@@ -84,18 +84,19 @@ def collect_sample(df) -> pa.Table:
 
 
 def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
-    """Build per-column codec overrides from a sample table.
+    """Plan per-column codecs from a sample table.
 
     Returns (overrides, symtabs, plan_note):
       overrides: {col: (codec_name, params)} for bytes-like columns with a
-                 confident global choice; int-like columns stay per-block
+                 confident global choice, built by ``overrides_from_plan``
+                 from the two values below — exactly what a resumed encode
+                 rebuilds from meta.json; int-like columns stay per-block
                  'auto' (their selection is exact-size and cheap).
       symtabs:   {sid: [symbol bytes, ...]} to persist in table meta.
       plan_note: json-able description for meta.json / lineage audit.
     """
     from ..codecs.bytescodecs import _tokd_encode
 
-    overrides: dict = {}
     symtabs: dict[int, list[bytes]] = {}
     note: dict = {}
     sid = 0
@@ -104,16 +105,13 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
             if f.name not in skip and _is_byteslike(f.type)]
 
     def plan_col(col):
-        nn = sample.column(col).combine_chunks()
-        if isinstance(nn, pa.ChunkedArray):
-            nn = nn.combine_chunks()
-        nn = nn.drop_null()
+        nn = sample.column(col).combine_chunks().drop_null()
         lens, data = _bytes_parts(nn)
         n = len(lens)
         if n == 0 or len(data) < FSST_MIN_DATA:
             return None
         raw_size = int(len(data)) + n
-        best = ("raw_bytes", raw_size, {}, None)  # name, est, params, symbols
+        best = ("raw_bytes", raw_size, None)  # name, est, symbols
 
         # global dictionary candidate (sampled; escapes cover the tail)
         uniq = nn.unique()
@@ -124,7 +122,7 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
             w = max(1, len(symbols).bit_length())
             est = (n * w + 7) // 8 + 16
             if est < best[1]:
-                best = ("dict_global", est, {"symbols": symbols}, symbols)
+                best = ("dict_global", est, symbols)
 
         # FSST's estimate is at least n, so when the dictionary already fits
         # in n bytes and no tok_dict trial is due, training cannot change the
@@ -145,8 +143,7 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
         # sample's bytes), so they compare like-for-like with raw_size
         fsst_est = int(len(comp) * (len(data) / max(len(trial), 1))) + n
         if fsst_est < best[1]:
-            best = ("fsst_global", fsst_est, {"fsst_table": table},
-                    list(table.symbols))
+            best = ("fsst_global", fsst_est, list(table.symbols))
 
         # tok_dict candidate (self-contained blocks; shared table for its
         # inline token-table compression)
@@ -155,8 +152,7 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
             blob = _tokd_encode((s_lens, s_data), {"fsst_table": table})
             tok_est = int(len(blob) * (len(data) / max(len(s_data), 1)))
             if tok_est < best[1]:
-                best = ("tok_dict", tok_est, {"fsst_table": table},
-                        list(table.symbols))
+                best = ("tok_dict", tok_est, list(table.symbols))
         return (*best, n)
 
     # one column at a time, in schema order (deterministic sids): FSST
@@ -165,20 +161,16 @@ def plan_from_sample(sample: pa.Table, skip: set[str] = frozenset()):
         r = plan_col(col)
         if r is None:
             continue
-        name, est, params, symbols, n = r
+        name, est, symbols, n = r
         if name == "raw_bytes":
             note[col] = {"codec": name, "symtab_id": -1}
-            overrides[col] = (name, None)
             continue
-        params = dict(params)
-        params["symtab_id"] = sid
         symtabs[sid] = symbols
-        overrides[col] = (name, params)
         note[col] = {"codec": name, "symtab_id": sid,
                      "est_bytes": int(est), "sample_rows": n}
         sid += 1
 
-    return overrides, symtabs, note
+    return overrides_from_plan(note, symtabs), symtabs, note
 
 
 def overrides_from_plan(plan_note: dict, symtabs: dict[int, list[bytes]]):
@@ -189,15 +181,9 @@ def overrides_from_plan(plan_note: dict, symtabs: dict[int, list[bytes]]):
     for col, info in plan_note.items():
         name = info["codec"]
         sid = info.get("symtab_id", -1)
-        if name == "raw_bytes":
-            overrides[col] = (name, None)
-        elif name == "dict_global":
+        if name == "dict_global":
             overrides[col] = (name, {"symbols": symtabs[sid], "symtab_id": sid})
-        elif name == "fsst_global":
-            overrides[col] = (name, {
-                "fsst_table": fsstmod.SymbolTable(symbols=list(symtabs[sid])),
-                "symtab_id": sid})
-        elif name == "tok_dict":
+        elif name in ("fsst_global", "tok_dict"):
             overrides[col] = (name, {
                 "fsst_table": fsstmod.SymbolTable(symbols=list(symtabs[sid])),
                 "symtab_id": sid})

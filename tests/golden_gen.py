@@ -5,10 +5,18 @@ Run ONCE when the wire format intentionally changes:
 The paired test (test_golden.py) then pins both decodability and encoder
 determinism against these bytes — the engine's analog of the reference's
 checked-in .mvt fixtures (MvtReaderTest.java:39-138).
+
+Besides the per-block ``"auto"`` blobs, ``planned_webtext.json`` pins the
+planned encode path without Spark: ``plan_from_sample`` over a
+``collect_sample``-shaped slice of a webtext table, then ``encode_batch``
+over its blocks (global dictionaries, FSST tables, ``tok_dict``, manifest
+checksums).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 import numpy as np
@@ -74,6 +82,47 @@ def fixtures() -> dict[str, pa.Array]:
     }
 
 
+PLANNED = os.path.join(HERE, "planned_webtext.json")
+PLANNED_ROWS, PLANNED_SEED, PLANNED_PARTS, PLANNED_BLOCK = 4000, 1, 4, 250
+
+
+def planned_webtext() -> dict:
+    """Plan from a ``collect_sample``-shaped sample (the first
+    ``SAMPLE_ROWS_PER_PART`` rows of each partition), then encode every
+    partition in ``PLANNED_BLOCK``-row blocks. Returns the per-column codec
+    and encoded bytes, plus one sha256 over the blobs, the manifest rows
+    and the persisted plan."""
+    from mapbox_vector_tile_java_spark.operators.encode import encode_batch
+    from mapbox_vector_tile_java_spark.plans.codec_plan import (
+        SAMPLE_ROWS_PER_PART, plan_from_sample)
+    from mapbox_vector_tile_java_spark.sources.webtext import webtext_table
+
+    table = webtext_table(PLANNED_ROWS, PLANNED_SEED)
+    per = PLANNED_ROWS // PLANNED_PARTS
+    parts = [table.slice(p * per, per) for p in range(PLANNED_PARTS)]
+    sample = pa.concat_tables(
+        [t.slice(0, SAMPLE_ROWS_PER_PART) for t in parts])
+    overrides, symtabs, note = plan_from_sample(sample)
+
+    h = hashlib.sha256()
+    columns: dict[str, dict] = {}
+    for pid, part in enumerate(parts):
+        for block_id, batch in enumerate(part.to_batches(PLANNED_BLOCK)):
+            block, mrows = encode_batch(batch, pid, block_id, overrides)
+            for r in mrows:
+                h.update(block[f"c_{r['name']}"])
+                col = columns.setdefault(r["name"], {"codec": [], "enc_bytes": 0})
+                if r["codec"] not in col["codec"]:
+                    col["codec"].append(r["codec"])
+                col["enc_bytes"] += r["enc_bytes"]
+            h.update(json.dumps(mrows, sort_keys=True).encode())
+    h.update(json.dumps({str(sid): [s.hex() for s in syms]
+                         for sid, syms in sorted(symtabs.items())}).encode())
+    h.update(json.dumps(note, sort_keys=True).encode())
+    return {"rows": PLANNED_ROWS, "seed": PLANNED_SEED, "columns": columns,
+            "sha256": h.hexdigest()}
+
+
 def main():
     os.makedirs(HERE, exist_ok=True)
     for name, arr in fixtures().items():
@@ -81,6 +130,11 @@ def main():
         with open(os.path.join(HERE, f"{name}.bin"), "wb") as f:
             f.write(blob)
         print(f"{name}: {meta['codec']} {len(blob)}B crc={meta['content_crc']}")
+    pin = planned_webtext()
+    with open(PLANNED, "w") as f:
+        json.dump(pin, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"planned_webtext: {pin['sha256']}")
 
 
 if __name__ == "__main__":

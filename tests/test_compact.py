@@ -122,9 +122,11 @@ def test_multi_segment_zone_filter_prunes_and_preserves(spark, tmp_path):
         spark, segs, zone_filters=[("warc_ts", 0, 10)]).count() == 0
 
 
-def test_multi_segment_crc_mismatch_fails_decode(spark, tmp_path):
-    """A block whose stored content crc disagrees with its decoded column
-    fails the segment decode instead of returning wrong rows."""
+@pytest.mark.parametrize("tamper", ["off_by_one", "null"])
+def test_multi_segment_crc_mismatch_fails_decode(spark, tmp_path, tamper):
+    """A block whose stored content crc disagrees with its decoded column,
+    or is NULL, fails the segment decode instead of returning rows it did
+    not check."""
     import glob
 
     import pyarrow as pa
@@ -143,8 +145,7 @@ def test_multi_segment_crc_mismatch_fails_decode(spark, tmp_path):
     path = sorted(glob.glob(os.path.join(segs[1], "blocks", "*.parquet")))[0]
     t = pq.read_table(path)
     crcs = t.column("crc_url").to_pylist()
-    v = crcs[0]
-    crcs[0] = v + 1 if v < 0 else v - 1
+    crcs[0] = None if tamper == "null" else crcs[0] - 1
     t = t.set_column(t.schema.get_field_index("crc_url"), "crc_url",
                      pa.array(crcs, pa.int64()))
     pq.write_table(t, path, compression="none", row_group_size=64)

@@ -20,7 +20,7 @@ from mapbox_vector_tile_java_spark.columns import (
     encode_column,
 )
 
-from golden_gen import HERE, fixtures
+from golden_gen import HERE, PLANNED, fixtures, planned_webtext
 
 FIX = fixtures()
 
@@ -75,3 +75,19 @@ def test_golden_blob_corruption_detected(name, mutation):
         return  # structural detection — the strict-reader path
     assert content_crc(out) != meta["content_crc"], (
         f"{name}/{mutation}: corrupt blob decoded with matching checksum")
+
+
+def test_planned_encode_path_pinned():
+    """The planned path (global dictionary, FSST tables, tok_dict with
+    planner tables, manifest checksums) reproduces its pinned bytes; the
+    per-column codecs and sizes are compared first so a drift names the
+    column."""
+    import json
+
+    with open(PLANNED) as f:
+        want = json.load(f)
+    got = planned_webtext()
+    assert got["columns"] == want["columns"]
+    assert got["sha256"] == want["sha256"], (
+        "planned wire bytes drifted; if intentional, regenerate via "
+        "python tests/golden_gen.py and review the diff")

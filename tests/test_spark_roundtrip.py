@@ -98,7 +98,7 @@ def test_zone_maps_only_for_order_preserving_ints(spark, tmp_path):
         "u": pa.array([1, 2**63 + 5, 2, None], pa.uint64()),
         "f": pa.array([-1.0, -2.0, 3.5, None], pa.float64()),
     })
-    block, rows = encode_batch(batch, 0, 0, {}, {})
+    block, rows = encode_batch(batch, 0, 0, {})
     got = {r["name"]: (r["min_i64"], r["max_i64"]) for r in rows}
     assert got == {"i": (-7, 12), "u": (None, None), "f": (None, None)}
     assert (block["mn_i"], block["mx_i"]) == (-7, 12)
