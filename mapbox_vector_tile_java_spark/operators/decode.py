@@ -151,7 +151,9 @@ def decode_table(spark, out_dir: str | list[str],
     if not files:
         # zero-row tables: the encode job had no tasks, so no block files
         return spark.createDataFrame([], spark_schema)
-    blocks = spark.read.parquet(*files)
+    # known schemas: a schema-less read runs a job to infer one from a footer
+    blocks = spark.read.schema(
+        from_arrow_schema(M.block_schema(schema))).parquet(*files)
     for col, lo, hi in zone_filters or ():
         blocks = blocks.filter(
             F.col(f"mn_{col}").isNull()
@@ -168,7 +170,8 @@ def decode_table(spark, out_dir: str | list[str],
 
 
 def read_manifest(spark, out_dir: str):
-    return spark.read.parquet(os.path.join(out_dir, "manifest.parquet"))
+    return (spark.read.schema(M.manifest_spark_schema())
+            .parquet(os.path.join(out_dir, "manifest.parquet")))
 
 
 def meta_column_stats(spark, out_dir: str):

@@ -210,7 +210,7 @@ def encode_table(df, out_dir: str, *, sample: "pa.Table | None" = None,
     # meta_column_stats), never an in-memory table
     mpath = os.path.join(out_dir, "manifest.parquet")
     mdf.write.mode("overwrite").parquet(mpath)
-    return df.sparkSession.read.parquet(mpath)
+    return df.sparkSession.read.schema(M.manifest_spark_schema()).parquet(mpath)
 
 
 def encode_webtext(df, out_dir: str, n_parts: int,

@@ -7,6 +7,11 @@ Centralizes:
 - glibc malloc tunables for BOTH driver and python workers: this sandbox has
   ~100 MB/s page faults; without these, numpy kernels run 40-160x slower
   (measured: FSST decompress 0.5 -> 82 MB/s). Harmless elsewhere.
+- the Python worker daemon (``worker_daemon``: a task re-reads
+  pyspark.zip's directory only when the archive changed) and the workers'
+  import path, pinned to the directory holding this package: workers find
+  the driver's engine copy even when the driver's cwd holds none (a cwd
+  copy still comes first on their ``sys.path``)
 """
 
 from __future__ import annotations
@@ -89,6 +94,7 @@ def get_spark(app: str = "mvt-spark", cores: int | str | None = None,
 
     apply_malloc_env()  # before the JVM forks python workers
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    engine_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -102,6 +108,8 @@ def get_spark(app: str = "mvt-spark", cores: int | str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.ui.enabled", "false")
         .config("spark.python.worker.reuse", "true")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", engine_root)
     )
     for k, v in MALLOC_ENV.items():
         b = b.config(f"spark.executorEnv.{k}", v)

@@ -32,7 +32,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..plans.manifest import read_marker, write_marker
+from ..plans.manifest import manifest_spark_schema, read_marker, write_marker
 
 _SNAPSHOT_FILE = "compact_sources.json"
 
@@ -263,7 +263,8 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
     content fingerprints (``content_fingerprint``), and delete the aside
     dir only on an exact match. Returns the reaped aside dirs.
 
-    Raises ``ValueError`` on any mismatch and leaves that aside dir in
+    Every matching aside dir is reaped first; then, if any did not match,
+    one ``ValueError`` names every mismatch, and those aside dirs stay in
     place — the retired source segments are the recovery path, exactly the
     discipline the encode commit markers follow (nothing is deleted until
     the replacement is proven equal). An aside dir whose compacted segment
@@ -278,7 +279,7 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
     aside_root = os.path.join(out_dir, ".pre_compact")
     if not os.path.isdir(aside_root):
         return []
-    reaped = []
+    reaped, mismatches = [], []
     for name in sorted(os.listdir(aside_root)):
         aside = os.path.join(aside_root, name)
         info = read_marker(os.path.join(aside, "promoted.json"))
@@ -292,12 +293,16 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
         want = content_fingerprint(decode_table(spark, srcs))
         got = content_fingerprint(decode_table(spark, comp))
         if want != got:
-            raise ValueError(
+            mismatches.append(
                 f"compacted segment {info['compacted']} does not match its "
                 f"retired sources in {aside}: sources (rows, fp)={want}, "
-                f"compacted={got} — aside dir kept for recovery")
+                f"compacted={got}")
+            continue
         shutil.rmtree(aside)
         reaped.append(aside)
+    if mismatches:
+        raise ValueError("; ".join(mismatches)
+                         + " — aside dirs kept for recovery")
     return reaped
 
 
@@ -386,7 +391,7 @@ def segments_manifest(spark, out_dir: str):
     if not segs:
         raise FileNotFoundError(f"no committed segments under {out_dir}")
     mdirs = [os.path.join(s, "manifest.parquet") for s in segs]
-    return (spark.read.parquet(*mdirs)
+    return (spark.read.schema(manifest_spark_schema()).parquet(*mdirs)
             .withColumn("segment",
                         F.regexp_extract(F.input_file_name(),
                                          r"segment=([^/]+)/", 1)))

@@ -16,6 +16,10 @@ export MALLOC_MMAP_THRESHOLD_=2147483648 MALLOC_TRIM_THRESHOLD_=2147483648 MALLO
 rm -f "$PKG"
 (cd "$REPO" && zip -qr "$PKG" mapbox_vector_tile_java_spark -x '*.pyc' -x '*__pycache__*')
 
+# pyspark's default worker daemon: --py-files reaches workers per task, so
+# the engine's worker_daemon (see session.py) is not importable when the
+# daemon starts. An executor image with the engine installed can set
+# spark.python.daemon.module=mapbox_vector_tile_java_spark.worker_daemon.
 exec spark-submit \
   --master "$MASTER" \
   --conf spark.sql.shuffle.partitions=32 \

@@ -383,6 +383,44 @@ def test_verify_and_reap_deletes_only_on_match(spark, tmp_path):
     assert content_fingerprint(na) != content_fingerprint(nb)
 
 
+def test_verify_and_reap_reaps_past_a_mismatch(spark, tmp_path):
+    """A tampered aside dir that sorts first does not keep a later,
+    verifiable one from being reaped: every match is reaped, then one
+    ValueError names the mismatch, whose aside dir is kept."""
+    import json
+    import shutil
+
+    from mapbox_vector_tile_java_spark.streaming.incremental import (
+        verify_and_reap)
+
+    root = str(tmp_path / "tbl")
+    src = webtext_df(spark, 300, seed=19, partitions=2)
+    for k in range(3):
+        encode_webtext(src.where(F.pmod(F.xxhash64("url"), F.lit(3)) == k),
+                       os.path.join(root, f"segment={k}"), n_parts=1)
+    for k in range(2):
+        dst = str(tmp_path / f"compacted{k}")
+        compact_segments(spark, root, dst, n_parts=1,
+                         segments=[f"segment={k}"])
+        promote_compacted(root, dst)
+    aside_root = os.path.join(root, ".pre_compact")
+    first, _ = sorted(os.listdir(aside_root))
+    # the first claims segment=2 was retired too: it can no longer match
+    aside = os.path.join(aside_root, first)
+    shutil.move(os.path.join(root, "segment=2"),
+                os.path.join(aside, "segment=2"))
+    meta = os.path.join(aside, "promoted.json")
+    with open(meta) as f:
+        info = json.load(f)
+    info["segments"].append("segment=2")
+    with open(meta, "w") as f:
+        json.dump(info, f)
+    with pytest.raises(ValueError, match="does not match") as err:
+        verify_and_reap(spark, root)
+    assert aside in str(err.value)
+    assert os.listdir(aside_root) == [first]
+
+
 def test_promote_torn_pairing_keeps_aside(spark, tmp_path, monkeypatch):
     """A promote killed inside its promoted.json write leaves no pairing
     file (write_marker commits by rename): the next verify_and_reap does

@@ -67,6 +67,32 @@ def test_column_pruned_decode(spark, webtext_encoded):
     assert dec.count() == 20_000
 
 
+def test_engine_reads_pass_known_schemas(spark, webtext_encoded):
+    """read_manifest and decode_table hand parquet the schema the engine
+    wrote: building them runs no footer-inference job, and the schemas
+    equal the ones inference finds."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from mapbox_vector_tile_java_spark.plans import manifest as M
+
+    sc = spark.sparkContext
+    sc.setJobGroup("known_schemas", "known_schemas")
+    try:
+        m = read_manifest(spark, webtext_encoded)
+        dec = decode_table(spark, webtext_encoded)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("known_schemas")) == 0
+    path = os.path.join(webtext_encoded, "manifest.parquet")
+    assert m.schema == spark.read.parquet(path).schema
+    blocks = sorted(glob.glob(os.path.join(M.blocks_dir(webtext_encoded),
+                                           "*.parquet")))
+    schema, _, _ = M.read_meta(webtext_encoded)
+    assert (from_arrow_schema(M.block_schema(schema))
+            == spark.read.parquet(*blocks).schema)
+    assert dec.schema.names == schema.names
+
+
 def test_zone_map_pruning(spark, tmp_path):
     # encode with time-bucketed partitions so block zone maps are disjoint
     from pyspark.sql import functions as F
