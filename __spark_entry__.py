@@ -70,9 +70,9 @@ def _minhash_idx_dir(sf_dir: str) -> str:
 
 
 def _gram_dir(sf_dir: str) -> str:
-    """Shared gram-record dir for the verified dedup routes: both
+    """Shared gram-block dir for the verified dedup routes: both
     ngram_jaccard_lsh and ngram_jaccard_winnow verify against the SAME
-    per-doc gram records over documents.text (k=3), so whichever runs
+    packed gram blocks over documents.text (k=3), so whichever runs
     first materializes the stage and the other reuses it (the
     ``build_gram_records`` marker protocol). Same write-once/read-many
     discipline as the IVF index dir above; a dedup ``temp_dir``."""

@@ -21,6 +21,11 @@ and winnowing fingerprints in textstats.py, the gram records) reads its
 Arrow batches through ONE reader, ``text_batches``, and every hashed route
 folds its k-byte windows through ONE window hash, ``_window_hashes``.
 
+Every exact verify reads ONE persisted gram artifact: the ranked hash
+blocks (b, ids, cnts, vocab, codes) that ``build_gram_records`` packs once
+per corpus; a verify joins candidate block pairs against their scan and
+never re-shuffles or re-ranks the corpus grams.
+
 Reference lineage: consecutive-duplicate detection is the reference's
 repeated-point stats (JtsGeomStats.java:105-153) and dedup-on-encode
 (JtsAdapter.java:405,488) — lossy there, analysis-only here (we never drop
@@ -185,24 +190,28 @@ def signature_batch(ids: np.ndarray, lens: np.ndarray, data: np.ndarray,
          pa.ListArray.from_arrays(offsets, values)], names=["id", "sig"])
 
 
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       num_perm: int = 64, shingle_k: int = 5,
-                       seed: int = 42) -> DataFrame:
-    """(id, sig: array<long>) — vectorized minhash over char shingles."""
+def _signature_schema():
+    """(id long, sig array<long>): the signature stage's rows, and the
+    known schema of every read of a persisted signature table."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    out_schema = StructType([
+    return StructType([
         StructField("id", LongType(), False),
         StructField("sig", ArrayType(LongType(), False), False),
     ])
 
+
+def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
+                       num_perm: int = 64, shingle_k: int = 5,
+                       seed: int = 42) -> DataFrame:
+    """(id, sig: array<long>) — vectorized minhash over char shingles."""
     def fn(batches):
         for ids, lens, data in text_batches(batches):
             yield signature_batch(ids, lens, data, num_perm, shingle_k, seed)
 
     src = _spread(df.select(F.col(id_col).cast("long").alias("id"),
                             F.col(text_col)))
-    return src.mapInArrow(fn, out_schema)
+    return src.mapInArrow(fn, _signature_schema())
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -310,7 +319,7 @@ def build_minhash_index(df: DataFrame, text_col: str, id_col: str,
                        seed).write.mode("overwrite").parquet(index_dir)
     write_marker(os.path.join(index_dir, _MINHASH_IDX_MARKER),
                  {"num_perm": num_perm, "shingle_k": shingle_k, "seed": seed})
-    return spark.read.parquet(index_dir)
+    return spark.read.schema(_signature_schema()).parquet(index_dir)
 
 
 def minhash_index_append(new_df: DataFrame, text_col: str, id_col: str,
@@ -343,7 +352,11 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     old×old pair is formed only to be thrown away. Every candidate then
     passes the shared ``exact_jaccard_verify`` over corpus ∪ new text, so
     precision is exact — identical contract to ``ngram_jaccard_lsh``,
-    restricted to pairs the new batch introduces.
+    restricted to pairs the new batch introduces. With a ``gram_dir``
+    whose blocks were packed over corpus ∪ new (``build_gram_records``,
+    same ``k`` and ``block_rows``), the verify side is a scan of those
+    packed blocks too: no gram record is re-read, re-shuffled or
+    re-ranked per op.
 
     Ids must be unique across corpus and batch (the table's primary key).
     Accepted workflow: drop/keep decisions from the returned pairs, then
@@ -356,8 +369,8 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
         minhash_signatures(new_df, text_col, id_col, p["num_perm"],
                            p["shingle_k"], p["seed"]),
         "mvt_minhash_inc_")
-    cands = band_pairs(spark.read.parquet(index_dir), keys,
-                       probe=new_sig).select("id_a", "id_b")
+    cands = band_pairs(spark.read.schema(_signature_schema()).parquet(
+        index_dir), keys, probe=new_sig).select("id_a", "id_b")
     both = (corpus_df.select(F.col(id_col).cast("long").alias(id_col),
                              text_col)
             .unionByName(new_df.select(
@@ -405,7 +418,7 @@ def _materialize_fp(df: DataFrame, prefix: str) -> DataFrame:
     for the session."""
     work_dir = temp_dir(prefix)
     df.write.mode("overwrite").parquet(work_dir)
-    return df.sparkSession.read.parquet(work_dir)
+    return df.sparkSession.read.schema(df.schema).parquet(work_dir)
 
 
 def cleanup_temp_dirs() -> int:
@@ -425,12 +438,24 @@ def cleanup_temp_dirs() -> int:
     return n
 
 
+def _gram_source(df: DataFrame, text_col: str, id_col: str,
+                 k: int) -> DataFrame:
+    """(id, text) rows with at least one char-k-gram: exactly the rows
+    ``_gram_record_df`` emits one record for, so its count is theirs."""
+    return (df.where(F.col(text_col).isNotNull()
+                     & (F.length(text_col) >= k))
+              .select(F.col(id_col).cast("long").alias("id"),
+                      F.col(text_col)))
+
+
 def _gram_record_df(df: DataFrame, text_col: str, id_col: str,
                     k: int) -> DataFrame:
     """(id, cnt, rec): each doc's distinct char-k-gram set packed into ONE
-    binary blob of bytewise-sorted fixed-width records (see _gram_records).
-    The packed form is what the block-pair verify ships — one blob per doc,
-    never one gram-string array per candidate pair.
+    binary blob of bytewise-sorted fixed-width records (4k+1 bytes: a
+    length byte, then the gram's utf-8 bytes, zero-padded).
+    ``build_gram_records`` packs these blobs into the ranked hash blocks
+    the block-pair verify ships — never one gram-string array per
+    candidate pair.
 
     Gram extraction happens INSIDE the kernel from the raw text bytes —
     the earlier Catalyst transform/array_distinct/array_sort pipeline
@@ -446,10 +471,7 @@ def _gram_record_df(df: DataFrame, text_col: str, id_col: str,
 
     width = 4 * k  # utf-8 worst case: 4 bytes per char
     rw = width + 1
-    src = (df.where(F.col(text_col).isNotNull()
-                    & (F.length(text_col) >= k))
-             .select(F.col(id_col).cast("long").alias("id"),
-                     F.col(text_col)))
+    src = _gram_source(df, text_col, id_col, k)
     out_schema = pa.schema([pa.field("id", pa.int64()),
                             pa.field("cnt", pa.int64()),
                             pa.field("rec", pa.binary())])
@@ -545,42 +567,91 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
 _GRAMS_MARKER = "_GRAMS_OK"
 
 
-def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
-                       gram_dir: str) -> DataFrame:
-    """Materialize (or reuse) the per-doc gram-record stage at ``gram_dir``.
+def _gram_blocks_schema():
+    """The persisted gram artifact: one row per hash block ``b``, holding
+    its docs' ids (sorted int64) and per-doc record counts (int64), the
+    block's sorted distinct records (``vocab``, ``S{4k+1}``) and one int32
+    rank in ``vocab`` per record (``codes``), all as raw bytes."""
+    from pyspark.sql.types import (BinaryType, IntegerType, StructField,
+                                   StructType)
 
-    The gram records are a deterministic function of (corpus, text_col, k)
-    and every verified dedup route ships the SAME records through
-    ``exact_jaccard_verify`` — so when several routes run over one corpus
-    (minhash-verified, winnow-verified, a cleaning pipeline), the stage is
-    built ONCE and reused, exactly like the write-once IVF index. A
-    ``_GRAMS_OK`` marker (``write_marker``; ignored by the parquet reader:
-    leading underscore) records the parameters and ``n_rows``, the record
-    count taken by one count of the written parquet, so a reuse needs no
-    count job. A parameter mismatch, or a marker that is missing or
-    unreadable, rebuilds and overwrites. Callers own ``gram_dir``'s
-    lifecycle; reuse across process restarts is safe as long as the source
-    table is unchanged (the same contract as the IVF index dir and the
-    encode resume markers)."""
+    return StructType([
+        StructField("b", IntegerType(), False),
+        *[StructField(c, BinaryType(), False)
+          for c in ("ids", "cnts", "vocab", "codes")]])
+
+
+def _gram_block(c: str, n_blocks: int):
+    """The hash block of an id column: the one block function of
+    ``build_gram_records``' pack and of the verify's candidate grouping."""
+    return F.pmod(F.xxhash64(c), F.lit(n_blocks)).cast("int")
+
+
+def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
+                       gram_dir: str, block_rows: int = 512) -> DataFrame:
+    """Materialize (or reuse) the packed gram blocks at ``gram_dir``.
+
+    Each doc's distinct char-k-grams become sorted fixed-width records
+    (``_gram_record_df``); docs are hashed into ``n_blocks = ceil(n_rows /
+    block_rows)`` blocks, and each block is packed and ranked ONCE, here:
+    (b, ids, cnts, vocab, codes), see ``_gram_blocks_schema`` and
+    ``rank_gram_block``. Those packed blocks are the artifact, so verify
+    reads them as they lie: no per-op shuffle and no re-rank of the
+    corpus.
+
+    The blocks are a deterministic function of (corpus, text_col, k,
+    block_rows), and every verified dedup route reads the SAME blocks
+    through ``exact_jaccard_verify`` — so when several routes run over one
+    corpus (minhash-verified, winnow-verified, a cleaning pipeline), the
+    stage is built ONCE and reused, exactly like the write-once IVF index.
+    A ``_GRAMS_OK`` marker (``write_marker``; ignored by the parquet
+    reader: leading underscore) records the parameters, ``n_rows`` (the
+    docs with at least one k-gram, counted on the source before the pack)
+    and ``n_blocks``, so a reuse needs no job at all. A parameter mismatch,
+    or a marker that is missing, unreadable or lacks a count (the older
+    per-doc record format), rebuilds and overwrites. Callers own
+    ``gram_dir``'s lifecycle; reuse across process restarts is safe as
+    long as the source table is unchanged (the same contract as the IVF
+    index dir and the encode resume markers)."""
     spark = df.sparkSession
+    schema = _gram_blocks_schema()
     marker = os.path.join(gram_dir, _GRAMS_MARKER)
-    want = {"k": int(k), "text_col": text_col, "id_col": id_col}
+    want = {"k": int(k), "text_col": text_col, "id_col": id_col,
+            "block_rows": int(block_rows)}
     got = read_marker(marker) or {}
-    if got.pop("n_rows", None) is not None and got == want:
-        return spark.read.parquet(gram_dir)
-    _gram_record_df(df, text_col, id_col, k).write.mode(
-        "overwrite").parquet(gram_dir)
-    recs = spark.read.parquet(gram_dir)
-    write_marker(marker, {**want, "n_rows": recs.count()})
-    return recs
+    counts = [got.pop(c, None) for c in ("n_rows", "n_blocks")]
+    if None not in counts and got == want:
+        return spark.read.schema(schema).parquet(gram_dir)
+    n = _gram_source(df, text_col, id_col, k).count()
+    n_blocks = max(1, -(-n // block_rows))
+    rw = 4 * k + 1
+
+    def pack(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("id")
+        vocab, codes = rank_gram_block(
+            np.frombuffer(b"".join(pdf["rec"]), dtype=f"S{rw}"))
+        return pd.DataFrame({
+            "b": [int(pdf["b"].iloc[0])],
+            "ids": [pdf["id"].to_numpy(dtype=np.int64).tobytes()],
+            "cnts": [pdf["cnt"].to_numpy(dtype=np.int64).tobytes()],
+            "vocab": [vocab.tobytes()], "codes": [codes.tobytes()]})
+
+    (_gram_record_df(df, text_col, id_col, k)
+     .withColumn("b", _gram_block("id", n_blocks))
+     .groupBy("b").applyInPandas(pack, schema)
+     .write.mode("overwrite").parquet(gram_dir))
+    write_marker(marker, {**want, "n_rows": n, "n_blocks": n_blocks})
+    return spark.read.schema(schema).parquet(gram_dir)
 
 
 def rank_gram_block(recs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """One hash block's gram records (``S{4k+1}``, each doc's run sorted
     bytewise) -> (vocab, codes): the block's sorted distinct records and
     each record's int32 rank in ``vocab``. Ranks follow byte order, so
-    every doc's code run stays sorted. Pure numpy, shared by the verify
-    stage's per-block pack and the kernel tests."""
+    every doc's code run stays sorted. Pure numpy, shared by
+    ``build_gram_records``' per-block pack and the kernel tests."""
     vocab, codes = np.unique(recs, return_inverse=True)
     return vocab, codes.astype(np.int32)
 
@@ -646,77 +717,36 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     composes with (minhash-LSH: ngram_jaccard_lsh; winnowing:
     ngram_jaccard_winnow). Returns (id_a, id_b, jaccard >= threshold).
 
-    Verify plan: gram sets are packed once per doc into sorted fixed-width
-    records (_gram_record_df), and docs are grouped into hash blocks. Each
-    block's grams are ranked once, when the block is packed: the block
-    ships its sorted distinct records (``vocab``) and one int32 code per
-    record (``codes``), never the records themselves. Candidate pairs are
-    grouped by their (block_a, block_b) key, and ONE Arrow kernel per block
-    pair remaps x's vocabulary into y's code space and intersects integer
-    codes with numpy searchsorted (``block_pair_jaccard``). Each doc's codes
-    cross the wire once per partner BLOCK — not once per candidate pair,
-    which is what made both the Catalyst array_intersect plan and the naive
+    Verify plan: the packed gram blocks come from ONE path,
+    ``build_gram_records``: into ``gram_dir`` when given (reused as they
+    lie when its marker matches ``k``, ``block_rows`` and the columns),
+    else into a fresh ``temp_dir``. Each block ships its sorted distinct
+    records (``vocab``) and one int32 code per record (``codes``), ranked
+    once when the blocks were built. Candidate pairs are grouped by their
+    (block_a, block_b) key under the block function and ``n_blocks`` the
+    marker records, each group joins its two blocks straight from the
+    block scan, and ONE Arrow kernel per block pair remaps x's vocabulary
+    into y's code space and intersects integer codes with numpy
+    searchsorted (``block_pair_jaccard``). Each doc's codes cross the wire
+    once per partner BLOCK — not once per candidate pair, which is what
+    made both the Catalyst array_intersect plan and the naive
     per-pair-kernel plan transfer-bound on candidate-dense corpora.
     Exactness: vocabularies carry full gram bytes (length-prefixed, no
     hashing), and double division + half-away rounding match the ANSI
-    oracle bit-for-bit.
-
-    The records come from ONE path, ``build_gram_records``: into
-    ``gram_dir`` when given (reused when its marker matches ``k`` and the
-    columns), else into a fresh ``temp_dir``. The hash-block count is sized
-    from the ``n_rows`` that marker records, so verify itself runs no count
-    job.
+    oracle bit-for-bit. Verify itself runs no count job, no shuffle of the
+    blocks and no pandas pack.
     """
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import (BinaryType, IntegerType, StructField,
-                                   StructType)
 
     rw = 4 * k + 1
     gram_dir = gram_dir or temp_dir("mvt_gramrec_")
-    fp = build_gram_records(df, text_col, id_col, k, gram_dir)
-    n = read_marker(os.path.join(gram_dir, _GRAMS_MARKER))["n_rows"]
-    n_blocks = max(1, -(-n // block_rows))
-    blk = lambda c: F.pmod(F.xxhash64(c), F.lit(n_blocks)).cast("int")
+    packed = build_gram_records(df, text_col, id_col, k, gram_dir,
+                                block_rows)
+    n_blocks = read_marker(os.path.join(gram_dir, _GRAMS_MARKER))["n_blocks"]
 
-    pack_schema = StructType([
-        StructField("b", IntegerType(), False),
-        StructField("ids", BinaryType(), False),
-        StructField("cnts", BinaryType(), False),
-        StructField("vocab", BinaryType(), False),
-        StructField("codes", BinaryType(), False),
-    ])
-
-    def pack(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("id")
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        cnts = pdf["cnt"].to_numpy(dtype=np.int64)
-        vocab, codes = rank_gram_block(
-            np.frombuffer(b"".join(pdf["rec"]), dtype=f"S{rw}"))
-        return pd.DataFrame({"b": [int(pdf["b"].iloc[0])],
-                             "ids": [ids.tobytes()],
-                             "cnts": [cnts.tobytes()],
-                             "vocab": [vocab.tobytes()],
-                             "codes": [codes.tobytes()]})
-
-    packed = (fp.withColumn("b", blk("id"))
-                .groupBy("b").applyInPandas(pack, pack_schema))
-
-    # size-ratio prefilter (jaccard <= min|A|,|B| / max|A|,|B|) on the tiny
-    # (id, cnt) side table — prunes pairs that can never reach threshold
-    # before any gram bytes move. The ratio is rounded like the kernel's
-    # jaccard, so a pair whose rounded jaccard reaches threshold survives
-    sizes = fp.select("id", "cnt")
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("cnt").alias("ca"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("cnt").alias("cb"))
-    pruned = (cands.join(sa, "id_a").join(sb, "id_b")
-              .where(F.round(F.least("ca", "cb") / F.greatest("ca", "cb"), 6)
-                     >= F.lit(threshold))
-              .select("id_a", "id_b"))
-
-    grouped = (pruned
-               .groupBy(blk("id_a").alias("ba"), blk("id_b").alias("bb"))
+    grouped = (cands
+               .groupBy(_gram_block("id_a", n_blocks).alias("ba"),
+                        _gram_block("id_b", n_blocks).alias("bb"))
                .agg(F.collect_list(F.struct("id_a", "id_b")).alias("prs")))
     x, y = packed.alias("x"), packed.alias("y")
     sides = ("ids", "cnts", "vocab", "codes")

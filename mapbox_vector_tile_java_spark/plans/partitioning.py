@@ -34,7 +34,7 @@ def plan_webtext(df: DataFrame, n_parts: int,
     if hot_hosts:
         buckets = F.create_map(*[x for h, n in sorted(hot_hosts.items())
                                  for x in (F.lit(h), F.lit(n))])
-        nb = F.coalesce(buckets.getItem(host), F.lit(1))
+        nb = F.coalesce(buckets[host], F.lit(1))
         salt = F.pmod(F.xxhash64(F.col("url")), nb)
     out = (df.withColumn("__pkey", F.xxhash64(host, salt))
              .repartition(n_parts, F.col("__pkey"))

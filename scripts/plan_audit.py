@@ -39,12 +39,14 @@ AUDITS = [
      ["Broadcast", "Window", "Exchange"]),
     ("dedup_ngram_lsh_verified",
      "block-pair exact verify: candidate pairs aggregate per (block_a, "
-     "block_b) key; each packed gram block is ranked once into a sorted "
-     "vocabulary plus int32 codes (vocab_*/codes_*) and joins once per "
-     "partner block; one MapInArrow kernel per block pair remaps one "
+     "block_b) key; the gram blocks were packed and ranked once into a "
+     "sorted vocabulary plus int32 codes (vocab/codes) by "
+     "build_gram_records, and verify joins them straight from their "
+     "parquet scan (mvt_gramshare: no pandas pack, no exchange between the "
+     "scan and its join); one MapInArrow kernel per block pair remaps one "
      "vocabulary into the other's code space and intersects codes — gram "
      "bytes never shuffle per candidate pair",
-     ["MapInArrow", "Exchange", "HashAggregate"]),
+     ["MapInArrow", "Exchange", "HashAggregate", "FileScan parquet [b#"]),
     ("meta_only_stats",
      "aggregate pushdown to metadata: the ONLY scan is manifest.parquet "
      "(no c_* blob columns in any ReadSchema), partial agg before the "
@@ -65,9 +67,11 @@ AUDITS = [
      "through a BroadcastExchange: batch×batch, and index×batch with the "
      "index streamed. No join takes the index on both sides, so the index "
      "keys are never shuffled and no old×old pair is formed; the only "
-     "exchange before verify aggregates the candidate pairs",
+     "exchange before verify aggregates the candidate pairs. Verify reads "
+     "the persisted packed gram blocks (mvt_gramshare) as a parquet scan: "
+     "no pandas pack and no shuffle of the corpus grams per op",
      ["BroadcastHashJoin [band", "HashedRelationBroadcastMode(List(input[1",
-      ",sig#", "Exchange hashpartitioning(id_a"]),
+      ",sig#", "Exchange hashpartitioning(id_a", "FileScan parquet [b#"]),
 ]
 
 HEADER = """# Physical-plan audit (sf0.01, local[8])

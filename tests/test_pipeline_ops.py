@@ -3,6 +3,7 @@ planted duplicates, similarity search sanity, multimodal plumbing."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pyspark.sql import Row, functions as F
@@ -623,8 +624,8 @@ def _job_count(spark, tag, fn):
 
 def test_gram_records_reused_without_rewrite_or_count(spark, tmp_path):
     """Matching params reuse gram_dir as is (part files untouched), the
-    marker records the row count, and verify over the reused records runs
-    no job beyond reading them: no count job."""
+    marker records the row and block counts, and verify over the reused
+    blocks runs no job at all: no count job, no footer-inference job."""
     import glob
     import os
 
@@ -639,7 +640,8 @@ def test_gram_records_reused_without_rewrite_or_count(spark, tmp_path):
     D.build_gram_records(df, "text", "doc_id", 3, g)
     marker = read_marker(os.path.join(g, "_GRAMS_OK"))
     assert marker == {"k": 3, "text_col": "text", "id_col": "doc_id",
-                      "n_rows": 4}  # "ab" has no 3-gram, so no record
+                      "block_rows": 512, "n_rows": 4,
+                      "n_blocks": 1}  # "ab" has no 3-gram, so no record
     parts = {p: os.path.getmtime(p)
              for p in glob.glob(os.path.join(g, "part-*"))}
     assert parts
@@ -651,15 +653,177 @@ def test_gram_records_reused_without_rewrite_or_count(spark, tmp_path):
     n_verify, v = _job_count(spark, "verify_plan", lambda: (
         D.exact_jaccard_verify(df, cands, "text", "doc_id", k=3,
                                gram_dir=g)))
-    n_read, _ = _job_count(spark, "grams_read",
-                           lambda: spark.read.parquet(g))
-    assert n_verify == n_read
+    assert n_verify == 0
     assert {(r["id_a"], r["id_b"]) for r in v.collect()} == {(0, 1), (2, 3)}
+
+
+def test_dedup_reads_pass_known_schemas(spark, tmp_path, monkeypatch):
+    """The signature index (build_minhash_index's return, dedup_incremental's
+    index scan) and ``_materialize_fp``'s re-read hand parquet the schema
+    the engine wrote: no job runs after each function's last parquet write
+    (a schema-less read runs one footer-inference job there), and the
+    schemas equal the inferred ones."""
+    from pyspark.sql import DataFrameWriter
+
+    sc = spark.sparkContext
+    write = DataFrameWriter.parquet
+
+    def jobs_after_writes(tag, fn):
+        def write_then_tag(self, *a, **kw):
+            sc._jsc.clearJobGroup()
+            out = write(self, *a, **kw)
+            sc.setJobGroup(tag, tag)
+            return out
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", write_then_tag)
+        try:
+            out = fn()
+        finally:
+            monkeypatch.setattr(DataFrameWriter, "parquet", write)
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(tag)), out
+
+    docs = spark.createDataFrame(
+        [(i, f"document {i} " + "shared filler text " * (1 + i % 3))
+         for i in range(12)], "doc_id long, text string")
+    corpus, new = docs.where("doc_id < 8"), docs.where("doc_id >= 8")
+    idx, g = str(tmp_path / "idx"), str(tmp_path / "grams")
+    D.build_gram_records(docs, "text", "doc_id", 3, g)
+    n, index = jobs_after_writes("known_schema_index", lambda: (
+        D.build_minhash_index(corpus, "text", "doc_id", idx)))
+    assert n == 0
+    assert index.schema == spark.read.parquet(idx).schema
+    n, fp = jobs_after_writes("known_schema_fp", lambda: D._materialize_fp(
+        D.minhash_signatures(new, "text", "doc_id"), "mvt_test_fp_"))
+    assert n == 0
+    assert fp.schema == spark.read.parquet(D._FP_TMP_DIRS[-1]).schema
+    n, pairs = jobs_after_writes("known_schema_inc", lambda: (
+        D.dedup_incremental(corpus, new, "text", "doc_id", idx, gram_dir=g)))
+    assert n == 0
+    assert pairs.collect()
+
+
+def _plan_parents(plan: str) -> dict[int, int]:
+    """Line index -> its parent's line index in a physical-plan tree
+    string (the nearest earlier line whose node starts further left)."""
+    import re
+
+    lines = plan.split("\n")
+    depth = [re.match(r"[\s:+|-]*", l).end() for l in lines]
+    parents, stack = {}, []
+    for i, d in enumerate(depth):
+        if d == len(lines[i]):
+            continue
+        while stack and depth[stack[-1]] >= d:
+            stack.pop()
+        if stack:
+            parents[i] = stack[-1]
+        stack.append(i)
+    return parents
+
+
+def test_verify_reads_packed_blocks_without_shuffle_or_pack(spark,
+                                                            tmp_path):
+    """Verify over a reused gram_dir joins the packed blocks straight from
+    their parquet scan: the executed plan runs no pandas pack
+    (FlatMapGroupsInPandas) and no shuffle between the block scan and its
+    join, and the part files are not rewritten."""
+    import glob
+    import os
+
+    df = spark.createDataFrame(
+        [(i, f"document {i} " + "shared filler text " * (1 + i % 3))
+         for i in range(12)], "doc_id long, text string")
+    g = str(tmp_path / "grams")
+    D.build_gram_records(df, "text", "doc_id", 3, g, 4)
+    parts = {p: os.path.getmtime(p)
+             for p in glob.glob(os.path.join(g, "part-*"))}
+    v = D.exact_jaccard_verify(df, _all_pairs(df), "text", "doc_id", k=3,
+                               block_rows=4, gram_dir=g)
+    assert v.collect()
+    assert {p: os.path.getmtime(p)
+            for p in glob.glob(os.path.join(g, "part-*"))} == parts
+    # AQE's final plan and the initial one: the final plan may reuse one
+    # side's broadcast for the other, so it holds one block scan or two
+    plan = v._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    lines = plan.split("\n")
+    parents = _plan_parents(plan)
+    scans = [i for i, l in enumerate(lines)
+             if "FileScan parquet" in l and os.path.basename(g) in l]
+    assert len(scans) >= 3
+    for i in scans:
+        above = []
+        while i in parents and "Join" not in lines[parents[i]]:
+            i = parents[i]
+            above.append(lines[i])
+        assert i in parents, "block scan reaches no join"
+        assert not [l for l in above if "Shuffle" in l
+                    or ("Exchange" in l and "BroadcastExchange" not in l)]
+
+
+def test_gram_blocks_rebuilt_on_block_rows_or_old_marker(spark, tmp_path):
+    """A gram_dir packed for another block_rows is rebuilt, and so is one
+    holding per-doc records under the older marker, which lacks
+    block_rows and n_blocks."""
+    import os
+
+    from mapbox_vector_tile_java_spark.plans.manifest import (read_marker,
+                                                              write_marker)
+
+    df = spark.createDataFrame(
+        [(i, f"text number {i} with some words") for i in range(9)],
+        "doc_id long, text string")
+    g = str(tmp_path / "grams")
+    marker = os.path.join(g, "_GRAMS_OK")
+    D.build_gram_records(df, "text", "doc_id", 3, g)
+    assert read_marker(marker)["n_blocks"] == 1
+    blocks = D.build_gram_records(df, "text", "doc_id", 3, g, 2).collect()
+    assert read_marker(marker) == {
+        "k": 3, "text_col": "text", "id_col": "doc_id", "block_rows": 2,
+        "n_rows": 9, "n_blocks": 5}
+    assert {r["b"] for r in blocks} <= set(range(5))
+    assert sum(len(r["ids"]) for r in blocks) == 9 * 8
+
+    D._gram_record_df(df, "text", "doc_id", 3).write.mode(
+        "overwrite").parquet(g)
+    write_marker(marker, {"k": 3, "text_col": "text", "id_col": "doc_id",
+                          "n_rows": 9})
+    blocks = D.build_gram_records(df, "text", "doc_id", 3, g).collect()
+    assert read_marker(marker)["n_blocks"] == 1
+    assert [r["b"] for r in blocks] == [0]
+    assert (sorted(np.frombuffer(blocks[0]["ids"], dtype=np.int64))
+            == list(range(9)))
+
+
+def test_exact_verify_multi_block_matches_catalyst_on_documents(spark,
+                                                                tmp_path):
+    """On a 300-doc slice of the benchmark corpus packed into 5 blocks,
+    exact verify over the packed artifact returns exactly the Catalyst
+    jaccard pairs among the minhash-LSH candidates."""
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench",
+                        "data", "documents.parquet")
+    docs = spark.read.parquet(path).where(F.col("doc_id") < 300)
+    g = str(tmp_path / "grams")
+    cands = D.minhash_lsh_pairs(docs, "text", "doc_id",
+                                hash_bands=True).select("id_a", "id_b")
+    got = {tuple(r) for r in D.exact_jaccard_verify(
+        docs, cands, "text", "doc_id", k=3, threshold=0.5, block_rows=64,
+        gram_dir=g).collect()}
+    assert len(spark.read.parquet(g).collect()) == 5
+    exact = {tuple(r) for r in D.ngram_jaccard_pairs(
+        docs, "text", "doc_id", k=3, threshold=0.5)
+        .join(cands, ["id_a", "id_b"])
+        .select("id_a", "id_b", "jaccard").collect()}
+    assert len(exact) > 100
+    assert got == exact
 
 
 def test_gram_records_rebuilt_on_k_mismatch(spark, tmp_path):
     """A gram_dir built with another k is rebuilt, not reused: the marker
-    and the records follow the caller's k."""
+    and the packed blocks follow the caller's k."""
     import os
 
     from mapbox_vector_tile_java_spark.plans.manifest import read_marker
@@ -669,11 +833,19 @@ def test_gram_records_rebuilt_on_k_mismatch(spark, tmp_path):
     g = str(tmp_path / "grams")
     D.build_gram_records(df, "text", "doc_id", 3, g)
     assert read_marker(os.path.join(g, "_GRAMS_OK"))["n_rows"] == 3
-    recs = D.build_gram_records(df, "text", "doc_id", 4, g)
+    (blk,) = D.build_gram_records(df, "text", "doc_id", 4, g).collect()
     assert read_marker(os.path.join(g, "_GRAMS_OK")) == {
-        "k": 4, "text_col": "text", "id_col": "doc_id", "n_rows": 2}
-    assert {r["id"]: len(r["rec"]) for r in recs.collect()} == {
-        0: 17, 1: 2 * 17}  # one record of 4k+1 bytes per distinct 4-gram
+        "k": 4, "text_col": "text", "id_col": "doc_id", "block_rows": 512,
+        "n_rows": 2, "n_blocks": 1}
+    ids = np.frombuffer(blk["ids"], dtype=np.int64)
+    cnts = np.frombuffer(blk["cnts"], dtype=np.int64)
+    assert dict(zip(ids.tolist(), cnts.tolist())) == {0: 1, 1: 2}
+    # one vocabulary entry of 4k+1 bytes per distinct 4-gram, one code per
+    # per-doc record
+    vocab = np.frombuffer(blk["vocab"], dtype="S17")
+    assert len(blk["vocab"]) == 2 * 17
+    assert list(vocab) == [b"\x04abcd", b"\x04bcde"]
+    assert np.frombuffer(blk["codes"], dtype=np.int32).tolist() == [0, 0, 1]
     assert {(r["id_a"], r["id_b"], r["jaccard"])
             for r in D.exact_jaccard_verify(
                 df, _all_pairs(df), "text", "doc_id", k=4, threshold=0.0,
@@ -681,7 +853,7 @@ def test_gram_records_rebuilt_on_k_mismatch(spark, tmp_path):
 
 
 def test_exact_verify_size_prefilter_keeps_rounded_ties(spark):
-    """The size-ratio prefilter compares the ratio rounded like jaccard:
+    """Verify compares the jaccard rounded like the SQL oracle's:
     {abc, bcd} vs {abc, bcd, cde} has jaccard 2/3 = 0.666667 after
     rounding, which reaches 0.6666669 although the unrounded 2/3 does not."""
     df = spark.createDataFrame([(0, "abcd"), (1, "abcde")],

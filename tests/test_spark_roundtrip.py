@@ -243,6 +243,18 @@ def test_all_bytes_overridden_runs_no_sampling_job(spark, tmp_path, monkeypatch)
     assert {r["codec"] for r in pairs if r["name"] in bytes_cols} == {"dict_bytes"}
 
 
+def test_salted_layout_emits_no_future_warning(spark):
+    """plan_webtext indexes its hot-host salt map with ``map[host]``;
+    ``getItem`` with a Column key is deprecated and warned on every salted
+    encode."""
+    import warnings
+
+    src = webtext_df(spark, 100, seed=3, partitions=1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        plan_webtext(src, 2, hot_hosts={"example.com": 4})
+
+
 def test_global_codec_override_rejected(spark, tmp_path):
     """Global codecs need planner-persisted symbol tables; a caller
     override naming one is refused before anything is written."""
