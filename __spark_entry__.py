@@ -50,8 +50,11 @@ _IVF_CACHE: dict[str, str] = {}
 
 
 def _ivf_dir(sf_dir: str) -> str:
+    """Write-once IVF index dir per sf_dir, shared by the ANN queries. A
+    dedup ``temp_dir``, so ``cleanup_temp_dirs`` reclaims it; ``ivf_topk``
+    rebuilds on a missing marker, so an early cleanup self-heals."""
     if sf_dir not in _IVF_CACHE:
-        _IVF_CACHE[sf_dir] = tempfile.mkdtemp(prefix="mvt_ivf_idx_")
+        _IVF_CACHE[sf_dir] = D.temp_dir("mvt_ivf_idx_")
     return _IVF_CACHE[sf_dir]
 
 

@@ -23,8 +23,14 @@ folds its k-byte windows through ONE window hash, ``_window_hashes``.
 
 Every exact verify reads ONE persisted gram artifact: the ranked hash
 blocks (b, ids, cnts, vocab, codes) that ``build_gram_records`` packs once
-per corpus; a verify joins candidate block pairs against their scan and
-never re-shuffles or re-ranks the corpus grams.
+per corpus, straight from the (id, text) rows; a verify joins candidate
+block pairs against their scan and never re-shuffles or re-ranks the
+corpus grams.
+
+Both exact block-pair kernels (gram verify and embedding cosine) pack
+their hash blocks through ONE helper, ``_pack_blocks``: one count, one
+block function (``_hash_block``) and one grouped Arrow pass that turns
+each block's rows into one row of raw-bytes cells.
 
 Reference lineage: consecutive-duplicate detection is the reference's
 repeated-point stats (JtsGeomStats.java:105-153) and dedup-on-encode
@@ -43,7 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.bytescodecs import _bytes_parts
 from ..plans.manifest import read_marker, write_marker
-from .similarity import _norms_seq
+from .similarity import _norms_seq, _vector_matrix, seq_dots
 
 MERSENNE = (1 << 61) - 1
 SHINGLE_BASE = 0x9E3779B97F4A7C15  # minhash/simhash shingle fold, mod 2^64
@@ -440,92 +446,68 @@ def cleanup_temp_dirs() -> int:
 
 def _gram_source(df: DataFrame, text_col: str, id_col: str,
                  k: int) -> DataFrame:
-    """(id, text) rows with at least one char-k-gram: exactly the rows
-    ``_gram_record_df`` emits one record for, so its count is theirs."""
+    """(id, text) rows with at least one char-k-gram: exactly the docs
+    ``gram_records`` emits a record run for, so its count is theirs and
+    every packed block holds at least one doc."""
     return (df.where(F.col(text_col).isNotNull()
                      & (F.length(text_col) >= k))
               .select(F.col(id_col).cast("long").alias("id"),
                       F.col(text_col)))
 
 
-def _gram_record_df(df: DataFrame, text_col: str, id_col: str,
-                    k: int) -> DataFrame:
-    """(id, cnt, rec): each doc's distinct char-k-gram set packed into ONE
-    binary blob of bytewise-sorted fixed-width records (4k+1 bytes: a
-    length byte, then the gram's utf-8 bytes, zero-padded).
-    ``build_gram_records`` packs these blobs into the ranked hash blocks
-    the block-pair verify ships — never one gram-string array per
-    candidate pair.
+def gram_records(ids: np.ndarray, lens: np.ndarray, data: np.ndarray,
+                 k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One ``text_batches`` item -> (ids, cnts, recs): each doc with at
+    least one char-k-gram, its number of distinct grams, and its distinct
+    grams as bytewise-sorted fixed-width records (``S{4k+1}``: a length
+    byte, then the gram's utf-8 bytes, zero-padded), doc runs
+    concatenated. Pure numpy; ``build_gram_records``' pack calls it.
 
-    Gram extraction happens INSIDE the kernel from the raw text bytes —
-    the earlier Catalyst transform/array_distinct/array_sort pipeline
-    allocated one JVM substring per gram position (2000 objects per 2KB
-    doc) and shipped the gram arrays through Arrow; shipping the text and
-    windowing in numpy halved the stage wall. Rows that are pure ASCII
+    Grams come straight from the raw text bytes. Rows that are pure ASCII
     (the overwhelming case) take the vectorized byte-window path (char
-    grams == byte grams); rows with multi-byte characters fall back to a
-    per-row python set over decoded characters — identical char-gram
-    semantics to substring(text, i, k), so the SQL oracle is unchanged.
+    grams == byte grams) and come out first; rows with multi-byte
+    characters follow from a per-row python set over decoded characters
+    — identical char-gram semantics to substring(text, i, k), so the SQL
+    oracle is unchanged.
     """
-    from pyspark.sql.pandas.types import from_arrow_schema
+    from ..codecs.gather import multi_range
 
-    width = 4 * k  # utf-8 worst case: 4 bytes per char
-    rw = width + 1
-    src = _gram_source(df, text_col, id_col, k)
-    out_schema = pa.schema([pa.field("id", pa.int64()),
-                            pa.field("cnt", pa.int64()),
-                            pa.field("rec", pa.binary())])
-
-    def fn(batches):
-        from ..codecs.gather import multi_range
-
-        for ids, lens, data in text_batches(batches):
-            n = len(ids)
-            ofs = np.concatenate(([0], np.cumsum(lens)))
-            # per-row ascii flag: any byte >= 0x80 forces the char fallback
-            hi = (data >= 0x80)
-            non_ascii = np.add.reduceat(hi, ofs[:-1]) > 0 if len(data) else \
-                np.zeros(n, dtype=bool)
-            non_ascii &= lens > 0
-            out_ids, out_cnts, blobs = [], [], []
-            # vectorized path: k-byte windows over the flat buffer, one
-            # record matrix build, per-row unique (sorts + dedups)
-            asc = np.flatnonzero(~non_ascii & (lens >= k))
-            if len(asc):
-                n_gr = lens[asc] - (k - 1)
-                win_idx = multi_range(ofs[:-1][asc], n_gr)
-                total = len(win_idx)
-                rec = np.zeros((total, rw), dtype=np.uint8)
-                rec[:, 0] = k
-                for j in range(k):
-                    rec[:, 1 + j] = data[win_idx + j]
-                rv = rec.view(f"S{rw}").ravel()
-                starts = np.concatenate(([0], np.cumsum(n_gr)))
-                for p, i in enumerate(asc):
-                    u = np.unique(rv[starts[p] : starts[p + 1]])
-                    out_ids.append(int(ids[i]))
-                    out_cnts.append(len(u))
-                    blobs.append(u.tobytes())
-            for i in np.flatnonzero(non_ascii):
-                s = bytes(data[ofs[i] : ofs[i + 1]]).decode("utf-8")
-                if len(s) < k:
-                    continue
-                gset = {s[p : p + k].encode() for p in range(len(s) - k + 1)}
-                recs = np.zeros((len(gset), rw), dtype=np.uint8)
-                for row, gb in enumerate(gset):
-                    recs[row, 0] = len(gb)
-                    recs[row, 1 : 1 + len(gb)] = np.frombuffer(gb, np.uint8)
-                u = np.unique(recs.view(f"S{rw}").ravel())
-                out_ids.append(int(ids[i]))
-                out_cnts.append(len(u))
-                blobs.append(u.tobytes())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.int64()),
-                 pa.array(out_cnts, type=pa.int64()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=out_schema)
-
-    return src.mapInArrow(fn, from_arrow_schema(out_schema))
+    rw = 4 * k + 1  # utf-8 worst case: 4 bytes per char, plus the length
+    ofs = np.concatenate(([0], np.cumsum(lens)))
+    # per-row ascii flag: any byte >= 0x80 forces the char fallback
+    non_ascii = (np.add.reduceat(data >= 0x80, ofs[:-1]) > 0 if len(data)
+                 else np.zeros(len(ids), dtype=bool))
+    non_ascii &= lens > 0
+    out_ids, runs = [], []
+    # vectorized path: k-byte windows over the flat buffer, one record
+    # matrix build, per-row unique (sorts + dedups)
+    asc = np.flatnonzero(~non_ascii & (lens >= k))
+    if len(asc):
+        n_gr = lens[asc] - (k - 1)
+        win_idx = multi_range(ofs[:-1][asc], n_gr)
+        rec = np.zeros((len(win_idx), rw), dtype=np.uint8)
+        rec[:, 0] = k
+        for j in range(k):
+            rec[:, 1 + j] = data[win_idx + j]
+        rv = rec.view(f"S{rw}").ravel()
+        starts = np.concatenate(([0], np.cumsum(n_gr)))
+        out_ids.append(ids[asc])
+        runs += [np.unique(rv[starts[p] : starts[p + 1]])
+                 for p in range(len(asc))]
+    for i in np.flatnonzero(non_ascii):
+        s = bytes(data[ofs[i] : ofs[i + 1]]).decode("utf-8")
+        if len(s) < k:
+            continue
+        gset = {s[p : p + k].encode() for p in range(len(s) - k + 1)}
+        recs = np.zeros((len(gset), rw), dtype=np.uint8)
+        for row, gb in enumerate(gset):
+            recs[row, 0] = len(gb)
+            recs[row, 1 : 1 + len(gb)] = np.frombuffer(gb, np.uint8)
+        out_ids.append(ids[i : i + 1])
+        runs.append(np.unique(recs.view(f"S{rw}").ravel()))
+    return (np.concatenate(out_ids or [ids[:0]]),
+            np.array([len(r) for r in runs], dtype=np.int64),
+            np.concatenate(runs or [np.empty(0, f"S{rw}")]))
 
 
 def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
@@ -567,37 +549,64 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
 _GRAMS_MARKER = "_GRAMS_OK"
 
 
+def _block_schema(*cells: str):
+    """One row per hash block ``b``: the block's packed cells, each as raw
+    bytes — the row shape of both block-pair kernels' packs."""
+    from pyspark.sql.types import (BinaryType, IntegerType, StructField,
+                                   StructType)
+
+    return StructType([StructField("b", IntegerType(), False),
+                       *[StructField(c, BinaryType(), False) for c in cells]])
+
+
 def _gram_blocks_schema():
     """The persisted gram artifact: one row per hash block ``b``, holding
     its docs' ids (sorted int64) and per-doc record counts (int64), the
     block's sorted distinct records (``vocab``, ``S{4k+1}``) and one int32
     rank in ``vocab`` per record (``codes``), all as raw bytes."""
-    from pyspark.sql.types import (BinaryType, IntegerType, StructField,
-                                   StructType)
-
-    return StructType([
-        StructField("b", IntegerType(), False),
-        *[StructField(c, BinaryType(), False)
-          for c in ("ids", "cnts", "vocab", "codes")]])
+    return _block_schema("ids", "cnts", "vocab", "codes")
 
 
-def _gram_block(c: str, n_blocks: int):
-    """The hash block of an id column: the one block function of
-    ``build_gram_records``' pack and of the verify's candidate grouping."""
+def _hash_block(c: str, n_blocks: int):
+    """The hash block of an id column: the one block function of both
+    block-pair kernels' packs and of the verify's candidate grouping."""
     return F.pmod(F.xxhash64(c), F.lit(n_blocks)).cast("int")
+
+
+def _pack_blocks(src: DataFrame, block_rows: int, pack,
+                 schema) -> tuple[DataFrame, int, int]:
+    """The one hash-block pack of both block-pair kernels: count ``src``'s
+    (id, ...) rows, hash them into ``n_blocks = ceil(n / block_rows)``
+    blocks (``_hash_block``), and turn each block's rows into ONE row of
+    ``schema`` in a single grouped Arrow pass; ``pack(table)`` returns the
+    block's cells as numpy arrays, in ``schema`` order after ``b``.
+    Returns (packed, n, n_blocks)."""
+    n = src.count()
+    n_blocks = max(1, -(-n // block_rows))
+
+    def one_row(key, table):
+        return pa.table([pa.array([key[0].as_py()], pa.int32()),
+                         *[pa.array([c.tobytes()], pa.binary())
+                           for c in pack(table)]], names=schema.names)
+
+    packed = (src.groupBy(_hash_block("id", n_blocks))
+                 .applyInArrow(one_row, schema))
+    return packed, n, n_blocks
 
 
 def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
                        gram_dir: str, block_rows: int = 512) -> DataFrame:
     """Materialize (or reuse) the packed gram blocks at ``gram_dir``.
 
-    Each doc's distinct char-k-grams become sorted fixed-width records
-    (``_gram_record_df``); docs are hashed into ``n_blocks = ceil(n_rows /
-    block_rows)`` blocks, and each block is packed and ranked ONCE, here:
-    (b, ids, cnts, vocab, codes), see ``_gram_blocks_schema`` and
-    ``rank_gram_block``. Those packed blocks are the artifact, so verify
-    reads them as they lie: no per-op shuffle and no re-rank of the
-    corpus.
+    Docs with at least one char-k-gram (``_gram_source``) are hashed into
+    ``n_blocks = ceil(n_rows / block_rows)`` blocks, and each block is
+    packed and ranked ONCE, here, in one grouped Arrow pass
+    (``_pack_blocks``) straight from its (id, text) rows: ``gram_records``
+    turns the text into each doc's sorted distinct records, the docs are
+    re-sorted by id, and ``rank_gram_block`` ranks the block's records:
+    (b, ids, cnts, vocab, codes), see ``_gram_blocks_schema``. Those
+    packed blocks are the artifact, so verify reads them as they lie: no
+    per-op shuffle and no re-rank of the corpus.
 
     The blocks are a deterministic function of (corpus, text_col, k,
     block_rows), and every verified dedup route reads the SAME blocks
@@ -622,26 +631,22 @@ def build_gram_records(df: DataFrame, text_col: str, id_col: str, k: int,
     counts = [got.pop(c, None) for c in ("n_rows", "n_blocks")]
     if None not in counts and got == want:
         return spark.read.schema(schema).parquet(gram_dir)
-    n = _gram_source(df, text_col, id_col, k).count()
-    n_blocks = max(1, -(-n // block_rows))
-    rw = 4 * k + 1
 
-    def pack(pdf):
-        import pandas as pd
+    def pack(table):
+        from ..codecs.gather import multi_range
 
-        pdf = pdf.sort_values("id")
-        vocab, codes = rank_gram_block(
-            np.frombuffer(b"".join(pdf["rec"]), dtype=f"S{rw}"))
-        return pd.DataFrame({
-            "b": [int(pdf["b"].iloc[0])],
-            "ids": [pdf["id"].to_numpy(dtype=np.int64).tobytes()],
-            "cnts": [pdf["cnt"].to_numpy(dtype=np.int64).tobytes()],
-            "vocab": [vocab.tobytes()], "codes": [codes.tobytes()]})
+        ids, cnts, recs = (np.concatenate(c) for c in zip(*(
+            gram_records(*item, k) for item in text_batches(
+                table.to_batches()))))
+        # ASCII and non-ASCII docs come out of separate passes: re-sort
+        # the block's docs (and their record runs) by id
+        o = np.argsort(ids, kind="stable")
+        recs = recs[multi_range((np.cumsum(cnts) - cnts)[o], cnts[o])]
+        return ids[o], cnts[o], *rank_gram_block(recs)
 
-    (_gram_record_df(df, text_col, id_col, k)
-     .withColumn("b", _gram_block("id", n_blocks))
-     .groupBy("b").applyInPandas(pack, schema)
-     .write.mode("overwrite").parquet(gram_dir))
+    packed, n, n_blocks = _pack_blocks(
+        _gram_source(df, text_col, id_col, k), block_rows, pack, schema)
+    packed.write.mode("overwrite").parquet(gram_dir)
     write_marker(marker, {**want, "n_rows": n, "n_blocks": n_blocks})
     return spark.read.schema(schema).parquet(gram_dir)
 
@@ -734,7 +739,7 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     Exactness: vocabularies carry full gram bytes (length-prefixed, no
     hashing), and double division + half-away rounding match the ANSI
     oracle bit-for-bit. Verify itself runs no count job, no shuffle of the
-    blocks and no pandas pack.
+    blocks and no grouped pack.
     """
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -745,8 +750,8 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     n_blocks = read_marker(os.path.join(gram_dir, _GRAMS_MARKER))["n_blocks"]
 
     grouped = (cands
-               .groupBy(_gram_block("id_a", n_blocks).alias("ba"),
-                        _gram_block("id_b", n_blocks).alias("bb"))
+               .groupBy(_hash_block("id_a", n_blocks).alias("ba"),
+                        _hash_block("id_b", n_blocks).alias("bb"))
                .agg(F.collect_list(F.struct("id_a", "id_b")).alias("prs")))
     x, y = packed.alias("x"), packed.alias("y")
     sides = ("ids", "cnts", "vocab", "codes")
@@ -1132,14 +1137,7 @@ def srp_fingerprints(df: DataFrame, vec_col: str, id_col: str,
             if b.num_rows == 0:
                 continue
             ids = b.column(0).to_numpy(zero_copy_only=False)
-            vv = b.column(1)
-            dims = np.unique(vv.value_lengths().to_numpy(zero_copy_only=False))
-            if len(dims) > 1:
-                raise ValueError(
-                    f"ragged embedding dimensions in batch: {dims.tolist()}")
-            V = np.asarray(vv.flatten().to_numpy(zero_copy_only=False),
-                           dtype=np.float64).reshape(len(ids), -1)
-            fps = srp_kernel(V, seed=seed)
+            fps = srp_kernel(_vector_matrix(b.column(1)), seed=seed)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids, type=pa.int64()),
                  pa.array(fps.view(np.int64), type=pa.int64())],
@@ -1196,8 +1194,9 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str, id_col: str,
     """Exact cosine pairs >= threshold — fully distributed block-matrix plan.
 
     Physical plan: vectors are grouped into B = ceil(n/block_rows) blocks by
-    id hash; each block is packed into ONE row holding (ids, row-major f64
-    matrix bytes). The B(B+1)/2 unordered block pairs are enumerated by a
+    id hash (``_pack_blocks``, the same grouped Arrow pack as the gram
+    artifact's); each block is packed into ONE row holding (ids, row-major
+    f64 matrix bytes). The B(B+1)/2 unordered block pairs are enumerated by a
     self-join on block id, and an Arrow kernel computes each pair's dense
     cosine sub-matrix. Nothing is ever collected to the driver, and peak
     task memory is two blocks plus a sub-chunked score matrix. Exact
@@ -1212,35 +1211,16 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str, id_col: str,
     predicate is NULL-false there); ragged dimensions raise.
     """
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import (BinaryType, IntegerType, StructField,
-                                   StructType)
 
     d = (df.where(F.col(vec_col).isNotNull())
            .select(F.col(id_col).cast("long").alias("id"),
                    F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")))
-    n = d.count()
-    n_blocks = max(1, -(-n // block_rows))
 
-    pack_schema = StructType([
-        StructField("b", IntegerType(), False),
-        StructField("ids", BinaryType(), False),
-        StructField("mat", BinaryType(), False),
-    ])
+    def pack(table):
+        return (table.column("id").to_numpy(),
+                _vector_matrix(table.column("v").combine_chunks()))
 
-    def pack(pdf):
-        import pandas as pd
-
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        rows = [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-        dims = {len(r) for r in rows}
-        if len(dims) > 1:
-            raise ValueError(f"ragged embedding dimensions in block: {sorted(dims)}")
-        M = np.stack(rows) if rows else np.empty((0, 0))
-        return pd.DataFrame({"b": [int(pdf["b"].iloc[0])],
-                             "ids": [ids.tobytes()], "mat": [M.tobytes()]})
-
-    blocks = (d.withColumn("b", F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int"))
-                .groupBy("b").applyInPandas(pack, pack_schema))
+    blocks = _pack_blocks(d, block_rows, pack, _block_schema("ids", "mat"))[0]
 
     x, y = blocks.alias("x"), blocks.alias("y")
     joined = x.join(y, F.col("x.b") <= F.col("y.b")).select(
@@ -1256,13 +1236,13 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str, id_col: str,
     def pairs(batches):
         for b in batches:
             for i in range(b.num_rows):
-                ids_x = np.frombuffer(b.column("ids_x")[i].as_py(), dtype=np.int64)
-                ids_y = np.frombuffer(b.column("ids_y")[i].as_py(), dtype=np.int64)
+                ids_x = np.frombuffer(b.column("ids_x")[i].as_buffer(), dtype=np.int64)
+                ids_y = np.frombuffer(b.column("ids_y")[i].as_buffer(), dtype=np.int64)
                 if not (len(ids_x) and len(ids_y)):
                     continue
-                Mx = np.frombuffer(b.column("mat_x")[i].as_py(),
+                Mx = np.frombuffer(b.column("mat_x")[i].as_buffer(),
                                    dtype=np.float64).reshape(len(ids_x), -1)
-                My = np.frombuffer(b.column("mat_y")[i].as_py(),
+                My = np.frombuffer(b.column("mat_y")[i].as_buffer(),
                                    dtype=np.float64).reshape(len(ids_y), -1)
                 nx, ny = _norms_seq(Mx), _norms_seq(My)
                 kx, ky = nx > 0, ny > 0
@@ -1273,10 +1253,8 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str, id_col: str,
                 step = max(1, (1 << 21) // max(len(ids_y2), 1))
                 for s in range(0, len(ids_x2), step):
                     ci, cm, cn = (ids_x2[s:s+step], Mx2[s:s+step], nx2[s:s+step])
-                    dots = np.zeros((len(ci), len(ids_y2)))
-                    for kdim in range(cm.shape[1]):
-                        dots += cm[:, kdim : kdim + 1] * My2[:, kdim][None, :]
-                    cos = round_half_away(dots / (cn[:, None] * ny2[None, :]), 6)
+                    cos = round_half_away(
+                        seq_dots(cm, My2) / (cn[:, None] * ny2[None, :]), 6)
                     hit = cos >= threshold
                     if diag:
                         hit &= ci[:, None] < ids_y2[None, :]

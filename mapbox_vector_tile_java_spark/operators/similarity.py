@@ -79,6 +79,18 @@ def _norms_seq(M: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+def _vector_matrix(vecs) -> np.ndarray:
+    """(n, dim) float64 matrix of an Arrow list column of n vectors: the
+    one flatten -> reshape of every vector kernel. Ragged dimensions raise
+    ``ValueError`` — a bare reshape of the flattened values would silently
+    re-cut them into other vectors."""
+    dims = np.unique(vecs.value_lengths().to_numpy(zero_copy_only=False))
+    if len(dims) > 1:
+        raise ValueError(f"ragged embedding dimensions: {dims.tolist()}")
+    return np.asarray(vecs.flatten().to_numpy(zero_copy_only=False),
+                      dtype=np.float64).reshape(len(vecs), -1)
+
+
 def seq_dots(M: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, c) dot products accumulated dimension-sequentially — the SQL
     left-to-right fold, so scores match list_sum/F.aggregate bit-for-bit."""
@@ -182,13 +194,10 @@ def build_ivf_index(df: DataFrame, vec_col: str, id_col: str, index_dir: str,
         for b in batches:
             if b.num_rows == 0:
                 continue
-            ids = b.column("nid").to_numpy(zero_copy_only=False)
-            vv = b.column("v")
-            V = np.asarray(vv.flatten().to_numpy(zero_copy_only=False),
-                           dtype=np.float64).reshape(len(ids), -1)
+            V = _vector_matrix(b.column("v"))
             # dimension-sequential norms == the SQL fold used at query time
             yield pa.RecordBatch.from_arrays(
-                [b.column("nid"), vv,
+                [b.column("nid"), b.column("v"),
                  pa.array(_norms_seq(V), type=pa.float64()),
                  pa.array(assign_buckets(V, C), type=pa.int32())],
                 schema=out_schema)
@@ -223,6 +232,8 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_ids: list[int],
     If ``index_dir`` has no index yet, one is built (once); repeated calls
     reuse it and scan only the probed buckets. Scan fraction ~= the probed
     buckets' share of rows (~n_probe/n_centroids on balanced buckets).
+    With no ``index_dir`` the index goes to a fresh dedup ``temp_dir``,
+    which ``cleanup_temp_dirs`` removes.
 
     Measured on the unclustered synthetic embeddings via ivf_recall
     (sf0.1, 2000 vecs, 20 queries, all at 25% scan fraction): 64/16 ->
@@ -232,11 +243,11 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_ids: list[int],
     embeddings recall higher still. The driver-contract queries use
     256/64.
     """
-    import tempfile
+    from .dedup import temp_dir
 
     spark = df.sparkSession
     if index_dir is None:
-        index_dir = tempfile.mkdtemp(prefix="mvt_ivf_")
+        index_dir = temp_dir("mvt_ivf_")
     meta = read_marker(os.path.join(index_dir, "ivf_meta.json"))
     if meta is None:
         meta = build_ivf_index(df, vec_col, id_col, index_dir,

@@ -42,7 +42,7 @@ AUDITS = [
      "block_b) key; the gram blocks were packed and ranked once into a "
      "sorted vocabulary plus int32 codes (vocab/codes) by "
      "build_gram_records, and verify joins them straight from their "
-     "parquet scan (mvt_gramshare: no pandas pack, no exchange between the "
+     "parquet scan (mvt_gramshare: no grouped pack, no exchange between the "
      "scan and its join); one MapInArrow kernel per block pair remaps one "
      "vocabulary into the other's code space and intersects codes — gram "
      "bytes never shuffle per candidate pair",
@@ -69,7 +69,7 @@ AUDITS = [
      "keys are never shuffled and no old×old pair is formed; the only "
      "exchange before verify aggregates the candidate pairs. Verify reads "
      "the persisted packed gram blocks (mvt_gramshare) as a parquet scan: "
-     "no pandas pack and no shuffle of the corpus grams per op",
+     "no grouped pack and no shuffle of the corpus grams per op",
      ["BroadcastHashJoin [band", "HashedRelationBroadcastMode(List(input[1",
       ",sig#", "Exchange hashpartitioning(id_a", "FileScan parquet [b#"]),
 ]

@@ -52,8 +52,8 @@ def test_tracer_installs_and_uninstalls(spark, tmp_path):
 
 def test_task_kind_classifies_stage_functions(spark, monkeypatch):
     """The tracer sorts traced tasks by the ``__qualname__`` of the function
-    handed to ``mapInArrow``: the signature and gram-record stages must
-    keep their functions inside the routes the tracer names."""
+    handed to ``mapInArrow``: the signature stage must keep its function
+    inside the route the tracer names."""
     from mapbox_vector_tile_java_spark.operators import dedup as DD
 
     task_kind = _load_tracing().task_kind
@@ -69,5 +69,4 @@ def test_task_kind_classifies_stage_functions(spark, monkeypatch):
     docs = spark.createDataFrame([(1, "some document text")],
                                  "doc_id long, text string")
     DD.minhash_signatures(docs, "text", "doc_id")
-    DD._gram_record_df(docs, "text", "doc_id", 3)
-    assert [task_kind(f) for f in seen] == ["signature", "grams"]
+    assert [task_kind(f) for f in seen] == ["signature"]

@@ -261,6 +261,42 @@ def test_ivf_deterministic_across_partitionings(spark, vectors, tmp_path):
     assert ra == rb
 
 
+def test_ivf_index_ragged_vectors_raise(spark, tmp_path):
+    """A ragged vector in the assignment pass raises instead of being
+    re-cut from its neighbours' values. Ids 5 (dim 2) and 6 (dim 4) are
+    not sampled at stride 4, so only the assign kernel sees them; before,
+    the index stored nrm sqrt(6) for id 5 and sqrt(29) for id 6."""
+    dims = {5: 2, 6: 4}
+    df = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(dims.get(i, 3))])
+         for i in range(12)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ragged embedding dimensions"):
+        S.build_ivf_index(df, "embedding", "vec_id", str(tmp_path / "ivf"),
+                          n_centroids=2, sample_rows=3)
+
+
+def test_ivf_topk_temp_index_reclaimed(spark, vectors):
+    """ivf_topk without an index_dir builds its index in a dedup
+    temp_dir, so cleanup_temp_dirs removes it; the driver contract's
+    cached IVF dir is one too."""
+    import glob
+    import os
+    import tempfile
+
+    import __spark_entry__ as E
+
+    pattern = os.path.join(tempfile.gettempdir(), "mvt_ivf_*")
+    before = set(glob.glob(pattern))
+    assert S.ivf_topk(vectors, "embedding", "vec_id", [0], k=3,
+                      n_centroids=4, n_probe=2).collect()
+    built = set(glob.glob(pattern)) - before
+    assert len(built) == 1
+    assert E._ivf_dir("ivf_topk_temp_index_reclaimed") in D._FP_TMP_DIRS
+    D.cleanup_temp_dirs()
+    assert not [d for d in built if os.path.exists(d)]
+
+
 def test_media_meta_plumbing(spark):
     df = synth_media_df(spark, 500, seed=1, partitions=2)
     meta = decode_media_meta(df)
@@ -725,9 +761,9 @@ def _plan_parents(plan: str) -> dict[int, int]:
 def test_verify_reads_packed_blocks_without_shuffle_or_pack(spark,
                                                             tmp_path):
     """Verify over a reused gram_dir joins the packed blocks straight from
-    their parquet scan: the executed plan runs no pandas pack
-    (FlatMapGroupsInPandas) and no shuffle between the block scan and its
-    join, and the part files are not rewritten."""
+    their parquet scan: the executed plan runs no grouped pack
+    (FlatMapGroupsInPandas or FlatMapGroupsInArrow) and no shuffle between
+    the block scan and its join, and the part files are not rewritten."""
     import glob
     import os
 
@@ -746,7 +782,7 @@ def test_verify_reads_packed_blocks_without_shuffle_or_pack(spark,
     # AQE's final plan and the initial one: the final plan may reuse one
     # side's broadcast for the other, so it holds one block scan or two
     plan = v._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsIn" not in plan
     lines = plan.split("\n")
     parents = _plan_parents(plan)
     scans = [i for i, l in enumerate(lines)
@@ -785,8 +821,23 @@ def test_gram_blocks_rebuilt_on_block_rows_or_old_marker(spark, tmp_path):
     assert {r["b"] for r in blocks} <= set(range(5))
     assert sum(len(r["ids"]) for r in blocks) == 9 * 8
 
-    D._gram_record_df(df, "text", "doc_id", 3).write.mode(
-        "overwrite").parquet(g)
+    # the older artifact: one (id, cnt, rec) row per doc, rec the doc's
+    # sorted distinct records as one blob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = [r["text"] for r in df.orderBy("doc_id").collect()]
+    ids, cnts, recs = D.gram_records(*next(D.text_batches([pa.record_batch(
+        [pa.array(range(9), pa.int64()), pa.array(texts)],
+        names=["id", "text"])])), 3)
+    ends = np.cumsum(cnts)
+    shutil.rmtree(g)
+    os.makedirs(g)
+    pq.write_table(pa.table({"id": ids, "cnt": cnts, "rec": [
+        recs[e - c : e].tobytes() for c, e in zip(cnts, ends)]}),
+        os.path.join(g, "part-00000.parquet"))
     write_marker(marker, {"k": 3, "text_col": "text", "id_col": "doc_id",
                           "n_rows": 9})
     blocks = D.build_gram_records(df, "text", "doc_id", 3, g).collect()
@@ -794,6 +845,47 @@ def test_gram_blocks_rebuilt_on_block_rows_or_old_marker(spark, tmp_path):
     assert [r["b"] for r in blocks] == [0]
     assert (sorted(np.frombuffer(blocks[0]["ids"], dtype=np.int64))
             == list(range(9)))
+
+
+def _blocks_sha(rows) -> str:
+    """sha256 of packed gram blocks, rows sorted by ``b``: each block's id,
+    then each cell's length and bytes."""
+    import hashlib
+    import struct
+
+    h = hashlib.sha256()
+    for r in sorted(rows, key=lambda r: r["b"]):
+        h.update(struct.pack("<i", r["b"]))
+        for c in ("ids", "cnts", "vocab", "codes"):
+            v = bytes(r[c])
+            h.update(struct.pack("<q", len(v)))
+            h.update(v)
+    return h.hexdigest()
+
+
+def test_gram_blocks_pinned_bytes(spark, tmp_path):
+    """The packed gram artifact of 300 benchmark docs plus non-ASCII,
+    shorter-than-k, empty and NULL rows (block_rows=64) is pinned byte for
+    byte. The non-ASCII docs come out of the record kernel after the ASCII
+    ones, and their ids (negative, and 150) interleave with the ASCII ids,
+    so a block whose docs are not re-sorted by id changes the digest."""
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench",
+                        "data", "documents.parquet")
+    extra = [(-1, "café crème brûlée à la carte"),
+             (-2, "日本語のテキストです"), (-3, "日本"), (-4, "日本語"),
+             (-5, "ab"), (-6, ""), (-7, None), (150, "naïve naïve naïve"),
+             (10009, "abc"), (-8, "naïve naïve naïve")]
+    docs = (spark.read.parquet(path)
+            .where((F.col("doc_id") < 300) & (F.col("doc_id") != 150))
+            .unionByName(spark.createDataFrame(
+                extra, "doc_id long, text string")))
+    rows = D.build_gram_records(docs, "text", "doc_id", 3,
+                                str(tmp_path / "grams"), 64).collect()
+    assert len(rows) == 5
+    assert _blocks_sha(rows) == (
+        "381b1c3e0a91511cb903fcd40487c51902b84e9e730fdcb2476a768f13249e7c")
 
 
 def test_exact_verify_multi_block_matches_catalyst_on_documents(spark,
